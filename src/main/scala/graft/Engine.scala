@@ -48,23 +48,11 @@ object Engine {
     df.repartition(df.sparkSession.sparkContext.defaultParallelism,
       org.apache.spark.sql.functions.col(key))
 
-  /** Unpersist and drop every module's memoized per-corpus artifacts
-    * for `s` (round 15). The memos model write-once pipeline indexes —
-    * correct for each family in isolation — but a process that runs
-    * EVERY family back-to-back (Bench, a long-lived session) would
-    * otherwise hold ~20 families' blocks simultaneously; at 100 TB,
-    * steady-state cost can never assume whole-corpus block residency.
-    * Callers release at family boundaries; the next consumer rebuilds
-    * its family's memo on first use.
+  /** Unpersist and drop the memoized per-corpus artifacts `s` owns
+    * that hold executor blocks — [[Memo.release]], which documents the
+    * rule and why `Bench` releases at family boundaries.
     */
-  def releaseAllMemos(s: org.apache.spark.sql.SparkSession): Unit = {
-    llm.NearDedup.releaseMemos(s)
-    llm.Curation.releaseMemos(s)
-    llm.Multimodal.releaseMemos(s)
-    llm.TextOps.releaseMemos(s)
-    llm.VectorOps.releaseMemos(s)
-    llm.Bpe.releaseMemos(s)
-  }
+  def releaseAllMemos(s: SparkSession): Unit = Memo.release(s)
 
   /** A temp work directory that is recursively deleted at JVM exit —
     * for query ids that materialize spool/state copies per invocation

@@ -200,6 +200,10 @@ object Stream {
     val delta =
       if (multiScan) batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else batch
+    // the probe and rewrite jobs carry this batch's job descriptions
+    // (per-layer attribution reads them); the caller's own description
+    // is restored on every path, exceptions included
+    val callerDesc = spark.sparkContext.getLocalProperty("spark.job.description")
     try {
       // flat legacy/bootstrap layout (top-level parquet files) → fold the
       // whole state once and emerge bucketed; steady state touches only
@@ -271,7 +275,6 @@ object Stream {
       val tmpRoot = new org.apache.hadoop.fs.Path(root, ".delta_tmp")
       spark.sparkContext.setJobDescription("foldBatch: rewrite buckets")
       next.write.mode("overwrite").partitionBy(BucketCol).parquet(tmpRoot.toString)
-      spark.sparkContext.setJobDescription(null)
       // every rename result is CHECKED: Hadoop FileSystem reports most
       // failures by returning false, not throwing — an unchecked false
       // here would commit the checkpoint with a stale bucket and lose
@@ -308,7 +311,11 @@ object Stream {
       // restart with a different stateBuckets must fail loudly, not
       // re-record)
       checkOrRecordBuckets(fs, root, stateBuckets)
-    } finally { if (multiScan) delta.unpersist(); () }
+    } finally {
+      spark.sparkContext.setJobDescription(callerDesc)
+      if (multiScan) delta.unpersist()
+      ()
+    }
   }
 
   /** Continuously materialize a change-event stream into a current-state

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Distributed BPE tokenizer training (SURVEY.md §2.12 capstone) — the
   * classic merge loop of Sennrich et al. (2016): count adjacent symbol
@@ -313,15 +313,13 @@ object Bpe {
     * centroids; `bpe_merges` itself stays unmemoized because that id
     * measures training. Stopped-session eviction as elsewhere.
     */
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), Seq[Merge]]()
+  private val mergeCache = Memo.slot[(String, Int), Seq[Merge]]("Bpe.mergeCache")
 
   def trainedMerges(s: SparkSession, dir: String, k: Int = 16): Seq[Merge] = {
-    mergeCache.keySet.removeIf(k0 => k0._1.sparkContext.isStopped)
     // k is part of the key: a 16-merge and a 32-merge tokenizer are
     // different MODELS (the kmeansModel rationale) — sharing one entry
     // would silently hand a caller the other's merge sequence
-    mergeCache.computeIfAbsent((s, dir, k), _ => train(Tables(s, dir).documents, k))
+    mergeCache(s, (dir, k))(train(Tables(s, dir).documents, k))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -684,8 +682,7 @@ object Bpe {
     * histogram levels (≤10⁶+1 by construction) and the rule are exact
     * integers, so the oracle re-derives it from scratch in SQL.
     */
-  private val releaseThCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), java.lang.Long]()
+  private val releaseThCache = Memo.slot[(String, String), Long]("Bpe.releaseThCache")
 
   /** `pred`/`tag` (round 18): the release chain parameterized by a
     * corpus predicate so `corpus_release_delta` can build release N
@@ -709,8 +706,7 @@ object Bpe {
       .select(col("doc_id"), col("source"), col("text"),
         nW.cast("long").as("n_w"), num.as("qnum"), den.as("qden"))
       .withColumn("quality_e6", expr("(qnum * 2 + qden) DIV (qden * 2)"))
-    releaseThCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val qStar: Long = releaseThCache.computeIfAbsent((s, dir, tag), _ => {
+    val qStar: Long = releaseThCache(s, (dir, tag)) {
       // Bounded collect: quality_e6 ∈ [0, 10⁶] → ≤10⁶+1 distinct levels
       // → ≤~16 MB of (long, long) rows on the driver, independent of
       // corpus size (same bound as TextOps.selectBudgetApprox). The
@@ -726,7 +722,7 @@ object Bpe {
       var q = Long.MaxValue // empty release if not even the top level fits
       for ((lvl, t) <- hist) { cum += t; if (cum <= budget) q = lvl }
       q
-    })
+    }
     scored.filter(col("quality_e6") >= lit(qStar))
       .select("doc_id", "source", "text")
   }
@@ -736,8 +732,7 @@ object Bpe {
     * tokenizer ([[trainedMerges]]) → per-doc REAL token count + token-
     * stream md5. Both packing modes consume this one table.
     */
-  private val tokTabCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val tokTabCache = Memo.slot[String, DataFrame]("Bpe.tokTabCache")
 
   private def exportTokenTable(s: SparkSession, dir: String): DataFrame = {
     // Memoized + persisted per (session, dir) since round 17: the
@@ -746,9 +741,8 @@ object Bpe {
     // ids share it — without the memo each id re-ran the full
     // gate→dedup→BPE-encode chain twice (measured ~+1 s/id at sf0.1).
     // Same write-once index cost model as NearDedup.shingled; released
-    // at family boundaries via [[releaseMemos]].
-    tokTabCache.keySet.removeIf(k0 => k0._1.sparkContext.isStopped)
-    tokTabCache.computeIfAbsent((s, dir), _ => {
+    // at family boundaries via [[graft.Memo.release]].
+    tokTabCache(s, dir) {
       val docs = Tables(s, dir).documents
       val gated = docs.filter(TextOps.GopherGate.keep)
       val wDedup = org.apache.spark.sql.expressions.Window.partitionBy(col("text"))
@@ -763,11 +757,10 @@ object Bpe {
         .join(encodeDigests(survivors.select("doc_id", "text"), merges), "doc_id")
         .select(col("source"), col("doc_id"), col("n_tokens"), col("h"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
   }
 
-  private val relTokCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  private val relTokCache = Memo.slot[(String, String), DataFrame]("Bpe.relTokCache")
 
   /** One release's shard manifest (source, shard, n_docs, n_tokens,
     * manifest_sha) over the `pred`-restricted corpus — the
@@ -778,8 +771,7 @@ object Bpe {
     */
   private[llm] def releaseManifest(s: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column = lit(true), tag: String = "all"): DataFrame = {
-    relTokCache.keySet.removeIf(k0 => k0._1.sparkContext.isStopped)
-    val toks = relTokCache.computeIfAbsent((s, dir, tag), _ => {
+    val toks = relTokCache(s, (dir, tag)) {
       val rel = releaseDocs(s, dir, pred, tag)
       val merges = trainedMerges(s, dir)
       // r18-opt: digest view (see [[encodeDigests]])
@@ -787,7 +779,7 @@ object Bpe {
         .join(encodeDigests(rel.select("doc_id", "text"), merges), "doc_id")
         .select(col("source"), col("doc_id"), col("n_tokens"), col("h"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
     withPackCum(toks)
       .withColumn("shard",
         floor((col("__cum") - col("n_tokens")) / ExportCap).cast("long"))
@@ -797,19 +789,6 @@ object Bpe {
         md5(array_join(transform(
           array_sort(collect_list(struct(col("doc_id"), col("h")))),
           x => x.getField("h")), "")).as("manifest_sha"))
-  }
-
-  private[graft] def releaseMemos(s: SparkSession): Unit = {
-    def drop[K](m: java.util.concurrent.ConcurrentHashMap[K, DataFrame],
-        owner: K => SparkSession): Unit = {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (owner(e.getKey) eq s) { e.getValue.unpersist(false); it.remove() }
-      }
-    }
-    drop(tokTabCache, (k: (SparkSession, String)) => k._1)
-    drop(relTokCache, (k: (SparkSession, String, String)) => k._1)
   }
 
   // --- DuckDB oracles for the encode/export family (round 15) ---------
@@ -938,23 +917,18 @@ object Bpe {
     * dir-keyed dynamic-oracle lookup, shared with [[oracleSql]]).
     */
   private[llm] def liveMergesFor(dir: String): Option[Seq[Merge]] = {
-    import scala.jdk.CollectionConverters._
-    mergeCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped && e.getKey._3 == 16 &&
-        e.getKey._2 == dir) match {
-      case e :: Nil => Some(e.getValue)
+    mergeCache.live.filter { case ((d, k), _) => k == 16 && d == dir } match {
+      case (_, merges) :: Nil => Some(merges)
       case _        => None
     }
   }
 
   def oracleSql: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
     // dir-keyed lookup (round-17 ADVICE) — see QualityModel.qmsOracle
-    val live = mergeCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped && e.getKey._3 == 16 &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._2))
+    val live = mergeCache.live.filter { case ((d, k), _) =>
+      k == 16 && graft.Engine.lastFixtureDir.contains(d) }
     val dynamic = live match {
-      case e :: Nil => oraclesFor(e.getValue)
+      case (_, merges) :: Nil => oraclesFor(merges)
       // no trained model for THIS dump's dir this JVM (subset Verify
       // without a bpe id): dump no oracle — the ids degrade to the
       // rows-only check, never to a wrong-model differential

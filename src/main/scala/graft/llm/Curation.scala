@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Corpus-curation operators beyond the dedup/sampling families
   * (SURVEY.md §2.12): eval-set decontamination, stratified per-group
@@ -52,8 +52,7 @@ object Curation {
     * construction (distinct 8-byte hashes of the eval split's shingles);
     * same stopped-session eviction as the other per-corpus caches.
     */
-  private val evalNgCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val evalNgCache = Memo.slot[String, DataFrame]("Curation.evalNgCache")
 
   /** The family's 56-bit content hash (md5 prefix via
     * [[Sampling.hashBucket]] at 14 hex digits) — ONE definition for
@@ -154,12 +153,10 @@ object Curation {
     * hashes) — same pre-existing-artifact cost model as NearDedup's
     * stateCache.
     */
-  private val lineStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val lineStateCache = Memo.slot[String, DataFrame]("Curation.lineStateCache")
 
   private def evalNgHashes(s: SparkSession, dir: String): DataFrame = {
-    evalNgCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    evalNgCache.computeIfAbsent((s, dir), _ =>
+    evalNgCache(s, dir)(
       // ride the SHARED per-corpus shingle memo (NearDedup.shingled)
       // instead of re-shingling the eval split from scratch: the split
       // column is a pure function of doc_id, so it applies to the
@@ -196,12 +193,10 @@ object Curation {
     * bounded by construction (1M slots @ 1% fpp), evicted with its
     * session like every other per-corpus cache here.
     */
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), org.apache.spark.util.sketch.BloomFilter]()
+  private val bloomCache = Memo.slot[String, org.apache.spark.util.sketch.BloomFilter]("Curation.bloomCache")
 
   private def evalBloom(s: SparkSession, dir: String): org.apache.spark.util.sketch.BloomFilter = {
-    bloomCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bloomCache.computeIfAbsent((s, dir), _ =>
+    bloomCache(s, dir)(
       evalNgHashes(s, dir).stat.bloomFilter("h", 1L << 20, 0.01))
   }
 
@@ -516,8 +511,7 @@ object Curation {
     * shape as `decontaminate`.
     */
   private def normalizedNgHashes(s: SparkSession, dir: String): DataFrame = {
-    normNgCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    normNgCache.computeIfAbsent((s, dir), _ => {
+    normNgCache(s, dir) {
       val ws = split(col("ntext"), " ")
       // greatest(..,1): totality insurance against speculative
       // evaluation of the descending-sequence branch (the
@@ -532,11 +526,10 @@ object Curation {
         .select(col("doc_id"), explode(grams).as("ng"))
         .select(col("doc_id"), ngHash(col("ng")).as("h")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
   }
 
-  private val normNgCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val normNgCache = Memo.slot[String, DataFrame]("Curation.normNgCache")
 
   private[llm] def deconNormalized(s: SparkSession, dir: String): DataFrame = {
     val hashed = Sampling.splitAssign(normalizedNgHashes(s, dir), "doc_id")
@@ -836,12 +829,11 @@ object Curation {
     // equality and state-growth semantics pinned in CurationSpec.
     "dedup_lines_incr" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      lineStateCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      val owned = lineStateCache.computeIfAbsent((s, dir), _ => {
+      val owned = lineStateCache(s, dir) {
         val evens = docs.filter(col("doc_id") % 2 === 0)
         val (_, owned0) = admitLines(evens, chunkedLines(evens.limit(0), 3).select("ck"))
         owned0.persist()
-      })
+      }
       val (out, _) = admitLines(docs.filter(col("doc_id") % 2 =!= 0), owned)
       out.select(col("doc_id"), col("n_chunks"), col("n_removed"),
           md5(col("clean_text")).as("h"))
@@ -1597,20 +1589,5 @@ object Curation {
        |SELECT doc_id, ${RepetitionThresholds.map(_._1).mkString(", ")},
        |  ($keep) AS rep_keep
        |FROM sig ORDER BY doc_id""".stripMargin
-  }
-
-  /** Release this session's memoized decontamination artifacts (eval
-    * n-gram hashes, line-dedup bootstrap state, Bloom sketch) — see
-    * [[NearDedup.releaseMemos]] for the footprint rationale.
-    */
-  private[graft] def releaseMemos(s: SparkSession): Unit = {
-    Seq(evalNgCache, lineStateCache, normNgCache).foreach { m =>
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 eq s) { e.getValue.unpersist(false); it.remove() }
-      }
-    }
-    bloomCache.keySet.removeIf(k => k._1 eq s)
   }
 }

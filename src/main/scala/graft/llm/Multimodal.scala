@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Multimodal column plumbing (SURVEY.md §2.12): media travel as opaque
   * `binary` columns + typed metadata structs through every relational
@@ -134,12 +134,10 @@ object Multimodal {
     * already encoded from a media store), so rebuilding the PNGs per
     * query run would bill synthesis to the decode path under test.
     */
-  private val imageCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Dataset[MediaRecord]]()
+  private val imageCache = Memo.slot[String, Dataset[MediaRecord]]("Multimodal.imageCache")
 
   private def encodedCorpus(s: SparkSession, dir: String): Dataset[MediaRecord] = {
-    imageCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    imageCache.computeIfAbsent((s, dir), _ =>
+    imageCache(s, dir)(
       encodeImages(Tables(s, dir).documents)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
@@ -256,12 +254,10 @@ object Multimodal {
     * the multimodal family, same fixture-synthesis rationale as
     * [[encodedCorpus]].
     */
-  private val audioCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Dataset[MediaRecord]]()
+  private val audioCache = Memo.slot[String, Dataset[MediaRecord]]("Multimodal.audioCache")
 
   private def audioCorpus(s: SparkSession, dir: String): Dataset[MediaRecord] = {
-    audioCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    audioCache.computeIfAbsent((s, dir), _ =>
+    audioCache(s, dir)(
       encodeAudio(Tables(s, dir).documents)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
@@ -401,15 +397,13 @@ object Multimodal {
     }
   }
 
-  private val audioHashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val audioHashCache = Memo.slot[String, DataFrame]("Multimodal.audioHashCache")
 
   private def audioHashBlocksFor(s: SparkSession, dir: String): DataFrame = {
-    audioHashCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    audioHashCache.computeIfAbsent((s, dir), _ => {
+    audioHashCache(s, dir) {
       val corpus = audioCorpus(s, dir)
       audioHashBlocks(corpus.union(reencodedAudioCopies(corpus))).persist()
-    })
+    }
   }
 
   case class AudioResample(doc_id: Long, in_rate: Int, out_rate: Int,
@@ -482,12 +476,10 @@ object Multimodal {
     * synthesis, excluded from the measured demux path for the same
     * reason).
     */
-  private val animCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Dataset[MediaRecord]]()
+  private val animCache = Memo.slot[String, Dataset[MediaRecord]]("Multimodal.animCache")
 
   private def animatedCorpus(s: SparkSession, dir: String): Dataset[MediaRecord] = {
-    animCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    animCache.computeIfAbsent((s, dir), _ =>
+    animCache(s, dir)(
       encodeAnimations(Tables(s, dir).documents)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
@@ -751,17 +743,15 @@ object Multimodal {
     * (≤39×39 gray ≈ 1.5 KB ×4 frames/doc) but corpus-scale, so spilling
     * beats recompute-or-OOM.
     */
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), Dataset[DecodedFrames]]()
+  private val frameCache = Memo.slot[(String, Int), Dataset[DecodedFrames]]("Multimodal.frameCache")
 
   private def decodedFrames(s: SparkSession, dir: String, k: Int = 4): Dataset[DecodedFrames] = {
-    frameCache.keySet.removeIf(key => key._1.sparkContext.isStopped)
-    frameCache.computeIfAbsent((s, dir, k), _ => {
+    frameCache(s, (dir, k)) {
       import s.implicits._
       animatedCorpus(s, dir)
         .mapPartitions { it => imageIoMemCache(); it.grouped(64).flatMap(b => decodeBatch(b, k)) }
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
   }
 
   case class MotionSample(doc_id: Long, pair_idx: Int, n_pixels: Long,
@@ -1007,15 +997,13 @@ object Multimodal {
     * per-corpus fingerprint artifact; candidates() references it via
     * multiple exchanges.
     */
-  private val imageHashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val imageHashCache = Memo.slot[String, DataFrame]("Multimodal.imageHashCache")
 
   private def imageHashBlocksFor(s: SparkSession, dir: String): DataFrame = {
-    imageHashCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    imageHashCache.computeIfAbsent((s, dir), _ => {
+    imageHashCache(s, dir) {
       val corpus = encodedCorpus(s, dir)
       imageHashBlocks(corpus.union(reencodedCopies(corpus))).persist()
-    })
+    }
   }
 
   private def gifDelayHundredths(meta: javax.imageio.metadata.IIOMetadata): Int = {
@@ -1473,25 +1461,4 @@ object Multimodal {
         |  CAST(len(list_filter(diffs, v -> v > 0)) AS DOUBLE) / (w * h) AS changed_frac
         |FROM d ORDER BY doc_id, pair_idx""".stripMargin
   )
-
-  /** Release this session's memoized synthetic-media corpora (image/
-    * audio/animation records, decoded frames, image-hash blocks) — see
-    * [[NearDedup.releaseMemos]] for the footprint rationale.
-    */
-  private[graft] def releaseMemos(s: SparkSession): Unit = {
-    def drop[K, V <: org.apache.spark.sql.Dataset[_]](
-        m: java.util.concurrent.ConcurrentHashMap[K, V], owner: K => SparkSession): Unit = {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (owner(e.getKey) eq s) { e.getValue.unpersist(false); it.remove() }
-      }
-    }
-    drop(imageCache, (k: (SparkSession, String)) => k._1)
-    drop(audioCache, (k: (SparkSession, String)) => k._1)
-    drop(animCache, (k: (SparkSession, String)) => k._1)
-    drop(frameCache, (k: (SparkSession, String, Int)) => k._1)
-    drop(imageHashCache, (k: (SparkSession, String)) => k._1)
-    drop(audioHashCache, (k: (SparkSession, String)) => k._1)
-  }
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Near-duplicate detection (SURVEY.md §2.12): MinHash + LSH banding,
   * shingle-set Jaccard verification, n-gram Jaccard, and SimHash — all as
@@ -185,19 +185,21 @@ object NearDedup {
     * the distributed min-label loop below runs instead — that loop is
     * the 100 TB path, the driver path is the low-latency path every
     * real near-dup batch (a few thousand verified pairs at most) takes.
+    *
+    * `callerPersisted`: the caller has persisted `pairs` and owns that
+    * cache entry. The rename-only projection below then sameResult-maps
+    * to it, so it is neither persisted again (which double-registered
+    * the plan, the CacheManager warning VERDICT r18 #6 flagged) nor
+    * unpersisted on exit (which evicted the caller's entry out from
+    * under it). Otherwise the projection is persisted here and released
+    * here. The caller says so explicitly: inferring it from the
+    * projection's `storageLevel` depends on how the Spark version
+    * resolves a cached plan under a projection.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50,
-      driverEdgeLimit: Int = 100000): DataFrame = {
-    // A rename-only projection of an ALREADY-cached pair list (admitBatch
-    // persists its verified dupEdges before calling here) sameResult-maps
-    // to the caller's cache entry: re-persisting it double-registered the
-    // plan (the CacheManager warning VERDICT r18 #6 flagged) and the
-    // unpersist on exit EVICTED the caller's entry out from under it.
-    // Persist only when the caller has not, release only what was
-    // persisted here (r19).
+      driverEdgeLimit: Int = 100000, callerPersisted: Boolean = false): DataFrame = {
     val fwd0 = pairs.select(col("doc1").as("a"), col("doc2").as("b"))
-    val callerCached = fwd0.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val fwd = if (callerCached) fwd0 else fwd0.persist()
+    val fwd = if (callerPersisted) fwd0 else fwd0.persist()
     // The driver fast path packs ids into Long; only integral id columns
     // qualify (a string id would cast to null and NPE in getLong, and the
     // output type would silently differ from the distributed loop's).
@@ -243,8 +245,8 @@ object NearDedup {
           .toDF("doc_id", "cluster_id")
           .select(col("doc_id").cast(idType).as("doc_id"),
             col("cluster_id").cast(idType).as("cluster_id"))
-      } finally { if (!callerCached) fwd.unpersist(); () }
-    } else connectedComponentsLoop(fwd, maxIters, releaseFwd = !callerCached)
+      } finally { if (!callerPersisted) fwd.unpersist(); () }
+    } else connectedComponentsLoop(fwd, maxIters, releaseFwd = !callerPersisted)
   }
 
   /** The distributed min-label loop ([[connectedComponents]]' large-graph
@@ -458,7 +460,7 @@ object NearDedup {
         // growth: NearDedupSpec's cache-hygiene test pins the common
         // path at exactly one surviving checkpoint per admission.
         val cc =
-          try connectedComponents(dupEdges)
+          try connectedComponents(dupEdges, callerPersisted = true)
           finally dupEdges.unpersist()
         val oldIds = state.select(col("doc_id"))
         // per component: reject if any state member; else keep the min NEW id
@@ -906,8 +908,7 @@ object NearDedup {
   /** Memoized bootstrap state for `dedup_substring_incr` (even-doc gram
     * hashes) — same pre-existing-artifact cost model as [[stateCache]].
     */
-  private val substrStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val substrStateCache = Memo.slot[String, DataFrame]("NearDedup.substrStateCache")
 
   /** Streaming winnow-fingerprint admission (round 13 — 5th member of
     * the incremental-admission family, the MOSS analog of
@@ -985,8 +986,7 @@ object NearDedup {
   /** Memoized bootstrap state for `dedup_winnow_incr` (even-doc
     * fingerprint hashes) — the [[substrStateCache]] cost model.
     */
-  private val winnowStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val winnowStateCache = Memo.slot[String, DataFrame]("NearDedup.winnowStateCache")
 
   /** The shingle pipeline (scan → split → zip_with → array_distinct, the
     * md5-heavy CPU core of every near-dup query), persisted: each pipeline
@@ -1004,16 +1004,14 @@ object NearDedup {
     * a fresh persist per invocation would leak one never-unpersisted
     * cache entry per run.
     */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val shingleCache = Memo.slot[String, DataFrame]("NearDedup.shingleCache")
 
   /** Bootstrapped corpus admission state for `dedup_incremental`,
     * memoized per (session, dir) with the same stopped-session eviction
     * as [[shingleCache]] (admitBatch results are localCheckpoint'd, so
     * the cached value is materialized data, not a live plan).
     */
-  private val stateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val stateCache = Memo.slot[String, DataFrame]("NearDedup.stateCache")
 
   /** Full-corpus dup-cluster labels (the [[connectedComponents]] run over
     * the verified LSH pair graph), memoized per (session, dir) like
@@ -1023,8 +1021,7 @@ object NearDedup {
     * a live plan — so re-deriving the whole candidates+jaccard+CC
     * pipeline per consumer bought nothing.
     */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val clusterCache = Memo.slot[String, DataFrame]("NearDedup.clusterCache")
 
   /** 64-bit SHINGLE simhash signatures as 4×16-bit integer blocks,
     * memoized per (session, dir): the signature table is the per-corpus
@@ -1037,12 +1034,10 @@ object NearDedup {
     * 6× ≈ 3.6 s was this id's entire cost). Cached: one evaluation, and
     * every downstream stage is a narrow scan of (id, 4 longs).
     */
-  private val simhashBlockCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val simhashBlockCache = Memo.slot[String, DataFrame]("NearDedup.simhashBlockCache")
 
   private def simhashBlocks(s: SparkSession, dir: String): DataFrame = {
-    simhashBlockCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    simhashBlockCache.computeIfAbsent((s, dir), _ =>
+    simhashBlockCache(s, dir)(
       simhash(shingled(s, dir), bits = 64)
         .select(
           col("doc_id") +:
@@ -1060,28 +1055,19 @@ object NearDedup {
     clusters(s, dir)
 
   private[llm] def clusters(s: SparkSession, dir: String): DataFrame = {
-    clusterCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    clusterCache.computeIfAbsent((s, dir), _ => {
+    clusterCache(s, dir) {
       val arrs = shingled(s, dir)
       val pairs = jaccard(candidates(banded(arrs)), arrs)
         .filter(col("jacc") >= 0.5)
         .select("doc1", "doc2")
       connectedComponents(pairs)
-    })
+    }
   }
 
-  private[llm] def shingled(s: SparkSession, dir: String): DataFrame = {
-    // evict entries of STOPPED sessions on every access: the map would
-    // otherwise pin dead sessions (and their plans) forever in a JVM that
-    // cycles sessions, e.g. repeated test suites. Limitation (documented,
-    // matching the fixtures' immutability): rewriting the parquet under
-    // `dir` within one LIVE session keeps serving the cached shingles —
-    // production would key by (path, snapshot/commit version) instead.
-    shingleCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    shingleCache.computeIfAbsent((s, dir), _ =>
+  private[llm] def shingled(s: SparkSession, dir: String): DataFrame =
+    shingleCache(s, dir)(
       shingleArrays(Tables(s, dir).documents)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
 
   /** One micro-batch of the streaming corpus-dedup sink: admit
     * `batchDocs` (doc_id, text) against the banded state persisted at
@@ -1330,11 +1316,10 @@ object NearDedup {
     "dedup_incremental" -> ((s, dir) => {
       val arrs = shingled(s, dir)
       val batch = banded(arrs.filter(col("doc_id") % 2 =!= 0))
-      stateCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-      val state0 = stateCache.computeIfAbsent((s, dir), _ => {
+      val state0 = stateCache(s, dir) {
         val corpus = banded(arrs.filter(col("doc_id") % 2 === 0))
         admitBatch(corpus, corpus.limit(0))
-      })
+      }
       admitBatch(batch, state0)
         .select(col("doc_id"))
         .join(Tables(s, dir).documents, "doc_id")
@@ -1425,13 +1410,12 @@ object NearDedup {
     // safety pinned in SubstringDedupSpec.
     "dedup_substring_incr" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      substrStateCache.keySet.removeIf(c => c._1.sparkContext.isStopped)
-      val owned = substrStateCache.computeIfAbsent((s, dir), _ => {
+      val owned = substrStateCache(s, dir) {
         val evens = docs.filter(col("doc_id") % 2 === 0)
         val (_, owned0) = admitSubstring(evens,
           substringGrams(evens.limit(0), 20).select("g"))
         owned0.persist()
-      })
+      }
       val (out, _) = admitSubstring(docs.filter(col("doc_id") % 2 =!= 0), owned)
       out.select(col("doc_id"), md5(col("text")).as("h"))
         .orderBy("doc_id")
@@ -1445,15 +1429,14 @@ object NearDedup {
     // id's admission verdicts are a deterministic even/odd function).
     "dedup_winnow_incr" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      winnowStateCache.keySet.removeIf(c => c._1.sparkContext.isStopped)
-      val owned = winnowStateCache.computeIfAbsent((s, dir), _ => {
+      val owned = winnowStateCache(s, dir) {
         val evens = docs.filter(col("doc_id") % 2 === 0)
         val (_, owned0) = admitWinnow(evens,
           TextOps.winnowFingerprints(evens.limit(0)).select("h"),
           fps0 = Some(TextOps.winnowedFps(s, dir)
             .filter(col("doc_id") % 2 === 0)))
         owned0.persist()
-      })
+      }
       val (out, _) = admitWinnow(docs.filter(col("doc_id") % 2 =!= 0), owned,
         fps0 = Some(TextOps.winnowedFps(s, dir)
           .filter(col("doc_id") % 2 =!= 0)))
@@ -1983,26 +1966,4 @@ object NearDedup {
         |SELECT doc_id, string_agg(CASE WHEN v > 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS sim_sig
         |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin
   )
-
-  /** Unpersist and drop this session's memoized per-corpus artifacts
-    * (shingle table, banded/gram/fingerprint bootstrap states, cluster
-    * labels, simhash blocks). The memos model write-once pipeline
-    * indexes, but a long-lived session that touches MANY corpora/
-    * families would otherwise hold every family's blocks at once —
-    * `Bench` releases between id-prefix groups so its block-cache
-    * footprint stays one-family-sized (round-15, VERDICT r14 #5: a
-    * 100 TB cost model cannot depend on whole-corpus block residency).
-    * First post-release consumer rebuilds (its median stays warm under
-    * median-of-3; the rebuild lands in `first_run_total`).
-    */
-  private[graft] def releaseMemos(s: SparkSession): Unit = {
-    Seq(substrStateCache, winnowStateCache, shingleCache, stateCache,
-      clusterCache, simhashBlockCache).foreach { m =>
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 eq s) { e.getValue.unpersist(false); it.remove() }
-      }
-    }
-  }
 }

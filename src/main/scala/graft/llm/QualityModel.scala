@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Model-based document quality scoring (round-9 verdict ask #6): a
   * hashed-ngram LOGISTIC model trained in-engine — the learned
@@ -186,15 +186,13 @@ object QualityModel {
   /** Trained model memoized per (session, dir) — the classifier is a
     * per-corpus artifact like the BPE merges and IVF centroids.
     */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Double]]()
+  private val modelCache = Memo.slot[String, Array[Double]]("QualityModel.modelCache")
 
   def trainedModel(s: SparkSession, dir: String): Array[Double] = {
-    modelCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    modelCache.computeIfAbsent((s, dir), _ => {
+    modelCache(s, dir) {
       val (tr, _) = trainSplit(plantedTraining(Tables(s, dir).documents))
       train(tr)
-    })
+    }
   }
 
   /** (doc_id, w1, w2) bigram transitions of a doc table — the zip_with
@@ -400,12 +398,10 @@ object QualityModel {
     * threshold-embedding oracle replay the IDENTICAL values (a sketch
     * re-run's merge order is not contractually deterministic).
     */
-  private val pplThCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Array[(String, Double, Double)]]()
+  private val pplThCache = Memo.slot[String, Array[(String, Double, Double)]]("QualityModel.pplThCache")
 
   private[llm] def pplThresholds(s: SparkSession, dir: String): Array[(String, Double, Double)] = {
-    pplThCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pplThCache.computeIfAbsent((s, dir), _ =>
+    pplThCache(s, dir)(
       perplexity(Tables(s, dir).documents)
         .join(Tables(s, dir).documents.select("doc_id", "lang"), "doc_id")
         .groupBy("lang").agg(
@@ -459,28 +455,23 @@ object QualityModel {
     * engine-internal, like bpe_merges / ivf centroids.
     */
   private def qmsOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
     // Keyed by the dump's fixture dir (round-17 ADVICE): the memo key
     // already carries the dir, so the lookup selects THE entry for the
     // dir being verified — a second dir touched in the same session no
     // longer downgrades these ids to no-oracle, and a stale entry for
     // a different dir can never embed the wrong model/thresholds.
-    val score = modelCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._2)) match {
-      case e :: Nil => Map("quality_model_score" -> scoreSql(e.getValue))
+    def forDir[V](live: List[(String, V)]): List[V] =
+      live.collect { case (d, v) if graft.Engine.lastFixtureDir.contains(d) => v }
+    val score = forDir(modelCache.live) match {
+      case w :: Nil => Map("quality_model_score" -> scoreSql(w))
       case _        => Map.empty[String, String]
     }
-    val buckets = pplThCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._2)) match {
-      case e :: Nil => Map("perplexity_buckets_approx" -> bucketsApproxSql(e.getValue))
+    val buckets = forDir(pplThCache.live) match {
+      case th :: Nil => Map("perplexity_buckets_approx" -> bucketsApproxSql(th))
       case _        => Map.empty[String, String]
     }
-    val ensemble = modelCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._2)) match {
-      case e :: Nil => Map("quality_ensemble" -> ensembleSql(e.getValue))
+    val ensemble = forDir(modelCache.live) match {
+      case w :: Nil => Map("quality_ensemble" -> ensembleSql(w))
       case _        => Map.empty[String, String]
     }
     score ++ buckets ++ ensemble

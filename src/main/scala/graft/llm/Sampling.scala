@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Deterministic corpus sampling / splitting / n-gram statistics — the
   * training-data-pipeline operations a 100 TB run does constantly
@@ -487,12 +487,10 @@ object Sampling {
     * the IDENTICAL value (a sketch re-run's merge order is not
     * contractually deterministic).
     */
-  private val dsirThCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Double]()
+  private val dsirThCache = Memo.slot[String, Double]("Sampling.dsirThCache")
 
   private[llm] def dsirThreshold(s: SparkSession, dir: String): Double = {
-    dsirThCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    dsirThCache.computeIfAbsent((s, dir), _ =>
+    dsirThCache(s, dir)(
       dsirScore(Tables(s, dir).documents)
         .agg(percentile_approx(col("score"), lit(0.75), lit(10000)))
         .collect()(0).getDouble(0))
@@ -504,15 +502,12 @@ object Sampling {
     * filters at the engine's memoized literal.
     */
   private def dsirApproxOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
     // dir-keyed lookup (round-17 ADVICE) — see QualityModel.qmsOracle
-    dsirThCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._2)) match {
-      case e :: Nil => Map("dsir_select_approx" ->
+    dsirThCache.live.filter { case (d, _) => graft.Engine.lastFixtureDir.contains(d) } match {
+      case (_, th) :: Nil => Map("dsir_select_approx" ->
         s"""WITH $dsirCte
            |SELECT doc_id, n_feats, score FROM sc
-           |WHERE score >= CAST(${e.getValue} AS DOUBLE)
+           |WHERE score >= CAST($th AS DOUBLE)
            |ORDER BY doc_id""".stripMargin)
       case _ => Map.empty
     }

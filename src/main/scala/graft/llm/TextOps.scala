@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** North-star LLM-pipeline text operators (SURVEY.md §2.12): text
   * analysis, fingerprinting, exact + near dedup over `documents`.
@@ -160,8 +160,7 @@ object TextOps {
     * collect is bounded by the key's micro-unit range (≤10⁶+1 levels);
     * the threshold is the ONE scalar the id "trains".
     */
-  private val budgetThCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Boolean), java.lang.Long]()
+  private val budgetThCache = Memo.slot[(String, Boolean), Long]("TextOps.budgetThCache")
 
   private def selectBudgetApprox(s: SparkSession, dir: String,
       density: Boolean): DataFrame = {
@@ -178,8 +177,7 @@ object TextOps {
     // bounded histogram → exact integer threshold, derived driver-side
     // (no global window anywhere on the doc-scale path) and memoized
     // per (session, dir, key) — the one scalar this id "trains"
-    budgetThCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val qStar: Long = budgetThCache.computeIfAbsent((s, dir, density), _ => {
+    val qStar: Long = budgetThCache(s, (dir, density)) {
       val hist = scored.filter(col(keyName).isNotNull)
         .groupBy(keyName)
         .agg(sum(col("n_tokens")).as("t"))
@@ -192,7 +190,7 @@ object TextOps {
         if (cum <= budget) q = lvl
       }
       q
-    })
+    }
     scored.filter(col(keyName) >= lit(qStar)).orderBy("doc_id")
   }
 
@@ -306,8 +304,7 @@ object TextOps {
     * form (5·n_shared >= 4·min(n1,n2)) — no float boundary exists
     * cross-engine, the decon_overlap convention.
     */
-  private val winnowClusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val winnowClusterCache = Memo.slot[String, DataFrame]("TextOps.winnowClusterCache")
 
   /** Memoized per-corpus winnow fingerprint table (doc_id, pos, h) —
     * the [[NearDedup.shingled]] cost model applied to the MOSS family:
@@ -317,27 +314,24 @@ object TextOps {
     * consumers sit under different exchanges, so Catalyst never shares
     * it). MEMORY_AND_DISK: ~2/(w+1) of the corpus gram stream at 100 TB
     * — must spill, not OOM. Released at family boundaries by
-    * [[releaseMemos]]; build cost lands in first-run numbers like every
+    * [[graft.Memo.release]]; build cost lands in first-run numbers like every
     * other per-corpus memo.
     */
-  private val winnowFpCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val winnowFpCache = Memo.slot[String, DataFrame]("TextOps.winnowFpCache")
 
   private[graft] def winnowedFps(s: SparkSession, dir: String): DataFrame = {
-    winnowFpCache.keySet.removeIf(c => c._1.sparkContext.isStopped)
-    winnowFpCache.computeIfAbsent((s, dir), _ =>
+    winnowFpCache(s, dir)(
       winnowFingerprints(Tables(s, dir).documents)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   private def winnowClusters(s: SparkSession, dir: String): DataFrame = {
-    winnowClusterCache.keySet.removeIf(c => c._1.sparkContext.isStopped)
-    winnowClusterCache.computeIfAbsent((s, dir), _ => {
+    winnowClusterCache(s, dir) {
       val edges = winnowPairsFrom(winnowedFps(s, dir))
         .filter(col("n_shared") * 5 >= least(col("n1"), col("n2")) * 4)
         .select("doc1", "doc2")
       NearDedup.connectedComponents(edges)
-    })
+    }
   }
 
   /** The BM25 per-(query-term, candidate) weight shared by the inline
@@ -360,13 +354,12 @@ object TextOps {
     * retrieval deployment tokenizes and aggregates its postings ONCE per
     * corpus and serves every query from the artifact. Built on first use
     * per (session, dir), released at family boundaries by
-    * [[releaseMemos]] like every other per-corpus memo. r19: the inline
+    * [[graft.Memo.release]] like every other per-corpus memo. r19: the inline
     * BM25 ids used to re-derive this subtree per reference — Catalyst
     * never CSE'd it, so bm25_prf's two-pass plan tokenized documents 28
     * times (plans/r19/bm25_prf_before.txt).
     */
-  private val bm25TfCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]()
+  private val bm25TfCache = Memo.slot[String, (DataFrame, DataFrame, DataFrame, DataFrame)]("TextOps.bm25TfCache")
 
   /** Corpus statistics for inline BM25 passes, memoized per (session,
     * dir): the postings table (tf), per-term df and per-doc length are
@@ -378,8 +371,7 @@ object TextOps {
     */
   private def bm25Corpus(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    bm25TfCache.keySet.removeIf(c => c._1.sparkContext.isStopped)
-    bm25TfCache.computeIfAbsent((s, dir), _ => {
+    bm25TfCache(s, dir) {
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // spread: single-row-group fixture — tokenize+aggregate would
       // otherwise run in one task (the Engine.spread contract)
@@ -393,7 +385,7 @@ object TextOps {
       val stats = Tables(s, dir).documents.agg(count(lit(1)).cast("double").as("n"))
         .crossJoin(dlen.agg(avg(col("dl")).as("avgdl")))
       (tf, dfreq, dlen, stats)
-    })
+    }
   }
 
   /** One BM25 scoring pass for a broadcastable (q_id, term) query set:
@@ -748,8 +740,7 @@ object TextOps {
       }
       .start()
 
-  private val textIndexStreamPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val textIndexStreamPaths = Memo.shared[String, String]("TextOps.textIndexStreamPaths")
 
   /** The continuous-indexing demo's index (bm25_stream): the corpus
     * arrives as three batches (doc_id mod 3) folded through
@@ -760,7 +751,7 @@ object TextOps {
     * redelivered batch changed nothing.
     */
   private[graft] def textIndexStreamDemoPath(s: SparkSession, dir: String): String =
-    textIndexStreamPaths.computeIfAbsent(dir, _ => {
+    textIndexStreamPaths(dir) {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
       val path = s"${sys.props("java.io.tmpdir")}/graft_textidxstream_$key"
@@ -774,10 +765,9 @@ object TextOps {
         fs.create(done, true).close()
       }
       path
-    })
+    }
 
-  private val textIndexAppendPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val textIndexAppendPaths = Memo.shared[String, String]("TextOps.textIndexAppendPaths")
 
   /** The append demo's index (bm25_append): built from the EVEN doc_ids
     * only, then the odd half is appended through [[appendTextIndex]]
@@ -789,7 +779,7 @@ object TextOps {
     * code rows.
     */
   private[graft] def textIndexAppendDemoPath(s: SparkSession, dir: String): String =
-    textIndexAppendPaths.computeIfAbsent(dir, _ => {
+    textIndexAppendPaths(dir) {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
       val path = s"${sys.props("java.io.tmpdir")}/graft_textidxapp_$key"
@@ -807,23 +797,22 @@ object TextOps {
         fs.create(done, true).close()
       }
       path
-    })
+    }
 
-  private val textIndexPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val textIndexPaths = Memo.shared[String, String]("TextOps.textIndexPaths")
 
   /** Deterministic per-corpus location for the demo id's persisted
     * index, built on first use (untimed artifact, like every memoized
     * per-corpus structure).
     */
   private[graft] def textIndexPath(s: SparkSession, dir: String): String =
-    textIndexPaths.computeIfAbsent(dir, _ => {
+    textIndexPaths(dir) {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
       val path = s"${sys.props("java.io.tmpdir")}/graft_textidx_$key"
       saveTextIndex(Tables(s, dir).documents, path)
       path
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -2376,30 +2365,4 @@ object TextOps {
         |SELECT rank, term, cnt, round(CAST(cum AS DOUBLE) / total, 6) AS cum_frac
         |FROM ranked WHERE rank <= 50 ORDER BY rank""".stripMargin
   )
-
-  /** Release this session's memoized winnow-cluster labels — see
-    * [[NearDedup.releaseMemos]] for the footprint rationale. (The
-    * disk-index path caches hold strings, not blocks — left alone.)
-    */
-  private[graft] def releaseMemos(s: SparkSession): Unit = {
-    val it = winnowClusterCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) { e.getValue.unpersist(false); it.remove() }
-    }
-    val it0 = winnowFpCache.entrySet().iterator()
-    while (it0.hasNext) {
-      val e = it0.next()
-      if (e.getKey._1 eq s) { e.getValue.unpersist(false); it0.remove() }
-    }
-    val it2 = bm25TfCache.entrySet().iterator()
-    while (it2.hasNext) {
-      val e = it2.next()
-      if (e.getKey._1 eq s) {
-        val (tf, dfreq, dlen, _) = e.getValue
-        tf.unpersist(false); dfreq.unpersist(false); dlen.unpersist(false)
-        it2.remove()
-      }
-    }
-  }
 }

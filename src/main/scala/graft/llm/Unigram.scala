@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Unigram-LM tokenizer (round 17 — the SentencePiece family, Kudo
   * 2018), completing the tokenizer trio next to [[Bpe]] (merge-rank)
@@ -72,13 +72,11 @@ object Unigram {
     * once, in driver doubles — the value is then a fixture input to
     * both engines (no IEEE op on any compare path).
     */
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, Long, Long)]]()
+  private val modelCache = Memo.slot[String, Seq[(String, Long, Long)]]("Unigram.modelCache")
 
   /** (piece, weight, logp_e9) rows of the trained model. */
   def trainedModel(s: SparkSession, dir: String): Seq[(String, Long, Long)] = {
-    modelCache.keySet.removeIf(k0 => k0._1.sparkContext.isStopped)
-    modelCache.computeIfAbsent((s, dir), _ => {
+    modelCache(s, dir) {
       val rows = vocabDf(Tables(s, dir).documents)
         .select("p", "weight").collect()
         .map(r => (r.getString(0), r.getLong(1))) // bounded: |alphabet| + 64
@@ -86,7 +84,7 @@ object Unigram {
       rows.map { case (p, f) =>
         (p, f, math.round(1e9 * math.log(total / f)))
       }.toSeq.sortBy(_._1)(Bpe.utf8Order)
-    })
+    }
   }
 
   /** Corpus encode via the distinct-word cache (the Bpe/WordPiece
@@ -179,8 +177,7 @@ object Unigram {
     * compare table is all-integer (piece, weight_seed, weight_em,
     * is_char).
     */
-  private val emCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, Long, Long)]]()
+  private val emCache = Memo.slot[String, Seq[(String, Long, Long)]]("Unigram.emCache")
 
   /** Distributed E-step piece counts under the seed model: (p, weight_em). */
   private def emCounts(s: SparkSession, dir: String): DataFrame = {
@@ -202,15 +199,14 @@ object Unigram {
     * the corpus under it).
     */
   def emModel(s: SparkSession, dir: String): Seq[(String, Long, Long)] = {
-    emCache.keySet.removeIf(k0 => k0._1.sparkContext.isStopped)
-    emCache.computeIfAbsent((s, dir), _ => {
+    emCache(s, dir) {
       val rows = emCounts(s, dir).collect()
         .map(r => (r.getString(0), r.getLong(1))) // bounded: ≤ |seed vocab|
       val total = rows.map(_._2).sum.toDouble
       rows.map { case (p, f) =>
         (p, f, math.round(1e9 * math.log(total / f)))
       }.toSeq.sortBy(_._1)(Bpe.utf8Order)
-    })
+    }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -403,10 +399,8 @@ object Unigram {
 
   /** The live quantized model for `dir` if this JVM trained it. */
   private[llm] def liveModelFor(dir: String): Option[Seq[(String, Long, Long)]] = {
-    import scala.jdk.CollectionConverters._
-    modelCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped && e.getKey._2 == dir) match {
-      case e :: Nil => Some(e.getValue)
+    modelCache.live.filter(_._1 == dir) match {
+      case (_, model) :: Nil => Some(model)
       case _        => None
     }
   }

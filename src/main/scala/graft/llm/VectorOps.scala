@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Embedding similarity search (SURVEY.md §2.12) over
   * `embeddings(vec_id, embedding: array<float>, label)`.
@@ -119,8 +119,7 @@ object VectorOps {
     */
   final case class LshIndex(buckets: DataFrame, h: Int, tables: Int)
 
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int, Int), LshIndex]()
+  private val bucketCache = Memo.slot[(String, Int, Int), LshIndex]("VectorOps.bucketCache")
 
   /** Memoized per-corpus LSH index, keyed (session, dir, h, tables) —
     * the same write-once cost model as [[NearDedup.shingled]] and
@@ -139,19 +138,16 @@ object VectorOps {
     * are seed-42 deterministic given dim, but dim is data-probed and
     * the oracle builder has no data access).
     */
-  private val lshPlaneCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Array[Array[Double]]]()
+  private val lshPlaneCache = Memo.shared[(String, Int, Int), Array[Array[Double]]]("VectorOps.lshPlaneCache")
 
   private[llm] def corpusBuckets(s: SparkSession, dir: String,
       h: Int, tables: Int): LshIndex = {
-    bucketCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    bucketCache.computeIfAbsent((s, dir, h, tables), _ => {
+    bucketCache(s, (dir, h, tables)) {
       val emb = Tables(s, dir).embeddings
-      lshPlaneCache.putIfAbsent((dir, h, tables),
-        hyperplanes(h * tables, probeDim(emb)))
+      lshPlaneCache((dir, h, tables))(hyperplanes(h * tables, probeDim(emb)))
       LshIndex(signBuckets(emb, h, tables)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), h, tables)
-    })
+    }
   }
 
   /** ANN via multi-table LSH: L independent tables of h sign-bits each;
@@ -587,15 +583,13 @@ object VectorOps {
     PcaModel(found, totVar, mu)
   }
 
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), PcaModel]()
+  private val pcaCache = Memo.slot[String, PcaModel]("VectorOps.pcaCache")
 
   /** Train-once PCA per (session, dir) — same model-vs-artifact
     * rationale as [[ivfModel]]/[[kmeansModel]].
     */
   private def pcaModel(s: SparkSession, dir: String): PcaModel = {
-    pcaCache.keySet.removeIf(key => key._1.sparkContext.isStopped)
-    pcaCache.computeIfAbsent((s, dir), _ =>
+    pcaCache(s, dir)(
       pcaTop(Tables(s, dir).embeddings))
   }
 
@@ -613,8 +607,7 @@ object VectorOps {
     ()
   }
 
-  private val kmeansCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), Array[Array[Double]]]()
+  private val kmeansCache = Memo.slot[(String, Int, Int), Array[Array[Double]]]("VectorOps.kmeansCache")
 
   /** Train-once full-corpus k-means per (session, dir, k, iters) — same
     * model-vs-artifact rationale as [[ivfModel]], but keyed on the
@@ -624,13 +617,11 @@ object VectorOps {
     * silently hand one of them the other's fit.
     */
   private def kmeansModel(s: SparkSession, dir: String, k: Int, iters: Int): Array[Array[Double]] = {
-    kmeansCache.keySet.removeIf(key => key._1.sparkContext.isStopped)
-    kmeansCache.computeIfAbsent((s, dir, k, iters), _ =>
+    kmeansCache(s, (dir, k, iters))(
       kmeansFit(Tables(s, dir).embeddings, k, iters))
   }
 
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[Array[Double]]]()
+  private val centroidCache = Memo.shared[(String, Int), Array[Array[Double]]]("VectorOps.centroidCache")
 
   /** Train-once coarse quantizer: the centroids for a (dataset, cells)
     * pair are a MODEL, not a per-query artifact — production IVF trains
@@ -640,7 +631,7 @@ object VectorOps {
     * not per query); deterministic training makes the cache transparent.
     */
   def ivfModel(emb: DataFrame, cells: Int, datasetKey: String): Array[Array[Double]] =
-    centroidCache.computeIfAbsent((datasetKey, cells), _ =>
+    centroidCache((datasetKey, cells))(
       // keep a usable points-per-centroid ratio when the cell count is
       // scaled up (dedup_semantic on big corpora) — but BOUNDED: the
       // sample is a driver-side collect and Lloyd is
@@ -655,25 +646,23 @@ object VectorOps {
     */
   final case class IvfIndex(assigned: DataFrame, cells: Int)
 
-  private val assignedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), IvfIndex]()
+  private val assignedCache = Memo.slot[(String, Int), IvfIndex]("VectorOps.assignedCache")
 
   /** Memoized per-corpus IVF cell assignment (c_id, c_emb, cell) — the
     * inverted-file half of the index, the write-once partition/cluster
     * key of the vector table described at [[ivfTopK]]. Same rationale
     * and hygiene as [[corpusBuckets]]: build once per (session, dir,
     * cells) on first use, evict dead sessions, fixture immutability
-    * documented at [[NearDedup.shingled]].
+    * documented at [[graft.Memo]].
     */
   private[llm] def ivfAssigned(s: SparkSession, dir: String, cells: Int): IvfIndex = {
-    assignedCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    assignedCache.computeIfAbsent((s, dir, cells), _ => {
+    assignedCache(s, (dir, cells)) {
       val emb = Tables(s, dir).embeddings
       val centroids = ivfModel(emb, cells, datasetKey = dir)
       IvfIndex(emb.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
           ivfCell(col("embedding"), centroids).as("cell"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), cells)
-    })
+    }
   }
 
   /** Bootstrapped keeper state for `dedup_semantic_incr` (even vec_ids
@@ -682,17 +671,15 @@ object VectorOps {
     * real pipeline the state pre-exists, so steady-state cost is the
     * batch admission only.
     */
-  private val semStateCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Double), DataFrame]()
+  private val semStateCache = Memo.slot[(String, Int, Double), DataFrame]("VectorOps.semStateCache")
 
   private[llm] def semState(s: SparkSession, dir: String, cells: Int,
       centroids: Array[Array[Double]], threshold: Double): DataFrame = {
-    semStateCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     // cells and threshold are part of the key (centroids derive from
     // (dir, cells)): keepers admitted under one threshold/cell split
     // are a DIFFERENT state than another's — the kmeansModel cache-key
     // rationale
-    semStateCache.computeIfAbsent((s, dir, cells, threshold), _ => {
+    semStateCache(s, (dir, cells, threshold)) {
       val evens = ivfAssigned(s, dir, cells).assigned
         .filter(col("c_id") % 2 === 0)
         .select(col("c_id").as("vec_id"), col("c_emb").as("embedding"), col("cell"),
@@ -701,7 +688,7 @@ object VectorOps {
       evens.join(keepers.select("vec_id"), "vec_id")
         .select("vec_id", "embedding", "cell", "__sub")
         .localCheckpoint()
-    })
+    }
   }
 
   /** Driver-side Lloyd on an in-memory point set: deterministic init
@@ -919,22 +906,20 @@ object VectorOps {
       (array_position(array(scores: _*), array_max(array(scores: _*))) - 1).cast("int")
     }
 
-  private val pqModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Array[Array[Array[Double]]]]()
+  private val pqModelCache = Memo.shared[(String, Int, Int), Array[Array[Array[Double]]]]("VectorOps.pqModelCache")
 
   /** Train-once PQ codebooks per (datasetKey, m, ks) — the [[ivfModel]]
     * contract applied to the product quantizer.
     */
   def pqModel(emb: DataFrame, m: Int, ks: Int, datasetKey: String): Array[Array[Array[Double]]] =
-    pqModelCache.computeIfAbsent((datasetKey, m, ks), _ => pqTrain(emb, m, ks))
+    pqModelCache((datasetKey, m, ks))(pqTrain(emb, m, ks))
 
   /** A prebuilt code table (c_id, codes) WITH its codebooks — provenance
     * pinning, as [[IvfIndex]] / [[LshIndex]].
     */
   final case class PqIndex(codes: DataFrame, books: Array[Array[Array[Double]]])
 
-  private val pqCodesCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), PqIndex]()
+  private val pqCodesCache = Memo.slot[(String, Int, Int), PqIndex]("VectorOps.pqCodesCache")
 
   /** Memoized per-corpus PQ code table — the compressed index itself
     * (at 100 TB this 8-byte-per-vector table IS what replaces the raw
@@ -942,14 +927,13 @@ object VectorOps {
     * corpus). Same hygiene as [[corpusBuckets]]/[[ivfAssigned]].
     */
   private[graft] def pqIndex(s: SparkSession, dir: String, m: Int, ks: Int): PqIndex = {
-    pqCodesCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pqCodesCache.computeIfAbsent((s, dir, m, ks), _ => {
+    pqCodesCache(s, (dir, m, ks)) {
       val emb = Tables(s, dir).embeddings
       val books = pqModel(emb, m, ks, datasetKey = dir)
       PqIndex(withPqCodes(emb, "embedding", books)
           .select(col("vec_id").as("c_id"), col("codes"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), books)
-    })
+    }
   }
 
   /** ADC top-k search over the PQ code table. Per query the driver
@@ -1107,24 +1091,21 @@ object VectorOps {
       .drop("__nrm", "__u", "__res", "__subs")
   }
 
-  private val ivfPqModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int), IvfPqModel]()
+  private val ivfPqModelCache = Memo.shared[(String, Int, Int, Int), IvfPqModel]("VectorOps.ivfPqModelCache")
 
   /** Train-once IVF-PQ model per (datasetKey, cells, m, ks) — the
     * [[pqModel]] contract applied to the composed index.
     */
   def ivfPqModel(emb: DataFrame, cells: Int, m: Int, ks: Int,
       datasetKey: String): IvfPqModel =
-    ivfPqModelCache.computeIfAbsent((datasetKey, cells, m, ks),
-      _ => ivfPqTrain(emb, cells, m, ks))
+    ivfPqModelCache((datasetKey, cells, m, ks))(ivfPqTrain(emb, cells, m, ks))
 
   /** A prebuilt (c_id, cell, codes) table WITH its model — provenance
     * pinning, as [[PqIndex]].
     */
   final case class IvfPqIndex(codes: DataFrame, model: IvfPqModel)
 
-  private val ivfPqCodesCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Int, Seq[String]), IvfPqIndex]()
+  private val ivfPqCodesCache = Memo.slot[(String, Int, Int, Int, Seq[String]), IvfPqIndex]("VectorOps.ivfPqCodesCache")
 
   /** Memoized per-corpus IVF-PQ code table — at 100 TB, `cell` is the
     * table's partition/cluster key and `codes` its 8-byte payload: the
@@ -1139,15 +1120,14 @@ object VectorOps {
     */
   private[graft] def ivfPqIndex(s: SparkSession, dir: String,
       cells: Int, m: Int, ks: Int, attrs: Seq[String] = Nil): IvfPqIndex = {
-    ivfPqCodesCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    ivfPqCodesCache.computeIfAbsent((s, dir, cells, m, ks, attrs), _ => {
+    ivfPqCodesCache(s, (dir, cells, m, ks, attrs)) {
       val emb = Tables(s, dir).embeddings
       val model = ivfPqModel(emb, cells, m, ks, datasetKey = dir)
       IvfPqIndex(withIvfPqCodes(emb, "embedding", model)
           .select(col("vec_id").as("c_id") +: col("cell") +: col("codes") +:
             attrs.map(col): _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), model)
-    })
+    }
   }
 
   /** IVF-PQ top-k search: per query the driver ranks the coarse cells by
@@ -1531,8 +1511,7 @@ object VectorOps {
       }
   }
 
-  private val ivfPqDiskPaths = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int), String]()
+  private val ivfPqDiskPaths = Memo.shared[(String, Int, Int, Int), String]("VectorOps.ivfPqDiskPaths")
 
   /** Deterministic per-(dataset, params) location for the query-id's
     * persisted index, built on first use (untimed artifact, like every
@@ -1540,18 +1519,17 @@ object VectorOps {
     */
   private[graft] def ivfPqDiskPath(s: SparkSession, dir: String,
       cells: Int, m: Int, ks: Int): String =
-    ivfPqDiskPaths.computeIfAbsent((dir, cells, m, ks), _ => {
+    ivfPqDiskPaths((dir, cells, m, ks)) {
       val path = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_${pathKey(dir)}_c${cells}m${m}k$ks"
       saveIvfPqIndex(s, dir, path, cells, m, ks)
       path
-    })
+    }
 
   private def pathKey(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
-  private val ivfPqAppendPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ivfPqAppendPaths = Memo.shared[String, String]("VectorOps.ivfPqAppendPaths")
 
   /** The append demo's index (ann_ivfpq_append): built from the EVEN
     * vec_ids only — the model never sees an odd vector — then the odd
@@ -1562,7 +1540,7 @@ object VectorOps {
     * present?) before appending, so a run torn between the append write
     * and its marker cannot double-append on restart.
     */
-  private val ivfPqDeletePaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ivfPqDeletePaths = Memo.shared[String, String]("VectorOps.ivfPqDeletePaths")
 
   /** Demo artifact for `ann_ivfpq_delete`: the FULL corpus indexed under
     * the plain per-dir model (so the oracle reuses the one plain model
@@ -1573,7 +1551,7 @@ object VectorOps {
     * missing.
     */
   private[graft] def ivfPqDeleteDemoPath(s: SparkSession, dir: String): String = {
-    val path = ivfPqDeletePaths.computeIfAbsent(dir, _ => {
+    val path = ivfPqDeletePaths(dir) {
       val p = s"${sys.props("java.io.tmpdir")}/graft_ivfpqdel_${pathKey(dir)}_c16m8k16"
       val done = new org.apache.hadoop.fs.Path(p, "_graft_delete_ok")
       val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1586,13 +1564,13 @@ object VectorOps {
         fs.create(done, true).close()
       }
       p
-    })
-    ivfPqModelCache.computeIfAbsent((dir, 16, 8, 16), _ => loadIvfPqModel(s, path))
+    }
+    ivfPqModelCache((dir, 16, 8, 16))(loadIvfPqModel(s, path))
     path
   }
 
   private[graft] def ivfPqAppendDemoPath(s: SparkSession, dir: String): String = {
-    val path = ivfPqAppendPaths.computeIfAbsent(dir, _ => {
+    val path = ivfPqAppendPaths(dir) {
       val p = s"${sys.props("java.io.tmpdir")}/graft_ivfpqapp_${pathKey(dir)}_c16m8k16"
       val done = new org.apache.hadoop.fs.Path(p, "_graft_append_ok")
       val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1606,13 +1584,12 @@ object VectorOps {
         fs.create(done, true).close()
       }
       p
-    })
+    }
     // capture the SERVED model for [[ivfPqOracle]]: a pre-existing
     // committed artifact skips training in this JVM, so load the
     // persisted model tables instead (parquet doubles round-trip
     // bit-exact — disk ≡ trained, the ann_ivfpq_disk contract)
-    ivfPqModelCache.computeIfAbsent((s"$dir#even", 16, 8, 16),
-      _ => loadIvfPqModel(s, path))
+    ivfPqModelCache((s"$dir#even", 16, 8, 16))(loadIvfPqModel(s, path))
     path
   }
 
@@ -1949,7 +1926,7 @@ object VectorOps {
       // not a bigger driver model.
       val n = Tables(s, dir).embeddings.count()
       val cells = math.min(math.max(16, (n / 2048L).toInt), 1024)
-      semCellsUsed.put(dir, cells) // oracle keys its model lookup on THIS
+      semCellsUsed(dir)(cells) // oracle keys its model lookup on THIS
       // __sub = residual ranks 2..3 from the SAME memoized model — the
       // hot-cell split keys (cells over maxCell sub-divide instead of
       // being skipped; see semDedupCore)
@@ -1972,7 +1949,7 @@ object VectorOps {
     "dedup_semantic_incr" -> ((s, dir) => {
       val n = Tables(s, dir).embeddings.count()
       val cells = math.min(math.max(16, (n / 2048L).toInt), 1024)
-      semCellsUsed.put(dir, cells)
+      semCellsUsed(dir)(cells)
       val centroids = ivfModel(Tables(s, dir).embeddings, cells, datasetKey = dir)
       val state0 = semState(s, dir, cells, centroids, threshold = 0.45)
       val batch = ivfAssigned(s, dir, cells).assigned
@@ -2280,13 +2257,12 @@ object VectorOps {
     * when no/ambiguous 16-cell model is live (degrades to rows-only).
     */
   private def ivfOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
     // dir-keyed lookup (round-17 ADVICE) — see QualityModel.qmsOracle
-    val live = centroidCache.entrySet().asScala.toList.filter(e =>
-      e.getKey._2 == 16 && graft.Engine.lastFixtureDir.contains(e.getKey._1))
+    val live = centroidCache.live.filter { case ((d, cells), _) =>
+      cells == 16 && graft.Engine.lastFixtureDir.contains(d) }
     val ann = live match {
-      case e :: Nil => Map("ann_ivf" -> annIvfSql(e.getValue),
-        "ann_recall" -> annRecallSql(e.getValue))
+      case (_, cent) :: Nil => Map("ann_ivf" -> annIvfSql(cent),
+        "ann_recall" -> annRecallSql(cent))
       case _        => Map.empty[String, String]
     }
     // the SemDeDup ids scale cells with n (≠ 16 past ~33k vectors), so
@@ -2295,19 +2271,17 @@ object VectorOps {
     // ann_ivf's fixed 16
     val sem = (for {
       dir <- graft.Engine.lastFixtureDir
-      cells <- Option(semCellsUsed.get(dir))
-      cent <- centroidCache.entrySet().asScala.toList
-        .find(e => e.getKey._1 == dir && e.getKey._2 == cells.intValue())
-        .map(_.getValue)
+      cells <- semCellsUsed.live.collectFirst { case (`dir`, c) => c }
+      cent <- centroidCache.live.collectFirst { case ((`dir`, `cells`), c) => c }
     } yield Map("dedup_semantic" -> semDedupSql(cent),
       "dedup_semantic_incr" -> semDedupIncrSql(cent))).getOrElse(Map.empty)
     ann ++ sem
   }
 
-  /** cells count each fixture dir's SemDeDup ids last ran with — the
-    * oracle's model-lookup key (dir-keyed like every dynamic oracle). */
-  private val semCellsUsed =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  /** cells count each fixture dir's SemDeDup ids ran with (a function
+    * of the dir's row count) — the oracle's model-lookup key (dir-keyed
+    * like every dynamic oracle). */
+  private val semCellsUsed = Memo.shared[String, Int]("VectorOps.semCellsUsed")
 
   /** Shared CTE prefix of the SemDeDup replays: embedded-centroid cell
     * assignment (ivfOracle's proven first-max rule), engine-faithful
@@ -2450,12 +2424,10 @@ object VectorOps {
     * = any-table collisions deduped, ranking = the sim_topk tail.
     */
   private def lshOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val live = lshPlaneCache.entrySet().asScala.toList
-      .filter(e => e.getKey._2 == 4 && e.getKey._3 == 8 &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._1))
+    val live = lshPlaneCache.live.filter { case ((d, h, tables), _) =>
+      h == 4 && tables == 8 && graft.Engine.lastFixtureDir.contains(d) }
     live match {
-      case e :: Nil => Map("ann_lsh" -> annLshSql(e.getValue, h = 4))
+      case (_, planes) :: Nil => Map("ann_lsh" -> annLshSql(planes, h = 4))
       case _        => Map.empty
     }
   }
@@ -2506,12 +2478,10 @@ object VectorOps {
     * stays engine-internal (reference-parity specs).
     */
   private def pqOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val live = pqModelCache.entrySet().asScala.toList
-      .filter(e => e.getKey._2 == 8 && e.getKey._3 == 16 &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._1))
+    val live = pqModelCache.live.filter { case ((d, m, ks), _) =>
+      m == 8 && ks == 16 && graft.Engine.lastFixtureDir.contains(d) }
     live match {
-      case e :: Nil => Map("vec_pq" -> vecPqSql(e.getValue))
+      case (_, books) :: Nil => Map("vec_pq" -> vecPqSql(books))
       case _        => Map.empty
     }
   }
@@ -2556,12 +2526,10 @@ object VectorOps {
     * [[rerankExact]] stage for stage.
     */
   private def annPqOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val live = pqModelCache.entrySet().asScala.toList
-      .filter(e => e.getKey._2 == 8 && e.getKey._3 == 16 &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._1))
+    val live = pqModelCache.live.filter { case ((d, m, ks), _) =>
+      m == 8 && ks == 16 && graft.Engine.lastFixtureDir.contains(d) }
     live match {
-      case e :: Nil => Map("ann_pq" -> annPqSql(e.getValue))
+      case (_, books) :: Nil => Map("ann_pq" -> annPqSql(books))
       case _        => Map.empty
     }
   }
@@ -2633,33 +2601,32 @@ object VectorOps {
     * codes, shortlist k·4, exact-cosine re-rank.
     */
   private def ivfPqOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val live = ivfPqModelCache.entrySet().asScala.toList
-      .filter(e => e.getKey._2 == 16 && e.getKey._3 == 8 && e.getKey._4 == 16)
+    val live = ivfPqModelCache.live.collect {
+      case ((key, 16, 8, 16), model) => (key, model) }
     // the append demo trains its OWN frozen model under "<dir>#even"
     // (the no-retrain contract) — it lives alongside the plain-dir
     // model in one Verify JVM, so the two are keyed apart here instead
     // of tripping the single-entry ambiguity guard; both legs are
     // additionally keyed to the dump's dir (round-17 ADVICE)
     val d = graft.Engine.lastFixtureDir
-    val plain = live.filter(e => d.contains(e.getKey._1))
-    val even = live.filter(e => d.map(_ + "#even").contains(e.getKey._1))
+    val plain = live.filter { case (key, _) => d.contains(key) }
+    val even = live.filter { case (key, _) => d.map(_ + "#even").contains(key) }
     val base = plain match {
-      case e :: Nil =>
-        val sql = ivfPqSql(e.getValue, where = false)
+      case (_, model) :: Nil =>
+        val sql = ivfPqSql(model, where = false)
         Map("ann_ivfpq" -> sql, "ann_ivfpq_disk" -> sql,
-          "ann_ivfpq_where" -> ivfPqSql(e.getValue, where = true),
+          "ann_ivfpq_where" -> ivfPqSql(model, where = true),
           // delete demo: plain model, candidates restricted to the
           // surviving (even) ids — tombstoning never re-encodes
           "ann_ivfpq_delete" ->
-            ivfPqSql(e.getValue, where = false, candidatePred = " AND c.c_id % 2 = 0"))
+            ivfPqSql(model, where = false, candidatePred = " AND c.c_id % 2 = 0"))
       case _ => Map.empty[String, String]
     }
     val app = even match {
       // the appended index = evens + odds ALL encoded with the frozen
       // even-trained model (append never re-encodes), so the replay is
       // the same chain under that model over the full corpus
-      case e :: Nil => Map("ann_ivfpq_append" -> ivfPqSql(e.getValue, where = false))
+      case (_, model) :: Nil => Map("ann_ivfpq_append" -> ivfPqSql(model, where = false))
       case _        => Map.empty[String, String]
     }
     base ++ app
@@ -2757,13 +2724,10 @@ object VectorOps {
     * honest train/apply split as bpe_merges/bpe_encode.
     */
   private def pcaOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val live = pcaCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._2))
+    val live = pcaCache.live.filter { case (d, _) => graft.Engine.lastFixtureDir.contains(d) }
     live match {
-      case e :: Nil if e.getValue.components.length >= 2 =>
-        Map("embed_project" -> embedProjectSql(e.getValue))
+      case (_, pca) :: Nil if pca.components.length >= 2 =>
+        Map("embed_project" -> embedProjectSql(pca))
       case _ => Map.empty
     }
   }
@@ -2801,13 +2765,10 @@ object VectorOps {
     * at sf0.1 cell sizes) sits ~3 orders under the rounding boundary.
     */
   private def kmeansOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val live = kmeansCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped &&
-        e.getKey._3 == 8 && e.getKey._4 == 8 &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._2))
+    val live = kmeansCache.live.filter { case ((d, k, iters), _) =>
+      k == 8 && iters == 8 && graft.Engine.lastFixtureDir.contains(d) }
     live match {
-      case e :: Nil => Map("cluster_kmeans" -> clusterKmeansSql(e.getValue))
+      case (_, cent) :: Nil => Map("cluster_kmeans" -> clusterKmeansSql(cent))
       case _        => Map.empty
     }
   }
@@ -2842,12 +2803,10 @@ object VectorOps {
     * bucket-size cap, v1 < v2 dedup) + the threshold-filtered cosine.
     */
   private def dedupEmbedOracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val live = lshPlaneCache.entrySet().asScala.toList
-      .filter(e => e.getKey._2 == 6 && e.getKey._3 == 4 &&
-        graft.Engine.lastFixtureDir.contains(e.getKey._1))
+    val live = lshPlaneCache.live.filter { case ((d, h, tables), _) =>
+      h == 6 && tables == 4 && graft.Engine.lastFixtureDir.contains(d) }
     live match {
-      case e :: Nil => Map("dedup_embed" -> dedupEmbedSql(e.getValue, h = 6))
+      case (_, planes) :: Nil => Map("dedup_embed" -> dedupEmbedSql(planes, h = 6))
       case _        => Map.empty
     }
   }
@@ -2994,34 +2953,5 @@ object VectorOps {
        |  SELECT *, CAST(row_number() OVER (PARTITION BY q_id
        |    ORDER BY cos DESC, c_id) AS BIGINT) AS rank
        |  FROM scored) WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
-  }
-
-  /** Release this session's memoized in-memory vector indexes (LSH
-    * buckets, IVF assignment, PQ / IVF-PQ code tables, semantic-dedup
-    * keeper state) — see [[NearDedup.releaseMemos]] for the footprint
-    * rationale. Model caches (centroids/books/components — driver-side
-    * kilobyte arrays) and persisted-index PATH caches are left alone:
-    * they hold no executor blocks, and the disk indexes are the honest
-    * steady-state artifact.
-    */
-  private[graft] def releaseMemos(s: SparkSession): Unit = {
-    def drop[K](m: java.util.concurrent.ConcurrentHashMap[K, _],
-        owner: K => SparkSession, df: Any => org.apache.spark.sql.Dataset[_]): Unit = {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (owner(e.getKey) eq s) { df(e.getValue).unpersist(false); it.remove() }
-      }
-    }
-    drop(bucketCache, (k: (SparkSession, String, Int, Int)) => k._1,
-      v => v.asInstanceOf[LshIndex].buckets)
-    drop(assignedCache, (k: (SparkSession, String, Int)) => k._1,
-      v => v.asInstanceOf[IvfIndex].assigned)
-    drop(pqCodesCache, (k: (SparkSession, String, Int, Int)) => k._1,
-      v => v.asInstanceOf[PqIndex].codes)
-    drop(ivfPqCodesCache, (k: (SparkSession, String, Int, Int, Int, Seq[String])) => k._1,
-      v => v.asInstanceOf[IvfPqIndex].codes)
-    drop(semStateCache, (k: (SparkSession, String, Int, Double)) => k._1,
-      v => v.asInstanceOf[org.apache.spark.sql.DataFrame])
   }
 }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Distributed WordPiece tokenizer training + greedy encode (round 17 —
   * the OTHER tokenizer every model release ships, next to
@@ -277,16 +277,14 @@ object WordPiece {
     * contract. Holds merges AND the tagged vocab (vocabOf's base-symbol
     * collect runs once with it).
     */
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[Merge], Seq[String])]()
+  private val modelCache = Memo.slot[String, (Seq[Merge], Seq[String])]("WordPiece.modelCache")
 
   def trainedModel(s: SparkSession, dir: String): (Seq[Merge], Seq[String]) = {
-    modelCache.keySet.removeIf(k0 => k0._1.sparkContext.isStopped)
-    modelCache.computeIfAbsent((s, dir), _ => {
+    modelCache(s, dir) {
       val docs = Tables(s, dir).documents
       val ms = train(docs, K)
       (ms, vocabOf(docs, ms))
-    })
+    }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -450,20 +448,16 @@ object WordPiece {
     * it — `tokenizer_budget` reconstructs the half-budget vocab from
     * the merge ORDER, which the vocab alone doesn't carry. */
   private[llm] def liveFullFor(dir: String): Option[(Seq[Merge], Seq[String])] = {
-    import scala.jdk.CollectionConverters._
-    modelCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped && e.getKey._2 == dir) match {
-      case e :: Nil => Some(e.getValue)
+    modelCache.live.filter(_._1 == dir) match {
+      case (_, model) :: Nil => Some(model)
       case _        => None
     }
   }
 
   /** The live tagged vocab for `dir` if this JVM trained it. */
   private[llm] def liveVocabFor(dir: String): Option[Seq[String]] = {
-    import scala.jdk.CollectionConverters._
-    modelCache.entrySet().asScala.toList
-      .filter(e => !e.getKey._1.sparkContext.isStopped && e.getKey._2 == dir) match {
-      case e :: Nil => Some(e.getValue._2)
+    modelCache.live.filter(_._1 == dir) match {
+      case (_, (_, vocab)) :: Nil => Some(vocab)
       case _        => None
     }
   }

@@ -4,7 +4,7 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Avro wire-format encode/decode (SURVEY.md §2.1 "Avro encode/decode +
   * registry"; reference `README.md:813-816` uses Confluent Avro
@@ -92,8 +92,7 @@ object AvroCodec {
     }
   }
 
-  private val regCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, (Int, org.apache.spark.broadcast.Broadcast[Map[Int, String]])]()
+  private val regCache = Memo.slot[Unit, (Int, org.apache.spark.broadcast.Broadcast[Map[Int, String]])]("AvroCodec.regCache")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // serialize → Confluent-framed binary wire form (magic + schema id +
@@ -106,15 +105,14 @@ object AvroCodec {
       // one registry + one broadcast snapshot per SESSION (evicting
       // stopped sessions): a fresh temp dir + broadcast per invocation
       // littered /tmp and the driver block manager across a long run
-      regCache.keySet.removeIf(k => k.sparkContext.isStopped)
-      val (schemaId, byId) = regCache.computeIfAbsent(s, _ => {
+      val (schemaId, byId) = regCache(s, ()) {
         val regDir = graft.TempDirs.scratch("graft_registry")
         val reg = SchemaRegistry.open(regDir.toString)
         val id = reg.register("nation-value", schemaJson)
         // executors resolve writer schemas from a broadcast registry
         // snapshot — the cluster-shaped read path (no driver round-trips)
         (id, s.sparkContext.broadcast(reg.schemasById))
-      })
+      }
       Tables(s, dir).nation
         .select("n_nationkey", "n_name", "n_regionkey")
         .as[(Int, String, Int)]

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Z-order (Morton-curve) data clustering — the multi-dimensional
   * layout tool lakehouse tables use when queries filter on MORE THAN
@@ -70,14 +70,14 @@ object ZOrder {
       .write.mode("overwrite").parquet(path)
   }
 
-  private val zPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val zPaths = Memo.shared[String, String]("ZOrder.zPaths")
 
   /** Memoized per-corpus z-ordered copy of lineitem on
     * (l_partkey, l_suppkey) — the demo artifact, built once (marker
     * convention) like every persisted index.
     */
   private[graft] def zOrderedLineitem(s: SparkSession, dir: String): String =
-    zPaths.computeIfAbsent(dir, _ => {
+    zPaths(dir) {
       val key = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
       val path = s"${sys.props("java.io.tmpdir")}/graft_zorder_$key"
@@ -89,7 +89,7 @@ object ZOrder {
         fs.create(done, true).close()
       }
       path
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // a two-dimensional range query served from the z-ordered copy:

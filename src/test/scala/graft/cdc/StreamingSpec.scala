@@ -225,6 +225,34 @@ class StreamingSpec extends SparkSpec {
       "post-commit repair must finish deleting flat files and drop the marker")
   }
 
+  test("foldBatch restores the caller's job description on every path, exceptions included") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    def desc = sc.getLocalProperty("spark.job.description")
+    def fold(evs: Seq[Ev], statePath: String, ordering: String = "scn"): Unit =
+      Stream.foldBatch(evs.toDF(), Seq("id"), Seq(ordering), statePath, stateBuckets = 8)
+    val prior = desc
+    try {
+      for (callerDesc <- Seq(null, "caller's own job")) {
+        sc.setJobDescription(callerDesc)
+        // bootstrap branch: no state root yet
+        val boot = tmp("desc_boot").resolve("t").toString
+        fold(Seq(Ev(1L, 1L, "c", 1.0)), boot)
+        assert(desc == callerDesc, "bootstrap branch")
+        // flat branch: a legacy flat state migrates to buckets
+        val flat = tmp("desc_flat").resolve("t").toString
+        Seq(Ev(1L, 1L, "c", 1.0)).toDF().write.parquet(flat)
+        fold(Seq(Ev(2L, 1L, "u", 2.0)), flat)
+        assert(desc == callerDesc, "flat branch")
+        // throwing branch: the fold fails after the probe job ran
+        intercept[org.apache.spark.sql.AnalysisException](
+          fold(Seq(Ev(3L, 1L, "u", 3.0)), boot, ordering = "no_such_column"))
+        assert(desc == callerDesc, "throwing branch")
+      }
+    } finally sc.setJobDescription(prior)
+  }
+
   test("bucket-count mismatch fails loudly instead of corrupting state") {
     val s = spark
     import s.implicits._

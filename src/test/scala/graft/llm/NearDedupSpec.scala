@@ -92,6 +92,30 @@ class NearDedupSpec extends SparkSpec {
       Map("a" -> "a", "b" -> "a", "c" -> "a"))
   }
 
+  test("connected components: a caller-persisted pair list stays cached; an unpersisted one leaves no cache entry") {
+    val s = spark
+    import s.implicits._
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    def projection(pairs: org.apache.spark.sql.DataFrame) =
+      pairs.select(col("doc1").as("a"), col("doc2").as("b"))
+    // driverEdgeLimit = 0 takes the distributed loop, the default the
+    // driver union-find path
+    for (limit <- Seq(100000, 0)) {
+      val owned = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc1", "doc2").persist()
+      try {
+        val got = NearDedup.connectedComponents(owned, driverEdgeLimit = limit,
+          callerPersisted = true).collect()
+        assert(got.length == 5)
+        assert(owned.storageLevel != none, s"limit=$limit: the caller's cache entry was evicted")
+      } finally owned.unpersist(true)
+      val plain = Seq((41L, 42L), (42L, 43L)).toDF("doc1", "doc2")
+      assert(NearDedup.connectedComponents(plain, driverEdgeLimit = limit).collect().length == 3)
+      assert(projection(plain).storageLevel == none,
+        s"limit=$limit: the internal persist of an unpersisted pair list leaked")
+      assert(plain.storageLevel == none)
+    }
+  }
+
   test("dedup_apply ≡ corpus minus non-canonical cluster members; exactly one survivor per cluster") {
     val s = spark
     import s.implicits._

@@ -468,12 +468,18 @@ class PlanHygieneSpec extends SparkSpec {
     // LITERAL; since r18 dsirScore's global (r,t) totals come from an
     // unpartitioned window over the ≤1024-row bucket-counts table (a
     // third corpus pass removed). Pin: any Window node's input must be
-    // the bounded counts table (b, cr, ct), never per-doc columns.
-    val da = planOf("dsir_select_approx").split("== Physical Plan ==").last
+    // the bounded counts table (b, cr, ct), never per-doc columns. The
+    // formatted explain prints each node as "(N) Window" followed by its
+    // "Input [k]: [...]" line; the pin must match at least one Window,
+    // or it would pass vacuously.
+    val da = SparkEntry.queries("dsir_select_approx")(spark, sf("sf0.001"))
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     val daWindowInputs = da.linesIterator.toSeq.sliding(2).collect {
       case Seq(a, b) if a.matches("\\(\\d+\\) Window.*") => b
     }.toSeq
-    assert(daWindowInputs.forall(in => !in.contains("doc_id") && !in.contains("text")),
+    assert(daWindowInputs.nonEmpty, s"no Window node matched:\n$da")
+    assert(daWindowInputs.forall(in => in.startsWith("Input") &&
+        !in.contains("doc_id") && !in.contains("text")),
       s"dsir_select_approx window must stay on the bounded counts table:\n${daWindowInputs.mkString("\n")}")
     assert(!da.contains("SortMergeJoin") && !da.contains("CartesianProduct"), da)
 
