@@ -60,7 +60,7 @@ object CdcPipeline {
   ): Handle = {
     // 1. snapshot phase: consistent batch read → op='r' rows → state,
     //    written directly in materialize's bucketed layout so the stream
-    //    phase starts incremental (no flat-state migration batch).
+    //    phase starts incremental (foldBatch rejects a flat state).
     //
     //    Snapshot-at-SCN consistency is the SOURCE's contract (the
     //    reference takes a flashback-consistent read AS OF `snapshotScn`,

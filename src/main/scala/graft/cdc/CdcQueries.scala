@@ -179,8 +179,8 @@ object CdcQueries {
       // scale surface (a cluster reads the real channel). r19: the spread
       // inside chunkStates leaves the reads aggregate at 32 partitions;
       // written as-is that is 32 spool files → one extra near-empty
-      // micro-batch paying the full ~1.3 s fold fixed cost (measured,
-      // SwsProfile). One file keeps the r18 batch slicing.
+      // micro-batch paying the full ~1.3 s fold fixed cost (measured;
+      // OPTIMIZATION_r19.md §2). One file keeps the r18 batch slicing.
       reads.select(cols.map(col): _*).repartition(1).write.mode("append").parquet(in)
       val wire = s.readStream
         .schema(feed.select(cols.map(col): _*).schema)

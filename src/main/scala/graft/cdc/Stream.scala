@@ -62,32 +62,7 @@ object Stream {
       if (!fs.exists(dst)) fs.rename(st.getPath, dst) // crashed mid-swap: roll back
       else fs.delete(st.getPath, true)                // crashed post-swap: drop leftover
     }
-    // Flat→bucketed migration repair. A crash can leave flat *.parquet
-    // files AND state_bucket=N dirs side by side — a layout Spark's
-    // partition discovery rejects ("conflicting directory structures"),
-    // which unrepaired would brick every subsequent batch. The MigratedMark
-    // file is the migration's commit point:
-    //   mixed, no mark  → crashed BEFORE commit: the bucket dirs are the
-    //                     incomplete write — drop them, keep the intact
-    //                     flat state, and the re-run batch redoes the
-    //                     migration from scratch;
-    //   mixed, mark     → crashed DURING flat cleanup: the buckets are
-    //                     complete — finish deleting the flat files;
-    //   mark, no flat   → crashed before dropping the mark: drop it.
-    val mark = new org.apache.hadoop.fs.Path(root, MigratedMark)
-    val flatFiles = fs.listStatus(root)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (flatFiles.nonEmpty && fs.exists(mark))
-      flatFiles.foreach(st => fs.delete(st.getPath, false))
-    else if (flatFiles.nonEmpty)
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
-        .foreach(st => fs.delete(st.getPath, true))
-    if (fs.exists(mark)) fs.delete(mark, false)
   }
-
-  /** Commit marker of the flat→bucketed state migration (see repair). */
-  private val MigratedMark = "_MIGRATED"
 
   /** Bucket-count metadata file: pmod(key, N) only addresses rows written
     * with the SAME N, so a writer running with a different `stateBuckets`
@@ -189,14 +164,24 @@ object Stream {
     val root = new org.apache.hadoop.fs.Path(statePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     repair(fs, root)
-    if (fs.exists(root)) checkOrRecordBuckets(fs, root, stateBuckets)
+    val rootExisted = fs.exists(root)
+    if (rootExisted) {
+      // a flat (unbucketed) state is not a layout this fold maintains:
+      // the steady-state path would ignore its rows, and the first bucket
+      // written beside them would break partition discovery
+      val flat = fs.listStatus(root).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      require(flat.isEmpty,
+        s"state at $root has top-level parquet files (${flat.take(3).mkString(", ")}): " +
+          "an unbucketed state is not supported — write the bootstrap state with Stream.writeState")
+      checkOrRecordBuckets(fs, root, stateBuckets)
+    }
     val bucketExpr = pmod(xxhash64(keys.map(col): _*), lit(stateBuckets)).cast("int")
     // the batch input is scanned several times on a steady-state batch
     // (affected-bucket ids, purge watermark, then the fold) — cache it so
     // JSON parsing is paid once. A BOOTSTRAP batch (no state root, no
     // retention) scans the delta exactly once, so the cache write would
     // be pure overhead (r19).
-    val multiScan = fs.exists(root) || tombstoneRetention.nonEmpty
+    val multiScan = rootExisted || tombstoneRetention.nonEmpty
     val delta =
       if (multiScan) batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else batch
@@ -205,22 +190,16 @@ object Stream {
     // is restored on every path, exceptions included
     val callerDesc = spark.sparkContext.getLocalProperty("spark.job.description")
     try {
-      // flat legacy/bootstrap layout (top-level parquet files) → fold the
-      // whole state once and emerge bucketed; steady state touches only
-      // the delta's buckets. The collect is ≤ stateBuckets ints — bounded
-      // by configuration, not data.
-      val rootExisted = fs.exists(root)
-      val flat = rootExisted &&
-        fs.listStatus(root).exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      // affected-bucket ids. None = the BOOTSTRAP batch (no state root at
+      // affected-bucket ids: steady state touches only the delta's
+      // buckets, and the collect is ≤ stateBuckets ints — bounded by
+      // configuration, not data. None = the BOOTSTRAP batch (no state root at
       // all): there is no prev state to prune to, so the distinct+collect
       // job over the whole batch buys nothing — the rename list is
       // derived by LISTING the tmp write output instead (r19; the
       // distinct job was ~30% of a bootstrap batch's addBatch time).
       spark.sparkContext.setJobDescription("foldBatch: affected buckets")
       val affected: Option[Seq[Int]] =
-        if (flat) Some(0 until stateBuckets)
-        else if (!rootExisted) None
+        if (!rootExisted) None
         else Some(delta.select(bucketExpr.as("b")).distinct().collect().map(_.getInt(0)).toSeq)
       val existing = affected.getOrElse(Nil).filter(n => fs.exists(bucketDir(root, n)))
       // previous state rows are already latest-per-key; union keeps
@@ -228,9 +207,7 @@ object Stream {
       // mergeSchema: bucket files may carry different schema VERSIONS
       // after an evolution (only rewritten buckets widen).
       val prev: Option[DataFrame] =
-        if (flat)
-          Some(spark.read.option("mergeSchema", "true").parquet(statePath))
-        else if (existing.nonEmpty)
+        if (existing.nonEmpty)
           Some(spark.read.option("mergeSchema", "true")
             .parquet(existing.map(n => bucketDir(root, n).toString): _*))
         else None
@@ -294,17 +271,6 @@ object Stream {
         if (fs.exists(src)) mustRename(src, dst) // absent src = bucket fully deleted
         if (fs.exists(old)) fs.delete(old, true)
       }
-      if (flat) {
-        // migration commit point: mark FIRST, then clear the flat files
-        // (only *.parquet — never the mark itself), then drop the mark;
-        // repair() resolves a crash in any of these windows
-        val mark = new org.apache.hadoop.fs.Path(root, MigratedMark)
-        fs.create(mark, true).close()
-        fs.listStatus(root)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .foreach(st => fs.delete(st.getPath, false))
-        fs.delete(mark, false)
-      }
       fs.delete(tmpRoot, true)
       // record the layout's bucket count even when THIS batch created
       // the layout (the entry check only runs when root pre-exists; a
@@ -344,8 +310,8 @@ object Stream {
     * rename(tmp→dst) + delete(.old_N), repaired idempotently at batch
     * start — combined with applyChanges' last-write-wins idempotence
     * under redelivery, a crash at ANY point re-runs to the same state.
-    * A flat (unbucketed) bootstrap state is migrated in one O(|state|)
-    * rewrite on the first batch. Absent state = directory absence,
+    * A flat (unbucketed) state fails the batch: bootstrap through
+    * [[writeState]]. Absent state = directory absence,
     * checked explicitly — any OTHER read error fails the batch loudly
     * instead of silently resetting state.
     */

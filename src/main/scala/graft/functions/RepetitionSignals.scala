@@ -34,8 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * this zero-shuffle scan; a 100 TB corpus never needs to shuffle its
   * n-gram multiset to learn per-doc duplication rates. Interpreted
   * HOF folds (`aggregate`/`transform`) were probed too and cost as
-  * much as the shuffle (tools/RepProbe) — per-element expression-tree
-  * eval is ~50× this single `eval` walking primitive long arrays.
+  * much as the shuffle (10.3 s vs 12.7 s at 25×, BASELINE.md "Round 15:
+  * text_repetition_full") — per-element expression-tree eval is ~50×
+  * this single `eval` walking primitive long arrays.
   *
   * Cross-engine contract (mirrored verbatim in the DuckDB oracle, the
   * `source_overlap` 56-bit idiom): a unit's identity is a base-31

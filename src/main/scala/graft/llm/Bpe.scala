@@ -77,25 +77,16 @@ object Bpe {
     *    (k map-side-combinable pair aggregations + HOF re-segmentation,
     *    one top-1 row to the driver per iteration).
     */
-  /** Which path [[train]] took, cumulatively (observability for the
-    * threshold-cap discipline — reported by tools.BpeProbe and the
-    * BASELINE.md slope rows).
-    */
-  val localPathCount = new java.util.concurrent.atomic.AtomicInteger(0)
-  val distPathCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def train(docs: DataFrame, k: Int, minPairCount: Long = 2,
       maxLocalVocab: Long = 1L << 16): Seq[Merge] = {
     val words = wordTable(docs).persist()
     val n = words.count()
     if (n <= maxLocalVocab) {
-      localPathCount.incrementAndGet()
       val tbl = words.collect().map(r =>
         (r.getSeq[String](0).toArray, r.getLong(1)))
       words.unpersist()
       trainLocal(tbl, k, minPairCount)
     } else {
-      distPathCount.incrementAndGet()
       trainDistributed(words, k, minPairCount)
     }
   }
@@ -826,7 +817,7 @@ object Bpe {
     * mirrors [[encodeDocs]]: distinct-word vocab, per-word fold, per-doc
     * ordered flatten, empty-doc restore. `string_split(w, '')` splits on
     * code points with no trailing empty, matching Spark's `split(w, "")`
-    * (pinned by tools/SplitProbe: ASCII, astral, control chars).
+    * (pinned by BpeSpec: ASCII, astral, control chars, empty, é).
     */
   private def wordEncodeCtes: String =
     // NOTE: this text is re-embedded in OUTER .stripMargin templates —

@@ -991,9 +991,10 @@ object Curation {
     // driver suite (12% of the board), 0.73× linear at 25×; hashing
     // the gram key (the source_overlap idiom) only got it to 0.46×
     // because the exchange itself remained, and interpreted HOF folds
-    // cost as much as the shuffle (tools/RepProbe probes all four
-    // shapes). The 47-bit word-hash chain and capped unit lengths are
-    // mirrored verbatim in the oracle so a collision cannot diverge.
+    // cost as much as the shuffle (all four shapes measured at 25×,
+    // BASELINE.md "Round 15: text_repetition_full"). The 47-bit
+    // word-hash chain and capped unit lengths are mirrored verbatim in
+    // the oracle so a collision cannot diverge.
     // Missing signals (doc shorter than n words) are NULL sub-structs
     // and pass their gate; divisions are single int/int IEEE ops
     // (bitwise-identical cross-engine), n_chars nullif-guarded.

@@ -810,7 +810,7 @@ object Multimodal {
     * transcodes for those).
     */
   private[llm] def dHash64(img: java.awt.image.BufferedImage): Long = {
-    val cells = dHashCellsForProbe(img)
+    val cells = dHashCells(img)
     val gw = 9
     var bits = 0L; var i = 0
     while (i < 64) {
@@ -821,11 +821,12 @@ object Multimodal {
     bits
   }
 
-  /** The box-filter cell means of [[dHash64]], exposed for the float-
-    * parity probe (tools.DHashProbe) — extraction only, no behavior
-    * change.
+  /** The box-filter cell means of [[dHash64]]: a 9×8 grid, row-major.
+    * The getRGB-vs-raw-sample diagnosis behind the read below (two
+    * coincidental hamming-3 pairs at sf0.1) is recorded in BASELINE.md,
+    * "Round 15 (cont.): mm_dedup graduates".
     */
-  private[graft] def dHashCellsForProbe(img: java.awt.image.BufferedImage): Array[Double] = {
+  private def dHashCells(img: java.awt.image.BufferedImage): Array[Double] = {
     val (w, h) = (img.getWidth, img.getHeight)
     val (gw, gh) = (9, 8)
     // RAW samples, not getRGB: on TYPE_BYTE_GRAY getRGB runs the awt

@@ -236,7 +236,6 @@ object NearDedup {
           val ra = find(a); val rb = find(b)
           if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
         }
-        lastCcRounds.set(1)
         val session = pairs.sparkSession
         import session.implicits._
         // Cast back to the input id type so both paths return the same
@@ -326,7 +325,6 @@ object NearDedup {
         frontier = newFrontier
         converged = changed == 0
       }
-      lastCcRounds.set(round)
       // eagerly materialize the (small) result so every loop cache can be
       // released NOW — returning a plan over the persisted `labels` would
       // leak one cache entry per invocation with no way to unpersist it
@@ -342,12 +340,6 @@ object NearDedup {
       if (releaseFwd) fwd.unpersist()
     }
   }
-
-  /** Rounds the last [[connectedComponents]] run took (observability —
-    * the loop's cost is rounds × fixed job overhead, so this is the
-    * number to look at when the query's wall time moves).
-    */
-  val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Incremental near-dup admission — the streaming-corpus shape: a new
     * batch of docs is admitted against the banded-signature STATE of the

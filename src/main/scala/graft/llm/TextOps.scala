@@ -95,7 +95,7 @@ object TextOps {
     * density_e9 = half-up(quality_e6·1000/n_tokens), the re-basing the
     * contract comment above proposed. Under the guard the whole key is
     * total for any ≤10 MB doc: no silent wrap, no engine throw (Spark 4
-    * runs ANSI-on and THROWS on BIGINT overflow — tools/OverflowProbe —
+    * runs ANSI-on and THROWS on BIGINT overflow — OverflowContractSpec —
     * so an ungated corpus previously crashed the query in BOTH engines
     * rather than diverging). In-contract docs take the exact branch
     * unchanged, so all fixture outputs are bit-identical; both engines

@@ -814,8 +814,9 @@ object Queries {
       // was silently defeated — Catalyst COLLAPSED the two-level
       // min/max-over-groupBy into an independent min/max-over-events
       // branch with its own scan and exchange, so the executed plan
-      // still read events twice and joined back (the r19 ExecPlan dump
-      // showed 2 FileScans + a BroadcastHashJoin). Gap-fill is instead
+      // still read events twice and joined back (the r19 executed plan
+      // showed 2 FileScans + a BroadcastHashJoin; OPTIMIZATION_r19.md
+      // §11). Gap-fill is instead
       // a pure UNFOLD of the aggregate: each (user, bucket) row emits
       // the dense hours [bucket, lead(bucket) − 1h] (the last row emits
       // itself), n/v belong to the generating hour only, and LOCF is

@@ -5,10 +5,10 @@ import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 
-/** Dev probe: attribute HintErrorLogger warnings to query ids — builds
-  * every declared query's optimized plan (hint resolution happens at
-  * analysis/optimization, no execution needed) with a capturing log4j
-  * appender on the hint logger.
+/** Dev probe: attribute HintErrorLogger, CacheManager and WindowExec
+  * ("No Partition Defined for Window") warnings to query ids — runs
+  * every declared query with a capturing log4j appender on those
+  * loggers.
   *
   * Usage: sbt "runMain graft.tools.HintAudit <sfDir>"
   */
@@ -34,7 +34,8 @@ object HintAudit {
     val cfg = ctx.getConfiguration
     for (lg <- Seq(
         "org.apache.spark.sql.catalyst.analysis.HintErrorLogger",
-        "org.apache.spark.sql.execution.CacheManager")) {
+        "org.apache.spark.sql.execution.CacheManager",
+        "org.apache.spark.sql.execution.window.WindowExec")) {
       cfg.addLoggerAppender(ctx.getLogger(lg), appender)
       ctx.getLogger(lg).setLevel(Level.WARN)
     }

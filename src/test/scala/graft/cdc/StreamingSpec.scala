@@ -190,39 +190,23 @@ class StreamingSpec extends SparkSpec {
     assert(!oldDir.exists(), "post-swap leftover .old_ dir must be deleted")
   }
 
-  test("flat→bucketed migration crash repair handles both sides of the commit point") {
+  test("a flat unbucketed state root fails the batch, pointing to Stream.writeState") {
     val s = spark
     import s.implicits._
     val (in, state, chk) = (tmp("in5"), tmp("state5"), tmp("chk5"))
     val statePath = state.resolve("t").toString
-    // bootstrap a LEGACY FLAT state: top-level part-*.parquet files
-    val first = (0 until 30).map(i => Ev(i.toLong, i.toLong, "c", i.toDouble))
-    first.toDF().write.parquet(statePath)
+    // top-level part-*.parquet files: the layout of a plain df.write.parquet
+    Seq(Ev(1L, 1L, "c", 1.0)).toDF().write.parquet(statePath)
     val root = new java.io.File(statePath)
-    def dirOf(n: String) = new java.io.File(root, n)
-    // pre-commit crash leftovers: a stray partial bucket dir WITHOUT the
-    // _MIGRATED marker (this mixed layout would otherwise fail partition
-    // discovery with 'conflicting directory structures' forever)
-    val stray = dirOf("state_bucket=3"); stray.mkdirs()
-    java.nio.file.Files.write(stray.toPath.resolve("junk.parquet"), Array[Byte](9, 9))
-    val touched = Seq(Ev(1000L, 5L, "u", 99.0))
-    writeBatchJson(in, touched, "a-0.json")
-    val q1 = startMaterialize(in, state, chk)
-    q1.awaitTermination()
-    assert(readState(statePath) == batchState(first ++ touched))
-    assert(!root.listFiles().exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "migration must clear the flat files")
-    // post-commit crash leftovers: a flat file + the marker beside LIVE
-    // buckets — repair must finish the cleanup, not re-migrate
-    java.nio.file.Files.write(root.toPath.resolve("zzz-leftover.parquet"), Array[Byte](1))
-    java.nio.file.Files.write(root.toPath.resolve("_MIGRATED"), Array.emptyByteArray)
-    val touched2 = Seq(Ev(1001L, 7L, "u", 77.0))
-    writeBatchJson(in, touched2, "b-0.json")
-    val q2 = startMaterialize(in, state, chk)
-    q2.awaitTermination()
-    assert(readState(statePath) == batchState(first ++ touched ++ touched2))
-    assert(!dirOf("zzz-leftover.parquet").exists() && !dirOf("_MIGRATED").exists(),
-      "post-commit repair must finish deleting flat files and drop the marker")
+    val before = root.list().toSet
+    writeBatchJson(in, Seq(Ev(2L, 2L, "c", 2.0)), "a-0.json")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      startMaterialize(in, state, chk).awaitTermination()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("Stream.writeState")), e.getMessage)
+    assert(root.list().toSet == before, "a rejected batch must leave the root as it found it")
   }
 
   test("foldBatch restores the caller's job description on every path, exceptions included") {
@@ -240,11 +224,9 @@ class StreamingSpec extends SparkSpec {
         val boot = tmp("desc_boot").resolve("t").toString
         fold(Seq(Ev(1L, 1L, "c", 1.0)), boot)
         assert(desc == callerDesc, "bootstrap branch")
-        // flat branch: a legacy flat state migrates to buckets
-        val flat = tmp("desc_flat").resolve("t").toString
-        Seq(Ev(1L, 1L, "c", 1.0)).toDF().write.parquet(flat)
-        fold(Seq(Ev(2L, 1L, "u", 2.0)), flat)
-        assert(desc == callerDesc, "flat branch")
+        // steady-state branch: the root now holds buckets
+        fold(Seq(Ev(2L, 1L, "u", 2.0)), boot)
+        assert(desc == callerDesc, "steady-state branch")
         // throwing branch: the fold fails after the probe job ran
         intercept[org.apache.spark.sql.AnalysisException](
           fold(Seq(Ev(3L, 1L, "u", 3.0)), boot, ordering = "no_such_column"))

@@ -583,4 +583,14 @@ class BpeSpec extends SparkSpec {
           s"unflagged shard ${(t._1, t._2)} must be sha-identical in both releases")
       }
   }
+
+  test("split(w, \"\") yields one element per code point with no trailing empty, as the oracle's string_split(w, '')") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, split}
+    val astral = new String(Character.toChars(0x1D54F)) // one code point, two UTF-16 units
+    val words = Seq("abc", "a" + astral + "b", "x\ny", "", "\u00e9")
+    val got = words.toDF("w").select(split(col("w"), "")).collect().map(_.getSeq[String](0)).toSeq
+    assert(got == Seq(Seq("a", "b", "c"), Seq("a", astral, "b"), Seq("x", "\n", "y"), Seq(""), Seq("\u00e9")))
+  }
 }

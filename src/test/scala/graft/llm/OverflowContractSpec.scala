@@ -72,4 +72,14 @@ class OverflowContractSpec extends SparkSpec {
         s"doc $id in-contract key changed")
     }
   }
+
+  test("BIGINT overflow throws under the engine's session defaults (ANSI on), never wraps") {
+    // Engine.session sets no ANSI conf, so the engine runs at Spark 4's
+    // default, as this suite's session does
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val e = intercept[Exception](
+      spark.range(1).select((lit(Long.MaxValue) * lit(2L)).as("x")).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+  }
 }

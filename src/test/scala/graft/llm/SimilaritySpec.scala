@@ -399,7 +399,8 @@ class SimilaritySpec extends SparkSpec {
     }
     val pure = recallOf(VectorOps.ivfPqTopK(emb, qids, k, rerank = 1, index = idx))
     val rr = recallOf(VectorOps.ivfPqTopK(emb, qids, k, rerank = 4, index = idx))
-    // measured at sf0.001 (IvfPqProbe): pure 0.45, re-ranked 0.775 —
+    // measured at sf0.001 (BASELINE.md "Round 14 (cont.): IVF-PQ composed
+    // index"): pure 0.45, re-ranked 0.775 —
     // bounds leave margin but stay far above random (k/n ≈ 0.02)
     assert(pure > 0.3, s"pure ADC recall $pure")
     assert(rr >= pure, s"re-rank $rr must not lose to pure ADC $pure")
