@@ -25,9 +25,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    registry never pins a dead session's plans in a JVM that cycles
   *    sessions (repeated test suites).
   *
-  * Fixture dirs are immutable by contract, so keys omit a snapshot
-  * version: rewriting the parquet under a dir within one live session
-  * keeps serving the memo. Production would key by (path, commit).
+  * A key names the version of the data it was built from. Table
+  * metadata (`Engine.tableSchema`) keys by the file status of the
+  * table: the (path, length, mtime) of each visible leaf file, read with
+  * `listStatus`, so a rewritten table builds afresh. The per-corpus
+  * artifacts key by fixture dir alone, because fixture dirs are
+  * immutable by contract; a memo over mutable data keys by file status.
   */
 object Memo {
 

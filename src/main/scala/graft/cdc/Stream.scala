@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
 
 /** Streaming side of the CDC engine (SURVEY.md §2.10) — Structured
   * Streaming equivalents of the reference's OLR→Debezium→Kafka→sink path
@@ -57,6 +57,16 @@ object Stream {
       root: org.apache.hadoop.fs.Path): Unit = {
     if (!fs.exists(root)) return
     fs.delete(new org.apache.hadoop.fs.Path(root, ".delta_tmp"), true)
+    // schema replace (recordSchema) cut before its rename: a complete
+    // tmp beside no schema file is finished; a partial one, or one beside
+    // the old file, is dropped and the re-run batch writes it again
+    val schemaTmp = new org.apache.hadoop.fs.Path(root, SchemaTmp)
+    val meta = new org.apache.hadoop.fs.Path(root, SchemaMeta)
+    if (fs.exists(schemaTmp)) {
+      if (!fs.exists(meta) && scala.util.Try(schemaAt(fs, schemaTmp)).toOption.flatten.nonEmpty)
+        require(fs.rename(schemaTmp, meta), s"rename $schemaTmp -> $meta failed; failing the batch")
+      else fs.delete(schemaTmp, false)
+    }
     fs.listStatus(root).filter(_.getPath.getName.startsWith(".old_")).foreach { st =>
       val dst = bucketDir(root, st.getPath.getName.stripPrefix(".old_"))
       if (!fs.exists(dst)) fs.rename(st.getPath, dst) // crashed mid-swap: roll back
@@ -104,6 +114,60 @@ object Stream {
     }
   }
 
+  /** Schema metadata file: the state's data schema (no `state_bucket`),
+    * as JSON in the all-nullable form parquet inference returns. It is
+    * recorded at commit and widened by the fold before a bucket swap that
+    * adds a column — the sink table's schema is catalog metadata that
+    * `auto.evolve` ALTERs (reference `README.md:839`), not something every
+    * read re-derives. Reading with it starts no job, where inference with
+    * `mergeSchema` starts one over every bucket footer. A superset schema
+    * over narrower bucket files reads nulls in the missing columns, which
+    * is what `mergeSchema` returned. A root without the file predates it:
+    * reads infer, and the next fold records it.
+    */
+  private val SchemaMeta = "_state_schema"
+  private val SchemaTmp = s".$SchemaMeta.tmp"
+
+  private def recordedSchema(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[StructType] =
+    schemaAt(fs, new org.apache.hadoop.fs.Path(root, SchemaMeta))
+
+  private def schemaAt(fs: org.apache.hadoop.fs.FileSystem,
+      file: org.apache.hadoop.fs.Path): Option[StructType] = {
+    val in =
+      try fs.open(file)
+      catch { case _: java.io.FileNotFoundException => return None }
+    try Some(DataType.fromJson(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      .asInstanceOf[StructType])
+    finally in.close()
+  }
+
+  /** Replaces the schema file: a complete tmp, then delete and rename
+    * (a rename onto an existing file fails on some file systems);
+    * [[repair]] finishes a replace cut between the two.
+    */
+  private def recordSchema(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, schema: StructType): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(root, SchemaTmp)
+    val meta = new org.apache.hadoop.fs.Path(root, SchemaMeta)
+    val out = fs.create(tmp, true)
+    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+    fs.delete(meta, false)
+    require(fs.rename(tmp, meta), s"rename $tmp -> $meta failed; failing the batch")
+  }
+
+  /** `t` with every field, element and value nullable. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType  => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType    => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case o             => o
+  }
+
+  /** The data schema of `df` as the state records it. */
+  private def dataSchema(df: DataFrame): StructType =
+    nullable(StructType(df.schema.filterNot(_.name == BucketCol))).asInstanceOf[StructType]
+
   /** Write a full state table in the bucketed layout `materialize`
     * maintains incrementally (bootstrap/snapshot path).
     */
@@ -113,9 +177,9 @@ object Stream {
         pmod(xxhash64(keys.map(col): _*), lit(stateBuckets)).cast("int"))
       .write.mode("overwrite").partitionBy(BucketCol).parquet(statePath)
     val root = new org.apache.hadoop.fs.Path(statePath)
-    checkOrRecordBuckets(
-      root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration),
-      root, stateBuckets)
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    recordSchema(fs, root, dataSchema(df))
+    checkOrRecordBuckets(fs, root, stateBuckets)
   }
 
   /** One micro-batch of the bucketed state fold — the shared engine of
@@ -132,10 +196,12 @@ object Stream {
     * old state rows read as null in the new column, exactly how the
     * reference's JDBC sink ALTERs the table and backfills. Only the
     * delta's buckets are rewritten widened; untouched buckets keep their
-    * old file schema until next touched, and state reads merge schemas
-    * (the reason every state read here and in [[readCurrentState]] sets
-    * `mergeSchema`). Type CHANGES are not auto-evolved — the union fails
-    * loudly, matching the sink connector, which only ever adds columns.
+    * old file schema until next touched. The fold widens the recorded
+    * state schema ([[SchemaMeta]]) before the swap, and every state read
+    * here and in [[readCurrentState]] passes it, so narrower bucket files
+    * read nulls in the added columns. Type CHANGES are not auto-evolved —
+    * the union or the schema widening fails loudly, matching the sink
+    * connector, which only ever adds columns.
     *
     * Tombstone retention (`tombstoneRetention`): when set, op='d' rows
     * whose `ordering.head` (must cast to long, e.g. scn) is older than
@@ -175,6 +241,16 @@ object Stream {
           "an unbucketed state is not supported — write the bootstrap state with Stream.writeState")
       checkOrRecordBuckets(fs, root, stateBuckets)
     }
+    // the state's schema before this batch: the recorded file or, for a
+    // root written before the file existed, one mergeSchema inference
+    // (recorded below); None while the root holds no bucket
+    val recorded = if (rootExisted) recordedSchema(fs, root) else None
+    val before = recorded.orElse {
+      val hasBuckets = rootExisted &&
+        fs.listStatus(root).exists(_.getPath.getName.startsWith(s"$BucketCol="))
+      if (hasBuckets) Some(dataSchema(spark.read.option("mergeSchema", "true").parquet(statePath)))
+      else None
+    }
     val bucketExpr = pmod(xxhash64(keys.map(col): _*), lit(stateBuckets)).cast("int")
     // the batch input is scanned several times on a steady-state batch
     // (affected-bucket ids, purge watermark, then the fold) — cache it so
@@ -204,11 +280,12 @@ object Stream {
       val existing = affected.getOrElse(Nil).filter(n => fs.exists(bucketDir(root, n)))
       // previous state rows are already latest-per-key; union keeps
       // their (scn, op) so ordering vs the new delta stays correct.
-      // mergeSchema: bucket files may carry different schema VERSIONS
-      // after an evolution (only rewritten buckets widen).
+      // Read with the state's schema: bucket files may carry different
+      // schema VERSIONS after an evolution (only rewritten buckets widen),
+      // and the narrower ones read nulls in the columns they lack.
       val prev: Option[DataFrame] =
         if (existing.nonEmpty)
-          Some(spark.read.option("mergeSchema", "true")
+          Some(spark.read.schema(before.get)
             .parquet(existing.map(n => bucketDir(root, n).toString): _*))
         else None
       // by-NAME alignment with null backfill = the schema-evolution seam
@@ -252,6 +329,19 @@ object Stream {
       val tmpRoot = new org.apache.hadoop.fs.Path(root, ".delta_tmp")
       spark.sparkContext.setJobDescription("foldBatch: rewrite buckets")
       next.write.mode("overwrite").partitionBy(BucketCol).parquet(tmpRoot.toString)
+      // widen the recorded schema BY NAME before the swap, so no reader
+      // sees a bucket with a column the schema lacks; a re-run after a
+      // crash from here on reads the wider schema and writes the same
+      // buckets. A column whose type moved would leave buckets no one
+      // schema reads — fail before the swap instead.
+      val written = dataSchema(next)
+      val after = before.fold(written) { b =>
+        written.foreach(f => b.find(_.name.equalsIgnoreCase(f.name)).foreach(bf => require(bf.dataType == f.dataType,
+          s"state at $root has column ${f.name} of type ${bf.dataType.sql} but this batch " +
+            s"writes ${f.dataType.sql}: only added columns evolve the state schema")))
+        StructType(b ++ written.filterNot(f => b.fieldNames.exists(_.equalsIgnoreCase(f.name))))
+      }
+      if (!recorded.contains(after)) recordSchema(fs, root, after)
       // every rename result is CHECKED: Hadoop FileSystem reports most
       // failures by returning false, not throwing — an unchecked false
       // here would commit the checkpoint with a stale bucket and lose
@@ -412,9 +502,11 @@ object Stream {
   /** Current-state VIEW of a materialized state table: the state retains
     * tombstones (op='d' rows win last-write-wins so late replays cannot
     * resurrect deleted keys); consumers read through this filter.
-    * `mergeSchema`: after a schema evolution only rewritten buckets carry
-    * the widened file schema — merging presents the union with nulls in
-    * not-yet-rewritten buckets' missing columns (see [[foldBatch]]).
+    * The read passes the recorded schema ([[SchemaMeta]]) and starts no
+    * Spark job: after a schema evolution only rewritten buckets carry the
+    * widened file schema, and the rest read nulls in the columns they
+    * lack (see [[foldBatch]]). A root without a schema file infers it
+    * with `mergeSchema`, which returns the same schema.
     */
   def readCurrentState(spark: SparkSession, statePath: String,
       opCol: String = "op", deleteOp: String = "d"): DataFrame = {
@@ -444,18 +536,26 @@ object Stream {
     require(torn.isEmpty,
       s"state at $statePath is mid-swap for buckets ${torn.mkString(",")} " +
         "and did not settle — a read now would silently miss those buckets' keys")
-    // spark.read.parquet resolves the file index EAGERLY (schema
-    // inference walks the listing), so by the time `df` exists the
-    // bucket set this read will serve is fixed. Re-verify the .old_
-    // invariant AFTER that listing: a swap that began between the final
-    // midSwap() above and the read's own listing is the residual TOCTOU
-    // window — catching it here turns a torn read into a loud failure
-    // instead of a silently partial state.
-    val df = spark.read.option("mergeSchema", "true").parquet(statePath)
+    // spark.read.parquet resolves the file index EAGERLY — the
+    // relation is built with its InMemoryFileIndex, whether the schema
+    // is given or inferred — so by the time `df` exists the bucket set
+    // this read will serve is fixed. Re-verify the .old_ invariant AFTER
+    // that listing: a swap that began between the final midSwap() above
+    // and the read's own listing is the residual TOCTOU window — catching
+    // it here turns a torn read into a loud failure instead of a silently
+    // partial state. The schema file is re-read for the same reason: a
+    // fold widens it before its swap, so a listing that already holds a
+    // widened bucket is followed by a changed schema file.
+    val schema = recordedSchema(fs, root)
+    val df = schema.fold(spark.read.option("mergeSchema", "true"))(
+      s => spark.read.schema(s.add(BucketCol, IntegerType))).parquet(statePath)
     val tornAfter = midSwap()
     require(tornAfter.isEmpty,
       s"state at $statePath began a bucket swap (${tornAfter.mkString(",")}) " +
         "while this read was resolving its file listing — retry the read")
+    require(recordedSchema(fs, root) == schema,
+      s"state at $statePath widened its schema while this read was resolving " +
+        "its file listing — retry the read")
     df.filter(col(opCol) =!= deleteOp)
   }
 

@@ -381,6 +381,8 @@ object Sampling {
         (hashBucket(col("doc_id")) % S).as("shard"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("shard").orderBy("mk", "doc_id")
+      // unpartitioned on purpose: the prefix sum runs over the S-row
+      // shard-size table (HintAudit.BoundedWindows)
       val wo = org.apache.spark.sql.expressions.Window
         .orderBy("shard")
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
@@ -466,6 +468,7 @@ object Sampling {
     // λ is ≤ B rows BY CONSTRUCTION — the explicit broadcast is bounded
     // (unlike decon_overlap's eval side, which must stay AQE-free), and
     // the single-task totals window runs over the same ≤ B rows
+    // (HintAudit.BoundedWindows lists dsir_score and dsir_select_approx)
     val lam = counts
       .withColumn("r", sum(col("cr")).over(wAll))
       .withColumn("t", sum(col("ct")).over(wAll))

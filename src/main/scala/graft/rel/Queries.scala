@@ -254,7 +254,7 @@ object Queries {
       // single-task full-cardinality window sort), so the grid probe
       // and the bound arithmetic run on exactly 10 rows; the rank
       // window after the cut orders a 10-row table (trivial by
-      // construction).
+      // construction; listed in HintAudit.BoundedWindows).
       val top = ev.groupBy("user_id").agg(count(lit(1)).as("exact_n"))
         .orderBy(col("exact_n").desc, col("user_id")).limit(10)
       val w = org.apache.spark.sql.expressions.Window
@@ -932,6 +932,8 @@ object Queries {
     "event_paths" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
+      // unpartitioned on purpose: it ranks the trigram counts, at most
+      // 5³ = 125 rows over the 5 event types (HintAudit.BoundedWindows)
       val ord = Window.orderBy(col("n").desc, col("path"))
       Tables(s, dir).events
         .withColumn("t2", lead(col("event_type"), 1).over(w))

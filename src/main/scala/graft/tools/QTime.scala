@@ -24,7 +24,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     suite does, not the index build;
   *   - `jobs` — print each timed run's Spark jobs (job id, ms,
   *     `spark.job.description`) under that run, to attribute multi-job
-  *     query cost;
+  *     query cost, and how many of them started before the DataFrame
+  *     returned (the driver floor: eager probes, schema inference);
   *   - `plan` — the FormattedMode plan (numbered operators,
   *     PushedFilters/ReadSchema, exchange and join details) of a fresh,
   *     unexecuted build: the cold plan as Bench's first run builds it;
@@ -83,15 +84,23 @@ object QTime {
           rec.foreach(_.reset())
           System.gc()
           val t0 = System.nanoTime()
+          var built = Long.MaxValue // epoch ms at which the DataFrame returned
           // one failing id must not abort the rest of the list
           val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable => System.err.println(s"[qtime] $id: $e"); false }
+            try {
+              val df = fn(spark, sfDir)
+              built = System.currentTimeMillis()
+              df.write.format("noop").mode("overwrite").save()
+              true
+            } catch { case e: Throwable => System.err.println(s"[qtime] $id: $e"); false }
           val t = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
           if (modes("jobs")) {
             val jobs = rec.get.jobs()
-            println(f"[qtime] $id run $r: $t%.3f s, ${jobs.size} jobs")
-            jobs.foreach { case (job, ms, desc) => println(f"[qtime]   job $job%4d $ms%7d ms  $desc") }
+            // a build job ends before the DataFrame returns, and no job
+            // runs in under 1 ms, so its start is strictly earlier
+            val early = jobs.count(_.startMs < built)
+            println(f"[qtime] $id run $r: $t%.3f s, ${jobs.size} jobs ($early before the DataFrame returned)")
+            jobs.foreach(j => println(f"[qtime]   job ${j.id}%4d ${j.ms}%7d ms  ${j.desc}"))
           }
           t
         }
@@ -116,13 +125,18 @@ object QTime {
     } finally rec.foreach(_.close())
   }
 
+  /** One ended Spark job: its id, start (epoch ms), duration and
+    * `spark.job.description`.
+    */
+  final case class Job(id: Int, startMs: Long, ms: Long, desc: String)
+
   /** Listens to the session's jobs and query executions. Events arrive
     * asynchronously on Spark's listener bus, so [[settle]] waits for it
     * to go quiet before a reading; it runs outside the timed region.
     */
-  private final class Recorder(spark: SparkSession) extends SparkListener with QueryExecutionListener {
+  private[graft] final class Recorder(spark: SparkSession) extends SparkListener with QueryExecutionListener {
     private val open = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    private val ended = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
+    private val ended = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
     @volatile private var lastEventMs = System.currentTimeMillis()
     @volatile var lastExecution: QueryExecution = null
 
@@ -135,7 +149,7 @@ object QTime {
       lastEventMs = System.currentTimeMillis()
     }
     override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-      Option(open.remove(j.jobId)).foreach { case (t0, desc) => ended.add((j.jobId, t0, j.time, desc)) }
+      Option(open.remove(j.jobId)).foreach { case (t0, desc) => ended.add(Job(j.jobId, t0, j.time - t0, desc)) }
       lastEventMs = System.currentTimeMillis()
     }
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
@@ -159,10 +173,10 @@ object QTime {
       lastExecution = null
     }
 
-    /** Settles, then the jobs ended since [[reset]]: (id, ms, description). */
-    def jobs(): Seq[(Int, Long, String)] = {
+    /** Settles, then the jobs ended since [[reset]], by id. */
+    def jobs(): Seq[Job] = {
       settle()
-      ended.asScala.toSeq.sortBy(_._1).map { case (id, t0, t1, desc) => (id, t1 - t0, desc) }
+      ended.asScala.toSeq.sortBy(_.id)
     }
 
     def close(): Unit = {

@@ -235,6 +235,38 @@ class StreamingSpec extends SparkSpec {
     } finally sc.setJobDescription(prior)
   }
 
+  test("a root without _state_schema reads by inference, and its next fold records the schema") {
+    val (in, state, chk) = (tmp("legacy-in"), tmp("legacy-st"), tmp("legacy-chk"))
+    val statePath = state.resolve("t").toString
+    val (first, second) = events.splitAt(120)
+    writeBatchJson(in, first, "a-0.json")
+    startMaterialize(in, state, chk).awaitTermination()
+    // the layout a state written before the schema file existed has
+    val meta = new java.io.File(statePath, "_state_schema")
+    assert(meta.delete() && new java.io.File(statePath, "._state_schema.crc").delete())
+    assert(readState(statePath) == batchState(first))
+    val inferred = spark.read.option("mergeSchema", "true").parquet(statePath).schema
+    assert(Stream.readCurrentState(spark, statePath).schema == inferred)
+    writeBatchJson(in, second, "b-0.json")
+    startMaterialize(in, state, chk).awaitTermination()
+    assert(meta.exists(), "the fold records the schema of a root that lacks one")
+    assert(readState(statePath) == batchState(events))
+    assert(Stream.readCurrentState(spark, statePath).schema == inferred)
+  }
+
+  test("readCurrentState fixes its file listing before it returns: a bucket deleted afterwards is still read") {
+    val s = spark
+    import s.implicits._
+    val statePath = tmp("toctou").resolve("t").toString
+    Stream.writeState(events.toDF(), statePath, Seq("id"), stateBuckets = 4)
+    val df = Stream.readCurrentState(spark, statePath)
+    val bucket = new java.io.File(statePath).listFiles().filter(_.getName.startsWith("state_bucket=")).head
+    val files = df.inputFiles.filter(_.contains(s"/${bucket.getName}/"))
+    assert(files.nonEmpty, df.inputFiles.mkString(", "))
+    org.apache.commons.io.FileUtils.deleteDirectory(bucket)
+    assert(files.forall(df.inputFiles.contains), df.inputFiles.mkString(", "))
+  }
+
   test("bucket-count mismatch fails loudly instead of corrupting state") {
     val s = spark
     import s.implicits._

@@ -26,7 +26,9 @@ class QTimeSpec extends SparkSpec {
 
   test("jobs: each timed run prints its Spark jobs with ms under that run") {
     val out = qtime(sf("sf0.001"), "q1_agg", "2", "jobs")
-    for (r <- 1 to 2) assert(out.contains(s"[qtime] q1_agg run $r: "), out)
+    for (r <- 1 to 2)
+      assert(raw"\[qtime\] q1_agg run $r: \d+\.\d{3} s, \d+ jobs \(\d+ before the DataFrame returned\)".r
+        .findFirstIn(out).nonEmpty, out)
     assert(raw"\[qtime\]   job +\d+ +\d+ ms".r.findFirstIn(out).nonEmpty, out)
     assert(median.findFirstIn(out).nonEmpty, out)
   }
