@@ -1,6 +1,8 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
@@ -25,25 +27,29 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, St
   */
 object Stream {
 
-  /** Tail a directory of JSON change events (schema = envelope of
-    * `rowSchema`) as a stream — the engine's redo-log scan equivalent.
-    */
-  def readEnvelopeStream(
-      spark: SparkSession,
-      dir: String,
-      rowSchema: StructType,
-      maxFilesPerTrigger: Int = 10
-  ): DataFrame =
-    spark.readStream
-      .schema(Envelope.schema(rowSchema))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
-
-  /** Hive-style key-hash partition column of the materialized state.
-    * Readers doing `spark.read.parquet(statePath)` see it as a normal
-    * partition column (and get partition pruning on key-hash for free).
+  /** Hive-style key-hash partition column of the materialized state:
+    * a row lives in bucket [[bucketOf]]`(keys, stateBuckets)`. Any parquet
+    * reader of the root sees it as a partition column, so a filter on
+    * `state_bucket` itself prunes the listing to the named buckets. A
+    * read through [[readCurrentState]] also prunes a lookup that only
+    * names the keys: when its filter holds `key = literal` for every key,
+    * [[StateBucketPruning]] adds `state_bucket = <that key's bucket>`, and
+    * the scan lists one bucket. A root whose `_state_buckets` marker holds
+    * no keys (written before the marker recorded them) reads unpruned.
     */
   val BucketCol = "state_bucket"
+
+  /** The bucket of a state row: `pmod(xxhash64(keys), n)` as an int.
+    * [[writeState]], [[foldBatch]] and [[StateBucketPruning]] all build
+    * it here, so the bucket a lookup prunes to is the one the writer
+    * chose. `new XxHash64(children)` is the seed-42 form that
+    * `functions.xxhash64` builds.
+    */
+  private[cdc] def bucketOf(keys: Seq[Expression], n: Int): Expression =
+    Cast(Pmod(new XxHash64(keys), Literal(n.toLong)), IntegerType)
+
+  private def bucketCol(keys: Seq[String], n: Int): Column =
+    GraftBridge.column(bucketOf(keys.map(UnresolvedAttribute.quotedString), n))
 
   private def bucketDir(root: org.apache.hadoop.fs.Path, n: Any) =
     new org.apache.hadoop.fs.Path(root, s"$BucketCol=$n")
@@ -74,14 +80,41 @@ object Stream {
     }
   }
 
-  /** Bucket-count metadata file: pmod(key, N) only addresses rows written
-    * with the SAME N, so a writer running with a different `stateBuckets`
-    * than the layout would read the wrong buckets and silently duplicate
-    * keys (old rows stranded in never-read buckets). The count is
-    * recorded at first write and every subsequent writer must match it —
-    * fail loudly, never corrupt.
+  /** Layout metadata file: the bucket count on its first line and the
+    * keys, in order, as a JSON array on its second. [[bucketOf]] only
+    * addresses rows written with the SAME count and keys, so a writer
+    * with another `stateBuckets` or other keys would put a key's new row
+    * in another bucket than its old one and silently duplicate keys. Both
+    * are recorded at first write in one write, and every later writer
+    * must match them — fail loudly, never corrupt. A marker holding only
+    * the count predates the keys line: it is checked on the count alone
+    * and never rewritten (it is the commit marker), and its root reads
+    * unpruned.
     */
   private val BucketsMeta = "_state_buckets"
+
+  private final case class Layout(buckets: Int, keys: Option[Seq[String]])
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The keys as the marker's second line and the
+    * [[StateBucketPruning.KeysOption]] value hold them: a JSON array, so
+    * any column name round-trips.
+    */
+  private[cdc] def keysToJson(keys: Seq[String]): String = json.writeValueAsString(keys.toArray)
+  private[cdc] def keysFromJson(s: String): Seq[String] = json.readValue(s, classOf[Array[String]]).toSeq
+
+  private def recordedLayout(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[Layout] = {
+    val in =
+      try fs.open(new org.apache.hadoop.fs.Path(root, BucketsMeta))
+      catch { case _: java.io.FileNotFoundException => return None }
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(_.trim).filter(_.nonEmpty).toList
+      finally in.close()
+    Some(Layout(lines.head.toInt,
+      lines.lift(1).map(keysFromJson)))
+  }
 
   /** True iff a state table at `root` COMMITTED its bootstrap/first
     * write: the `_state_buckets` meta is written AFTER the parquet data
@@ -97,22 +130,22 @@ object Stream {
   }
 
   private def checkOrRecordBuckets(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, n: Int): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(root, BucketsMeta)
-    if (fs.exists(meta)) {
-      val in = fs.open(meta)
-      val recorded =
-        try scala.io.Source.fromInputStream(in).mkString.trim.toInt
-        finally in.close()
-      require(recorded == n,
-        s"state at $root is bucketed with stateBuckets=$recorded but this " +
-          s"writer was configured with $n — matching counts are required " +
-          "(a mismatch would strand rows in never-read buckets)")
-    } else {
-      val out = fs.create(meta, true)
-      try out.write(s"$n\n".getBytes("UTF-8")) finally out.close()
+      root: org.apache.hadoop.fs.Path, n: Int, keys: Seq[String]): Unit =
+    recordedLayout(fs, root) match {
+      case Some(recorded) =>
+        require(recorded.buckets == n,
+          s"state at $root is bucketed with stateBuckets=${recorded.buckets} but this " +
+            s"writer was configured with $n — matching counts are required " +
+            "(a mismatch would strand rows in never-read buckets)")
+        recorded.keys.foreach(k => require(k == keys,
+          s"state at $root is bucketed by keys ${k.mkString("(", ", ", ")")} but this " +
+            s"writer folds by ${keys.mkString("(", ", ", ")")} — matching keys are required " +
+            "(a mismatch would put a key's new row in another bucket than its old one)"))
+      case None =>
+        val out = fs.create(new org.apache.hadoop.fs.Path(root, BucketsMeta), true)
+        try out.write(s"$n\n${keysToJson(keys)}\n".getBytes("UTF-8"))
+        finally out.close()
     }
-  }
 
   /** Schema metadata file: the state's data schema (no `state_bucket`),
     * as JSON in the all-nullable form parquet inference returns. It is
@@ -173,13 +206,12 @@ object Stream {
     */
   def writeState(df: DataFrame, statePath: String, keys: Seq[String],
       stateBuckets: Int = 16): Unit = {
-    df.withColumn(BucketCol,
-        pmod(xxhash64(keys.map(col): _*), lit(stateBuckets)).cast("int"))
+    df.withColumn(BucketCol, bucketCol(keys, stateBuckets))
       .write.mode("overwrite").partitionBy(BucketCol).parquet(statePath)
     val root = new org.apache.hadoop.fs.Path(statePath)
     val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     recordSchema(fs, root, dataSchema(df))
-    checkOrRecordBuckets(fs, root, stateBuckets)
+    checkOrRecordBuckets(fs, root, stateBuckets, keys)
   }
 
   /** One micro-batch of the bucketed state fold — the shared engine of
@@ -239,7 +271,7 @@ object Stream {
       require(flat.isEmpty,
         s"state at $root has top-level parquet files (${flat.take(3).mkString(", ")}): " +
           "an unbucketed state is not supported — write the bootstrap state with Stream.writeState")
-      checkOrRecordBuckets(fs, root, stateBuckets)
+      checkOrRecordBuckets(fs, root, stateBuckets, keys)
     }
     // the state's schema before this batch: the recorded file or, for a
     // root written before the file existed, one mergeSchema inference
@@ -251,7 +283,7 @@ object Stream {
       if (hasBuckets) Some(dataSchema(spark.read.option("mergeSchema", "true").parquet(statePath)))
       else None
     }
-    val bucketExpr = pmod(xxhash64(keys.map(col): _*), lit(stateBuckets)).cast("int")
+    val bucketExpr = bucketCol(keys, stateBuckets)
     // the batch input is scanned several times on a steady-state batch
     // (affected-bucket ids, purge watermark, then the fold) — cache it so
     // JSON parsing is paid once. A BOOTSTRAP batch (no state root, no
@@ -267,16 +299,30 @@ object Stream {
     val callerDesc = spark.sparkContext.getLocalProperty("spark.job.description")
     try {
       // affected-bucket ids: steady state touches only the delta's
-      // buckets, and the collect is ≤ stateBuckets ints — bounded by
-      // configuration, not data. None = the BOOTSTRAP batch (no state root at
-      // all): there is no prev state to prune to, so the distinct+collect
-      // job over the whole batch buys nothing — the rename list is
-      // derived by LISTING the tmp write output instead (r19; the
-      // distinct job was ~30% of a bootstrap batch's addBatch time).
+      // buckets. One exchange-free pass over the persisted delta sets
+      // each row's bucket in a per-partition bitset, and the job folds
+      // the bitsets into one of stateBuckets bits — bounded by
+      // configuration, not data. (A `distinct` or a global aggregate ran
+      // three jobs: AQE stages the cached delta and the exchange apart.)
+      // None = the BOOTSTRAP batch (no state root at all): there is no
+      // prev state to prune to, so the probe over the whole batch buys
+      // nothing — the rename list is derived by LISTING the tmp write
+      // output instead (r19; the probe was ~30% of a bootstrap batch's
+      // addBatch time).
       spark.sparkContext.setJobDescription("foldBatch: affected buckets")
       val affected: Option[Seq[Int]] =
         if (!rootExisted) None
-        else Some(delta.select(bucketExpr.as("b")).distinct().collect().map(_.getInt(0)).toSeq)
+        else {
+          val n = stateBuckets
+          val bits = delta.select(bucketExpr).queryExecution.toRdd
+            .mapPartitions { rows =>
+              val b = new java.util.BitSet(n)
+              rows.foreach(r => b.set(r.getInt(0)))
+              Iterator.single(b)
+            }
+            .fold(new java.util.BitSet(n)) { (a, b) => a.or(b); a }
+          Some(bits.stream().toArray.toSeq)
+        }
       val existing = affected.getOrElse(Nil).filter(n => fs.exists(bucketDir(root, n)))
       // previous state rows are already latest-per-key; union keeps
       // their (scn, op) so ordering vs the new delta stays correct.
@@ -366,7 +412,7 @@ object Stream {
       // the layout (the entry check only runs when root pre-exists; a
       // restart with a different stateBuckets must fail loudly, not
       // re-record)
-      checkOrRecordBuckets(fs, root, stateBuckets)
+      checkOrRecordBuckets(fs, root, stateBuckets, keys)
     } finally {
       spark.sparkContext.setJobDescription(callerDesc)
       if (multiScan) delta.unpersist()
@@ -394,7 +440,9 @@ object Stream {
     * state is laid out in `stateBuckets` key-hash partitions
     * (`state_bucket=N/`) and a batch reads and rewrites ONLY the buckets
     * containing its delta keys; untouched buckets' files are never
-    * opened. (A cluster deployment swaps this for MERGE into a
+    * opened. A key lookup through [[readCurrentState]] reads the same
+    * way: an equality on every key lists only that key's bucket
+    * ([[BucketCol]]). (A cluster deployment swaps this for MERGE into a
     * transactional table format; the dataflow per bucket is identical.)
     * Crash safety: each bucket swap is rename(dst→.old_N) +
     * rename(tmp→dst) + delete(.old_N), repaired idempotently at batch
@@ -506,7 +554,10 @@ object Stream {
     * Spark job: after a schema evolution only rewritten buckets carry the
     * widened file schema, and the rest read nulls in the columns they
     * lack (see [[foldBatch]]). A root without a schema file infers it
-    * with `mergeSchema`, which returns the same schema.
+    * with `mergeSchema`, which returns the same schema. The bucket count
+    * and keys of the `_state_buckets` marker ride on the read as the
+    * [[StateBucketPruning]] options, so a filter with an equality on
+    * every key scans only that key's bucket.
     */
   def readCurrentState(spark: SparkSession, statePath: String,
       opCol: String = "op", deleteOp: String = "d"): DataFrame = {
@@ -547,8 +598,15 @@ object Stream {
     // fold widens it before its swap, so a listing that already holds a
     // widened bucket is followed by a changed schema file.
     val schema = recordedSchema(fs, root)
-    val df = schema.fold(spark.read.option("mergeSchema", "true"))(
-      s => spark.read.schema(s.add(BucketCol, IntegerType))).parquet(statePath)
+    val reader = schema.fold(spark.read.option("mergeSchema", "true"))(
+      s => spark.read.schema(s.add(BucketCol, IntegerType)))
+    val df = (recordedLayout(fs, root) match {
+      case Some(Layout(n, Some(keys))) =>
+        StateBucketPruning.ensure(spark)
+        reader.option(StateBucketPruning.BucketsOption, n.toLong)
+          .option(StateBucketPruning.KeysOption, keysToJson(keys))
+      case _ => reader
+    }).parquet(statePath)
     val tornAfter = midSwap()
     require(tornAfter.isEmpty,
       s"state at $statePath began a bucket swap (${tornAfter.mkString(",")}) " +

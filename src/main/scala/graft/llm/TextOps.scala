@@ -718,28 +718,6 @@ object TextOps {
     if (!fresh.isEmpty) appendTextIndex(fresh, path)
   }
 
-  /** Continuous indexing: a stream of (doc_id, text) documents folded
-    * through [[indexBatchToState]] per micro-batch — the index at
-    * `path` is always a committed, serveable artifact, readable
-    * concurrently by [[bm25TopKDisk]]. The streaming twin of
-    * [[appendTextIndex]], same foreachBatch shape as
-    * `NearDedup.admitStream` / `cdc.Stream.materialize`.
-    */
-  def indexStream(
-      docs: DataFrame,
-      path: String,
-      checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        indexBatchToState(batch, path)
-      }
-      .start()
-
   private val textIndexStreamPaths = Memo.shared[String, String]("TextOps.textIndexStreamPaths")
 
   /** The continuous-indexing demo's index (bm25_stream): the corpus

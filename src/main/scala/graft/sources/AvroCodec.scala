@@ -48,19 +48,6 @@ object AvroCodec {
     }
   }
 
-  def decodeNation(blobs: Iterator[Array[Byte]], schemaJson: String): Iterator[(Int, String, Int)] = {
-    val schema = new Schema.Parser().parse(schemaJson)
-    val reader = new GenericDatumReader[GenericRecord](schema)
-    var dec: org.apache.avro.io.BinaryDecoder = null
-    blobs.map { bytes =>
-      dec = DecoderFactory.get().binaryDecoder(bytes, dec) // reuse decoder state
-      val rec = reader.read(null, dec)
-      (rec.get("n_nationkey").asInstanceOf[Int],
-        rec.get("n_name").toString,
-        rec.get("n_regionkey").asInstanceOf[Int])
-    }
-  }
-
   /** Confluent-consumer read path: each framed message resolves its
     * WRITER schema from the frame's id against the (broadcast) registry
     * snapshot and is decoded with reader schema `readerJson` — Avro

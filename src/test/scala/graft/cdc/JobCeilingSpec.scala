@@ -4,6 +4,9 @@ import java.nio.file.Files
 
 import graft.{SparkEntry, SparkSpec}
 import graft.tools.QTime
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 
 /** Job ceilings of the read paths. A job count is deterministic, so a
   * hidden job that returns (a schema-inference job, an eager probe)
@@ -43,6 +46,24 @@ class JobCeilingSpec extends SparkSpec {
     assert(jobs.isEmpty, jobs.mkString("; "))
   }
 
+  test("a key lookup on a committed state runs one job over one bucket's files") {
+    val path = committedState()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = { tasks.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      var got: Array[Row] = null
+      val jobs = jobsOf { got = Stream.readCurrentState(spark, path).filter(col("id") === 7L).collect() }
+      assert(got.map(_.getAs[Long]("id")).toSeq == Seq(7L))
+      assert(jobs.size == 1, jobs.mkString("; "))
+      val bucket = got.head.getAs[Int](Stream.BucketCol)
+      val files = new java.io.File(path, s"${Stream.BucketCol}=$bucket").listFiles().count(_.getName.endsWith(".parquet"))
+      assert(tasks.get >= 1 && tasks.get <= files, s"${tasks.get} tasks over $files files")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("a steady-state foldBatch starts no more jobs than its probe and its rewrite need") {
     val s = spark
     import s.implicits._
@@ -52,10 +73,11 @@ class JobCeilingSpec extends SparkSpec {
     assert(jobs.size <= MaxFoldJobs, jobs.mkString("; "))
   }
 
-  /** Measured on a steady-state batch: three jobs for the affected-bucket
-    * probe (the persisted delta's `distinct` under AQE) and two for the
-    * bucket rewrite. The previous state's read starts none: it passes the
-    * recorded schema, where `mergeSchema` inference was a sixth job.
+  /** Measured on a steady-state batch: one job for the affected-bucket
+    * probe (an exchange-free bitset pass over the persisted delta, where a
+    * `distinct` under AQE ran three) and two for the bucket rewrite. The
+    * previous state's read starts none: it passes the recorded schema,
+    * where `mergeSchema` inference was one more job.
     */
-  private val MaxFoldJobs = 5
+  private val MaxFoldJobs = 3
 }

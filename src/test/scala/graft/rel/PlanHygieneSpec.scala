@@ -668,6 +668,43 @@ class PlanHygieneSpec extends SparkSpec {
     }
   }
 
+  test("r19 plans: gapfill scans events once, prf probes the memo, q5 broadcasts, anomaly is one Window") {
+    // FormattedMode prints each operator's details once, under "(N) Name",
+    // so a count of those headers counts distinct operators. Every pin
+    // counts something that must be present, so none passes vacuously.
+    def formatted(id: String): String =
+      SparkEntry.queries(id)(spark, sf("sf0.001"))
+        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    def operators(p: String, name: String): Seq[String] =
+      p.split("\n\n").toSeq.map(_.trim).filter(_.matches(s"(?s)\\(\\d+\\) $name\\b.*"))
+
+    // ts_gapfill: one events scan feeds a pure unfold of the bucket
+    // aggregate — no second events scan joined back
+    val gap = formatted("ts_gapfill")
+    val gapScans = operators(gap, "Scan parquet")
+    assert(gapScans.size == 1 && gapScans.head.contains("events.parquet"), gap)
+    assert(!gap.contains("Join"), gap)
+
+    // bm25_prf: the postings, df and doclen tables are probed through the
+    // memo's InMemoryTableScans; the tokenize subtree is built once. A
+    // memo built earlier prints its plan twice (AQE's final and initial
+    // plan) with the same expression ids, so distinct tokenize
+    // expressions are counted: the r19 plan before the memo had 12.
+    SparkEntry.queries("bm25_prf")(spark, sf("sf0.001")).count() // a built memo prints both plans
+    val prf = formatted("bm25_prf")
+    assert(operators(prf, "InMemoryTableScan").nonEmpty, prf)
+    assert("explode\\(split\\(.*".r.findAllIn(prf).toSet.size == 1, prf)
+
+    // q5_local: fact-centric order, every join a broadcast
+    val q5 = formatted("q5_local")
+    assert(operators(q5, "BroadcastHashJoin").nonEmpty, q5)
+    assert(!q5.contains("SortMergeJoin"), q5)
+
+    // ts_anomaly: the z-score and its n_prev guard share one Window
+    val anomaly = formatted("ts_anomaly")
+    assert(operators(anomaly, "Window").size == 1, anomaly)
+  }
+
   test("partitioned writes prune partitions on read") {
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("prune").toString
