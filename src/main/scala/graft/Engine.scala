@@ -14,6 +14,8 @@ import org.apache.spark.sql.types.StructType
   *    on a real cluster AQE (`spark.sql.adaptive.enabled`, default on in
   *    Spark 4) coalesces/splits post-shuffle partitions at runtime, so the
   *    same code scales by only changing `--master` / executor conf.
+  *  - Sessions carry [[graft.plans.SmallGlobalSort]], which sorts an
+  *    input AQE would read as one partition in one task.
   */
 object Engine {
 
@@ -34,6 +36,7 @@ object Engine {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .withExtensions(graft.plans.SmallGlobalSort.inject)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -4,7 +4,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** `SparkSessionExtensions` hook (SURVEY.md §4): enables
   * `spark.sql.extensions=graft.functions.GraftExtensions` to inject the
-  * engine's native functions into any session at build time.
+  * engine's native functions, the as-of join strategy and the
+  * [[graft.plans.SmallGlobalSort]] stage rule into any session at build
+  * time.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
@@ -30,6 +32,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       (FunctionIdentifier(UnigramEncode.functionName),
         UnigramEncode.info, UnigramEncode.builder _))
     e.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
+    graft.plans.SmallGlobalSort.inject(e)
     // SimplifySelfCosine is deliberately NOT injected by default: it is a
     // semantics-RELAXING rewrite (see its scaladoc — the emitted 1.0
     // differs from the unoptimized double result by a final rounding, and

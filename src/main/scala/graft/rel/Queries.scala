@@ -1454,48 +1454,42 @@ object Queries {
     // no partsupp table, so the unit-cost catalog is DERIVED: min unit
     // price each (part, supplier) pair actually shipped at, restricted
     // to one region. The shape under test is the decorrelated min
-    // subquery — catalog → per-part min → equality join back — which
-    // Catalyst runs as two aggregations over one shuffled catalog, no
-    // correlated re-scan per part. Plan discipline: the ~0.5%-selective
-    // part prune BROADCASTS into the fact scan before anything shuffles,
-    // the supplier prune rides a semi-join of keys only, the catalog
-    // aggregation keys on exactly (partkey, suppkey), and the
-    // supplier/nation/part ATTRIBUTES attach to the tiny
-    // post-aggregation survivor set — filtering before the per-part min
-    // is value-identical to the oracle's filter-after form because both
-    // prunes are per-part/per-supplier. The unit price is exact integer
-    // MICRO-UNITS end-to-end (round 16: the float-boundary audit found
-    // an sf0.01 row whose raw unit_cost·10⁶ lands exactly on .5, where
-    // engines' round() implementations may legally disagree): cents =
-    // round(price·100) is integral-safe on 2-decimal data, qty is
-    // integral, so uc_e6 = round(cents·10⁴/qty) = (2c·10⁴ + q) div 2q
-    // exactly — the min, the min-equality join back, and the output all
-    // compare BIGINTs; no IEEE value exists anywhere in the id.
+    // subquery, run in one pass: the ~0.5%-selective part prune and the
+    // one-region supplier set each BROADCAST once into the fact scan,
+    // carrying the attributes the output needs (functionally dependent
+    // on the keys, so grouping by them adds no group), and one
+    // repartition by l_partkey serves both the catalog aggregation and
+    // the per-part min Window that replaces the oracle's join-back.
+    // Filtering before the per-part min is value-identical to the
+    // oracle's filter-after form because both prunes are
+    // per-part/per-supplier. The unit price is exact integer MICRO-UNITS
+    // end-to-end (the float-boundary audit found an sf0.01 row whose raw
+    // unit_cost·10⁶ lands exactly on .5, where engines' round()
+    // implementations may legally disagree): cents = round(price·100)
+    // is integral-safe on 2-decimal data, qty is integral, so uc_e6 =
+    // round(cents·10⁴/qty) = (2c·10⁴ + q) div 2q exactly — the min, the
+    // min-equality filter and the output all compare BIGINTs; no IEEE
+    // value exists anywhere in the id.
     "q2_mincost" -> ((s, dir) => {
       val t = Tables(s, dir)
       val parts = t.part.filter(col("p_size") <= 15 && col("p_type") === "LARGE")
+        .select("p_partkey", "p_name")
       val euroSupp = t.supplier
         .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
         .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
         .filter(col("r_name") === "EUROPE")
-      val supply = t.lineitem
-        .join(broadcast(parts.select("p_partkey")),
-          col("l_partkey") === col("p_partkey"))
-        .join(euroSupp.select("s_suppkey"),
-          col("l_suppkey") === col("s_suppkey"), "left_semi")
+        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
+      t.lineitem
+        .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
+        .join(broadcast(euroSupp), col("l_suppkey") === col("s_suppkey"))
         .withColumn("cents", round(col("l_extendedprice") * 100).cast("long"))
         .withColumn("qty", col("l_quantity").cast("long"))
-        .groupBy(col("l_partkey"), col("l_suppkey"))
+        .repartition(col("l_partkey"))
+        .groupBy("l_partkey", "l_suppkey", "p_name", "s_name", "s_acctbal", "n_name")
         .agg(min(expr("(2 * cents * 10000 + qty) DIV (2 * qty)")).as("unit_cost"))
-      val minCost = supply.groupBy(col("l_partkey"))
-        .agg(min(col("unit_cost")).as("min_cost"))
-      supply.join(minCost, Seq("l_partkey"))
+        .withColumn("min_cost", min(col("unit_cost")).over(Window.partitionBy("l_partkey")))
         .filter(col("unit_cost") === col("min_cost"))
-        .join(euroSupp.select("s_suppkey", "s_name", "s_acctbal", "n_name"),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(parts.select("p_partkey", "p_name"),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"), col("p_partkey"),
+        .select(col("s_acctbal"), col("s_name"), col("n_name"), col("l_partkey").as("p_partkey"),
           col("p_name"), col("unit_cost").as("unit_cost_e6"))
         .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"), col("p_partkey"))
         .limit(100)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session; getOrCreate
-  * makes this cheap per-suite).
+  * makes this cheap per-suite). It carries the same stage rule as
+  * `Engine.session`, so every spec runs the plans the engine runs.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -21,6 +22,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .withExtensions(graft.plans.SmallGlobalSort.inject)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
