@@ -79,14 +79,14 @@ object CdcPipeline {
     //    Pinned by CdcPipelineSpec's boundary-SCN test.
     val feedCols = feedSchema.fieldNames.toSeq
     // Bootstrap ONCE: the snapshot is written only when no COMMITTED
-    // state exists — the check is Stream.stateCommitted (the
-    // `_state_buckets` marker, written after the parquet data), NOT
-    // bare directory existence: the output committer creates the
-    // directory at job start, so a crash mid-snapshot leaves a torn
-    // root that exists() would accept as current state, silently
-    // missing every bucket the crash never wrote — forever (nothing
-    // re-runs the snapshot). With the marker check, a torn bootstrap
-    // simply re-runs (mode=overwrite makes the re-write idempotent).
+    // state exists — the check is Stream.stateCommitted (the `_state`
+    // file, whose replace is the commit), NOT bare directory existence:
+    // the write creates the directory long before it commits, so a crash
+    // mid-snapshot leaves a root that exists() would accept as current
+    // state, silently missing every bucket the crash never wrote —
+    // forever (nothing re-runs the snapshot). With the commit check, a
+    // torn bootstrap simply re-runs (writeState commits over what the
+    // crash left).
     // On a genuine restart the checkpoint makes the stream skip
     // already-committed files, so re-writing the snapshot then would
     // silently roll the folded state back to day zero (reverting every
@@ -100,8 +100,8 @@ object CdcPipeline {
         snapDf
       } else {
         // resuming: hand back the CURRENT state, materialized eagerly —
-        // a lazy read of statePath would race the first micro-batch's
-        // bucket swaps when the caller finally evaluates it
+        // a lazy read would run after the first micro-batch's commit has
+        // deleted the generations it lists
         Stream.readCurrentState(spark, statePath).localCheckpoint()
       }
     // 2. stream phase over the transport channel; resumes via checkpoint.

@@ -33,7 +33,7 @@ object StateBucketPruning extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Reader options carrying the state's bucket count and its keys (a
     * JSON array). Set only by [[Stream.readCurrentState]], from the
-    * `_state_buckets` marker; they are not a user setting.
+    * state's `_state` file; they are not a user setting.
     */
   val BucketsOption = "graft.state.buckets"
   val KeysOption = "graft.state.keys"

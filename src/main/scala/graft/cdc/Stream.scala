@@ -1,11 +1,20 @@
 package graft.cdc
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.AtomicFile
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, NoopCache, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 
 /** Streaming side of the CDC engine (SURVEY.md §2.10) — Structured
   * Streaming equivalents of the reference's OLR→Debezium→Kafka→sink path
@@ -27,15 +36,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, St
   */
 object Stream {
 
-  /** Hive-style key-hash partition column of the materialized state:
-    * a row lives in bucket [[bucketOf]]`(keys, stateBuckets)`. Any parquet
-    * reader of the root sees it as a partition column, so a filter on
-    * `state_bucket` itself prunes the listing to the named buckets. A
-    * read through [[readCurrentState]] also prunes a lookup that only
-    * names the keys: when its filter holds `key = literal` for every key,
-    * [[StateBucketPruning]] adds `state_bucket = <that key's bucket>`, and
-    * the scan lists one bucket. A root whose `_state_buckets` marker holds
-    * no keys (written before the marker recorded them) reads unpruned.
+  /** Hive-style key-hash partition column of the materialized state: a
+    * row lives in bucket [[bucketOf]]`(keys, stateBuckets)`, in the
+    * generation directory `state_bucket=N/g-V` that the `_state` file
+    * names ([[StateFile]]). Read the state through [[readCurrentState]],
+    * which reads exactly the named generations. A plain parquet reader of
+    * the root sees `state_bucket` as a partition column too, but it can
+    * see a generation a fold has written and not committed yet, or one a
+    * commit superseded and has not deleted yet. A lookup through
+    * readCurrentState whose filter holds `key = literal` for every key
+    * reads one bucket: [[StateBucketPruning]] adds
+    * `state_bucket = <that key's bucket>`, and the scan lists one bucket.
     */
   val BucketCol = "state_bucket"
 
@@ -51,142 +62,109 @@ object Stream {
   private def bucketCol(keys: Seq[String], n: Int): Column =
     GraftBridge.column(bucketOf(keys.map(UnresolvedAttribute.quotedString), n))
 
-  private def bucketDir(root: org.apache.hadoop.fs.Path, n: Any) =
-    new org.apache.hadoop.fs.Path(root, s"$BucketCol=$n")
+  private def bucketDir(root: Path, n: Int) = new Path(root, s"$BucketCol=$n")
 
-  /** Crash repair for the per-bucket swap below: finish or roll back any
-    * interrupted rename pair so a valid state always exists before the
-    * (re-run) batch reads it. `.`-prefixed names are invisible to Spark
-    * readers, so no torn state is ever observable.
+  private[cdc] def generationDir(root: Path, n: Int, version: Long) = new Path(bucketDir(root, n), s"g-$version")
+
+  /** Where a fold or [[writeState]] writes its buckets before the commit. */
+  private val TmpDir = ".delta_tmp"
+
+  private val StateFileName = "_state"
+
+  private val BucketSchema = StructType(Seq(StructField(BucketCol, IntegerType)))
+
+  /** A committed state, as its `_state` file records it; replacing that
+    * one file is the whole commit.
+    *  - `version` counts commits, and a commit names the generations it
+    *    writes after it: `state_bucket=N/g-<version>`.
+    *  - `live` maps each non-empty bucket to the version of its live
+    *    generation; `superseded` holds the generations the commit
+    *    replaced, which it deletes once `_state` names their successors.
+    *  - `buckets` and `keys` are fixed at the first commit. [[bucketOf]]
+    *    only addresses rows written with the same count and keys: another
+    *    writer would put a key's new row in another bucket than its old
+    *    one, so every fold must match them.
+    *  - `schema` is the data schema (no `state_bucket`), in the
+    *    all-nullable form parquet inference returns. It is metadata the
+    *    way the sink table's schema is, which `auto.evolve` ALTERs
+    *    (reference `README.md:839`): a fold widens it when a batch adds a
+    *    column, and bucket files written before read nulls there.
+    *  - `batch` names the stream batch the commit folded,
+    *    `<query id>:<batch id>`, so a batch that is replayed after a
+    *    crash that followed its commit is not folded again.
     */
-  private def repair(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(root)) return
-    fs.delete(new org.apache.hadoop.fs.Path(root, ".delta_tmp"), true)
-    // schema replace (recordSchema) cut before its rename: a complete
-    // tmp beside no schema file is finished; a partial one, or one beside
-    // the old file, is dropped and the re-run batch writes it again
-    val schemaTmp = new org.apache.hadoop.fs.Path(root, SchemaTmp)
-    val meta = new org.apache.hadoop.fs.Path(root, SchemaMeta)
-    if (fs.exists(schemaTmp)) {
-      if (!fs.exists(meta) && scala.util.Try(schemaAt(fs, schemaTmp)).toOption.flatten.nonEmpty)
-        require(fs.rename(schemaTmp, meta), s"rename $schemaTmp -> $meta failed; failing the batch")
-      else fs.delete(schemaTmp, false)
-    }
-    fs.listStatus(root).filter(_.getPath.getName.startsWith(".old_")).foreach { st =>
-      val dst = bucketDir(root, st.getPath.getName.stripPrefix(".old_"))
-      if (!fs.exists(dst)) fs.rename(st.getPath, dst) // crashed mid-swap: roll back
-      else fs.delete(st.getPath, true)                // crashed post-swap: drop leftover
-    }
-  }
-
-  /** Layout metadata file: the bucket count on its first line and the
-    * keys, in order, as a JSON array on its second. [[bucketOf]] only
-    * addresses rows written with the SAME count and keys, so a writer
-    * with another `stateBuckets` or other keys would put a key's new row
-    * in another bucket than its old one and silently duplicate keys. Both
-    * are recorded at first write in one write, and every later writer
-    * must match them — fail loudly, never corrupt. A marker holding only
-    * the count predates the keys line: it is checked on the count alone
-    * and never rewritten (it is the commit marker), and its root reads
-    * unpruned.
-    */
-  private val BucketsMeta = "_state_buckets"
-
-  private final case class Layout(buckets: Int, keys: Option[Seq[String]])
+  private[cdc] final case class StateFile(version: Long, buckets: Int, keys: Seq[String], schema: StructType,
+      live: Map[Int, Long], superseded: Map[Int, Long], batch: Option[String])
 
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** The keys as the marker's second line and the
-    * [[StateBucketPruning.KeysOption]] value hold them: a JSON array, so
-    * any column name round-trips.
+  /** The keys as `_state` and the [[StateBucketPruning.KeysOption]] value
+    * hold them: a JSON array, so any column name round-trips.
     */
   private[cdc] def keysToJson(keys: Seq[String]): String = json.writeValueAsString(keys.toArray)
   private[cdc] def keysFromJson(s: String): Seq[String] = json.readValue(s, classOf[Array[String]]).toSeq
 
-  private def recordedLayout(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Layout] = {
-    val in =
-      try fs.open(new org.apache.hadoop.fs.Path(root, BucketsMeta))
-      catch { case _: java.io.FileNotFoundException => return None }
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
-    Some(Layout(lines.head.toInt,
-      lines.lift(1).map(keysFromJson)))
-  }
-
-  /** True iff a state table at `root` COMMITTED its bootstrap/first
-    * write: the `_state_buckets` meta is written AFTER the parquet data
-    * lands, so its presence is the commit marker that bare directory
-    * existence is not — Spark's output committer creates the directory
-    * at job start, so a crash mid-snapshot leaves a torn root that
-    * exists() would happily accept as current state.
-    */
-  def stateCommitted(spark: SparkSession, statePath: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(root, BucketsMeta))
-  }
-
-  private def checkOrRecordBuckets(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, n: Int, keys: Seq[String]): Unit =
-    recordedLayout(fs, root) match {
-      case Some(recorded) =>
-        require(recorded.buckets == n,
-          s"state at $root is bucketed with stateBuckets=${recorded.buckets} but this " +
-            s"writer was configured with $n — matching counts are required " +
-            "(a mismatch would strand rows in never-read buckets)")
-        recorded.keys.foreach(k => require(k == keys,
-          s"state at $root is bucketed by keys ${k.mkString("(", ", ", ")")} but this " +
-            s"writer folds by ${keys.mkString("(", ", ", ")")} — matching keys are required " +
-            "(a mismatch would put a key's new row in another bucket than its old one)"))
-      case None =>
-        val out = fs.create(new org.apache.hadoop.fs.Path(root, BucketsMeta), true)
-        try out.write(s"$n\n${keysToJson(keys)}\n".getBytes("UTF-8"))
-        finally out.close()
+  private def encode(st: StateFile): String = {
+    val o = json.createObjectNode()
+    o.put("version", st.version).put("buckets", st.buckets)
+    o.set[ObjectNode]("keys", json.readTree(keysToJson(st.keys)))
+    o.set[ObjectNode]("schema", json.readTree(st.schema.json))
+    def generations(name: String, m: Map[Int, Long]): Unit = {
+      val g = o.putObject(name)
+      m.toSeq.sorted.foreach { case (n, v) => g.put(n.toString, v) }
     }
-
-  /** Schema metadata file: the state's data schema (no `state_bucket`),
-    * as JSON in the all-nullable form parquet inference returns. It is
-    * recorded at commit and widened by the fold before a bucket swap that
-    * adds a column — the sink table's schema is catalog metadata that
-    * `auto.evolve` ALTERs (reference `README.md:839`), not something every
-    * read re-derives. Reading with it starts no job, where inference with
-    * `mergeSchema` starts one over every bucket footer. A superset schema
-    * over narrower bucket files reads nulls in the missing columns, which
-    * is what `mergeSchema` returned. A root without the file predates it:
-    * reads infer, and the next fold records it.
-    */
-  private val SchemaMeta = "_state_schema"
-  private val SchemaTmp = s".$SchemaMeta.tmp"
-
-  private def recordedSchema(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[StructType] =
-    schemaAt(fs, new org.apache.hadoop.fs.Path(root, SchemaMeta))
-
-  private def schemaAt(fs: org.apache.hadoop.fs.FileSystem,
-      file: org.apache.hadoop.fs.Path): Option[StructType] = {
-    val in =
-      try fs.open(file)
-      catch { case _: java.io.FileNotFoundException => return None }
-    try Some(DataType.fromJson(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      .asInstanceOf[StructType])
-    finally in.close()
+    generations("live", st.live)
+    generations("superseded", st.superseded)
+    st.batch.foreach(o.put("batch", _))
+    json.writeValueAsString(o)
   }
 
-  /** Replaces the schema file: a complete tmp, then delete and rename
-    * (a rename onto an existing file fails on some file systems);
-    * [[repair]] finishes a replace cut between the two.
+  private def decode(text: String): StateFile = {
+    val o = json.readTree(text)
+    def generations(name: String) = o.get(name).properties().asScala.map(e => e.getKey.toInt -> e.getValue.asLong).toMap
+    StateFile(o.get("version").asLong, o.get("buckets").asInt, keysFromJson(o.get("keys").toString),
+      DataType.fromJson(o.get("schema").toString).asInstanceOf[StructType],
+      generations("live"), generations("superseded"), Option(o.get("batch")).map(_.asText))
+  }
+
+  /** The state committed at `statePath`, if any. */
+  private[cdc] def committed(spark: SparkSession, statePath: String): Option[StateFile] =
+    AtomicFile.read(new Path(statePath, StateFileName), spark.sparkContext.hadoopConfiguration).map(decode)
+
+  /** True iff a state table at `statePath` has COMMITTED its bootstrap
+    * or first write: its `_state` exists. Bare directory existence is no
+    * such mark: the first write creates the directory long before its
+    * commit, so a crash mid-snapshot leaves a root that exists() would
+    * accept as current state.
     */
-  private def recordSchema(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, schema: StructType): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(root, SchemaTmp)
-    val meta = new org.apache.hadoop.fs.Path(root, SchemaMeta)
-    val out = fs.create(tmp, true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-    fs.delete(meta, false)
-    require(fs.rename(tmp, meta), s"rename $tmp -> $meta failed; failing the batch")
+  def stateCommitted(spark: SparkSession, statePath: String): Boolean =
+    committed(spark, statePath).nonEmpty
+
+  private def noState(root: Path) =
+    s"state at $root has no _state file: write the bootstrap state with Stream.writeState"
+
+  /** Fails unless `root`, which has no `_state`, holds nothing but what an
+    * interrupted first commit leaves (`.`-prefixed names and `state_bucket`
+    * directories): a root written any other way is not a layout the fold
+    * maintains, and bootstrapping over it would ignore its rows.
+    */
+  private def requireNoForeignFiles(fs: FileSystem, root: Path): Unit = {
+    val foreign =
+      try fs.listStatus(root).toSeq.filterNot(st =>
+        st.getPath.getName.startsWith(".") || st.isDirectory && st.getPath.getName.startsWith(s"$BucketCol="))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    require(foreign.isEmpty, s"${noState(root)} (it holds ${foreign.take(3).map(_.getPath.getName).mkString(", ")})")
+  }
+
+  private def requireLayout(root: Path, st: StateFile, n: Int, keys: Seq[String]): Unit = {
+    require(st.buckets == n,
+      s"state at $root is bucketed with stateBuckets=${st.buckets} but this " +
+        s"writer was configured with $n — matching counts are required " +
+        "(a mismatch would strand rows in never-read buckets)")
+    require(st.keys == keys,
+      s"state at $root is bucketed by keys ${st.keys.mkString("(", ", ", ")")} but this " +
+        s"writer folds by ${keys.mkString("(", ", ", ")")} — matching keys are required " +
+        "(a mismatch would put a key's new row in another bucket than its old one)")
   }
 
   /** `t` with every field, element and value nullable. */
@@ -201,24 +179,97 @@ object Stream {
   private def dataSchema(df: DataFrame): StructType =
     nullable(StructType(df.schema.filterNot(_.name == BucketCol))).asInstanceOf[StructType]
 
+  /** A relation over the live generations of `buckets`: `state_bucket`
+    * as its partition column, the recorded schema, and the bucket count
+    * and keys as the [[StateBucketPruning]] options. The file index is
+    * built over the generation directories with the partition spec from
+    * `_state`, so there is no listing of the root, no partition inference
+    * and no existence check per path, and it lists the files before this
+    * returns. None when a named generation lists no file: every written
+    * generation holds one, so it was deleted after `st` was read.
+    */
+  private def stateRelation(spark: SparkSession, root: Path, st: StateFile, buckets: Iterable[Int]): Option[DataFrame] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = buckets.toSeq.sorted.map(n => PartitionPath(InternalRow(n), fs.makeQualified(generationDir(root, n, st.live(n)))))
+    val opts = Map(StateBucketPruning.BucketsOption -> st.buckets.toString,
+      StateBucketPruning.KeysOption -> keysToJson(st.keys))
+    val index = new InMemoryFileIndex(spark, parts.map(_.path), opts, None, NoopCache,
+      Some(PartitionSpec(BucketSchema, parts)))
+    val listed = index.allFiles().map(_.getPath.getParent).toSet
+    if (!parts.forall(p => listed(p.path))) None
+    else Some(spark.baseRelationToDataFrame(
+      HadoopFsRelation(index, BucketSchema, st.schema, None, new ParquetFileFormat, opts)(spark)))
+  }
+
+  /** The commit that [[writeState]] and [[foldBatch]] share, run once
+    * their buckets are written under `.delta_tmp`:
+    *  1. each written bucket is renamed to a new generation
+    *     `state_bucket=N/g-<version>`;
+    *  2. `_state` is replaced, naming those generations and `schema`;
+    *  3. the generations they replace are deleted.
+    * `replaced` are the live buckets the commit ends whether it wrote them
+    * or not: one whose rows were all dropped leaves the state. A crash
+    * before step 2 leaves the previous state committed, and the re-run
+    * commit deletes the generations it left before it renames its own.
+    */
+  private def commit(spark: SparkSession, root: Path, prev: Option[StateFile], buckets: Int, keys: Seq[String],
+      schema: StructType, replaced: Iterable[Int], batch: Option[String]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    val version = prev.fold(1L)(_.version + 1)
+    val live = prev.fold(Map.empty[Int, Long])(_.live)
+    val tmp = new Path(root, TmpDir)
+    val written = fs.listStatus(tmp).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(s"$BucketCol=")).map(_.stripPrefix(s"$BucketCol=").toInt)
+    written.foreach { n =>
+      val dst = generationDir(root, n, version)
+      // the parent must exist: the local file system copies what it
+      // cannot rename in one step
+      if (!live.contains(n)) fs.mkdirs(bucketDir(root, n))
+      fs.delete(dst, true)
+      // Hadoop reports most rename failures by returning false: unchecked,
+      // the batch would commit without this bucket's rows
+      require(fs.rename(new Path(tmp, s"$BucketCol=$n"), dst), s"rename into $dst failed; failing the batch")
+    }
+    val ended = (replaced ++ written).toSet
+    val next = StateFile(version, buckets, keys, schema, live -- ended ++ written.map(_ -> version),
+      live.filter { case (n, _) => ended(n) }, batch)
+    AtomicFile.replace(new Path(root, StateFileName), encode(next), conf)
+    dropSuperseded(fs, root, next)
+  }
+
+  /** Step 3 of [[commit]]; also run for a replayed batch, whose earlier
+    * commit may have crashed before it finished this step.
+    */
+  private def dropSuperseded(fs: FileSystem, root: Path, st: StateFile): Unit = {
+    st.superseded.foreach { case (n, v) => fs.delete(generationDir(root, n, v), true) }
+    fs.delete(new Path(root, TmpDir), true)
+    ()
+  }
+
   /** Write a full state table in the bucketed layout `materialize`
-    * maintains incrementally (bootstrap/snapshot path).
+    * maintains incrementally (bootstrap/snapshot path). It replaces every
+    * bucket of a state already at `statePath`, and its layout is the one
+    * later folds must match. Over a root an interrupted write left, it
+    * commits the first state.
     */
   def writeState(df: DataFrame, statePath: String, keys: Seq[String],
       stateBuckets: Int = 16): Unit = {
+    val spark = df.sparkSession
+    val prev = committed(spark, statePath)
     df.withColumn(BucketCol, bucketCol(keys, stateBuckets))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    recordSchema(fs, root, dataSchema(df))
-    checkOrRecordBuckets(fs, root, stateBuckets, keys)
+      .write.mode("overwrite").partitionBy(BucketCol).parquet(new Path(statePath, TmpDir).toString)
+    commit(spark, new Path(statePath), prev, stateBuckets, keys, dataSchema(df),
+      prev.fold(Iterable.empty[Int])(_.live.keys), batch = None)
   }
 
   /** One micro-batch of the bucketed state fold — the shared engine of
     * [[materialize]] (one state table) and [[materializeMulti]] (per-table
     * fan-out). Folds `latestPerKey(previousState ∪ batch)` into the
     * key-hash-bucketed layout at `statePath`; see [[materialize]] for the
-    * full semantics/scale contract.
+    * full semantics/scale contract. `batchId` names a stream batch (see
+    * [[StateFile]]): a batch the state already committed is not folded
+    * again.
     *
     * Schema evolution (`auto.evolve=true` parity, reference
     * `README.md:839`): the previous state and the batch are aligned BY
@@ -228,12 +279,11 @@ object Stream {
     * old state rows read as null in the new column, exactly how the
     * reference's JDBC sink ALTERs the table and backfills. Only the
     * delta's buckets are rewritten widened; untouched buckets keep their
-    * old file schema until next touched. The fold widens the recorded
-    * state schema ([[SchemaMeta]]) before the swap, and every state read
-    * here and in [[readCurrentState]] passes it, so narrower bucket files
-    * read nulls in the added columns. Type CHANGES are not auto-evolved —
-    * the union or the schema widening fails loudly, matching the sink
-    * connector, which only ever adds columns.
+    * old file schema until next touched. The commit that writes a widened
+    * bucket also widens the recorded schema, and every state read passes
+    * it, so narrower bucket files read nulls in the added columns. Type
+    * CHANGES are not auto-evolved — the union or the schema widening fails
+    * loudly, matching the sink connector, which only ever adds columns.
     *
     * Tombstone retention (`tombstoneRetention`): when set, op='d' rows
     * whose `ordering.head` (must cast to long, e.g. scn) is older than
@@ -254,42 +304,30 @@ object Stream {
       stateBuckets: Int,
       tombstoneRetention: Option[Long] = None,
       opCol: String = "op",
-      deleteOp: String = "d"
+      deleteOp: String = "d",
+      batchId: Option[String] = None
   ): Unit = {
     val spark = batch.sparkSession
     require(!batch.columns.contains(BucketCol),
       s"feed must not have a '$BucketCol' column")
-    val root = new org.apache.hadoop.fs.Path(statePath)
+    val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repair(fs, root)
-    val rootExisted = fs.exists(root)
-    if (rootExisted) {
-      // a flat (unbucketed) state is not a layout this fold maintains:
-      // the steady-state path would ignore its rows, and the first bucket
-      // written beside them would break partition discovery
-      val flat = fs.listStatus(root).map(_.getPath.getName).filter(_.endsWith(".parquet"))
-      require(flat.isEmpty,
-        s"state at $root has top-level parquet files (${flat.take(3).mkString(", ")}): " +
-          "an unbucketed state is not supported — write the bootstrap state with Stream.writeState")
-      checkOrRecordBuckets(fs, root, stateBuckets, keys)
+    val prev = committed(spark, statePath)
+    prev match {
+      case Some(st) => requireLayout(root, st, stateBuckets, keys)
+      case None => requireNoForeignFiles(fs, root)
     }
-    // the state's schema before this batch: the recorded file or, for a
-    // root written before the file existed, one mergeSchema inference
-    // (recorded below); None while the root holds no bucket
-    val recorded = if (rootExisted) recordedSchema(fs, root) else None
-    val before = recorded.orElse {
-      val hasBuckets = rootExisted &&
-        fs.listStatus(root).exists(_.getPath.getName.startsWith(s"$BucketCol="))
-      if (hasBuckets) Some(dataSchema(spark.read.option("mergeSchema", "true").parquet(statePath)))
-      else None
+    if (batchId.nonEmpty && prev.exists(_.batch == batchId)) {
+      dropSuperseded(fs, root, prev.get)
+      return
     }
     val bucketExpr = bucketCol(keys, stateBuckets)
     // the batch input is scanned several times on a steady-state batch
     // (affected-bucket ids, purge watermark, then the fold) — cache it so
-    // JSON parsing is paid once. A BOOTSTRAP batch (no state root, no
+    // JSON parsing is paid once. A BOOTSTRAP batch (no committed state, no
     // retention) scans the delta exactly once, so the cache write would
     // be pure overhead (r19).
-    val multiScan = rootExisted || tombstoneRetention.nonEmpty
+    val multiScan = prev.nonEmpty || tombstoneRetention.nonEmpty
     val delta =
       if (multiScan) batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else batch
@@ -304,14 +342,14 @@ object Stream {
       // the bitsets into one of stateBuckets bits — bounded by
       // configuration, not data. (A `distinct` or a global aggregate ran
       // three jobs: AQE stages the cached delta and the exchange apart.)
-      // None = the BOOTSTRAP batch (no state root at all): there is no
+      // None = the BOOTSTRAP batch (no committed state): there is no
       // prev state to prune to, so the probe over the whole batch buys
-      // nothing — the rename list is derived by LISTING the tmp write
-      // output instead (r19; the probe was ~30% of a bootstrap batch's
-      // addBatch time).
+      // nothing — the commit takes the written buckets from the tmp
+      // write's output instead (r19; the probe was ~30% of a bootstrap
+      // batch's addBatch time).
       spark.sparkContext.setJobDescription("foldBatch: affected buckets")
       val affected: Option[Seq[Int]] =
-        if (!rootExisted) None
+        if (prev.isEmpty) None
         else {
           val n = stateBuckets
           val bits = delta.select(bucketExpr).queryExecution.toRdd
@@ -323,20 +361,20 @@ object Stream {
             .fold(new java.util.BitSet(n)) { (a, b) => a.or(b); a }
           Some(bits.stream().toArray.toSeq)
         }
-      val existing = affected.getOrElse(Nil).filter(n => fs.exists(bucketDir(root, n)))
       // previous state rows are already latest-per-key; union keeps
       // their (scn, op) so ordering vs the new delta stays correct.
       // Read with the state's schema: bucket files may carry different
       // schema VERSIONS after an evolution (only rewritten buckets widen),
       // and the narrower ones read nulls in the columns they lack.
-      val prev: Option[DataFrame] =
-        if (existing.nonEmpty)
-          Some(spark.read.schema(before.get)
-            .parquet(existing.map(n => bucketDir(root, n).toString): _*))
-        else None
+      val prevRows: Option[DataFrame] = for {
+        st <- prev
+        read = affected.get.filter(st.live.contains)
+        if read.nonEmpty
+      } yield stateRelation(spark, root, st, read)
+        .getOrElse(throw new IllegalStateException(s"state at $root names a generation that does not exist"))
       // by-NAME alignment with null backfill = the schema-evolution seam
       // (see Scaladoc above); same-schema batches reduce to plain unionByName
-      val all = prev.fold(delta: DataFrame)(p =>
+      val all = prevRows.fold(delta: DataFrame)(p =>
         p.drop(BucketCol).unionByName(delta, allowMissingColumns = true))
       // latestPerKey, NOT applyChanges: tombstones are RETAINED in the
       // state (op='d' rows participate in last-write-wins like a
@@ -368,51 +406,25 @@ object Stream {
       val next1 = next0.withColumn(BucketCol, bucketExpr)
       // defensive prune: every folded row's bucket is in the affected set
       // by construction (prev was read from exactly those buckets and the
-      // delta defined them) — the filter guards the rename loop against
-      // a drifted bucket expression, and is skipped on bootstrap where
-      // the affected set was never computed.
+      // delta defined them) — the filter keeps a drifted bucket expression
+      // from committing a bucket the probe did not end, and is skipped on
+      // bootstrap where the affected set was never computed.
       val next = affected.fold(next1)(a => next1.filter(col(BucketCol).isin(a: _*)))
-      val tmpRoot = new org.apache.hadoop.fs.Path(root, ".delta_tmp")
       spark.sparkContext.setJobDescription("foldBatch: rewrite buckets")
-      next.write.mode("overwrite").partitionBy(BucketCol).parquet(tmpRoot.toString)
-      // widen the recorded schema BY NAME before the swap, so no reader
-      // sees a bucket with a column the schema lacks; a re-run after a
-      // crash from here on reads the wider schema and writes the same
-      // buckets. A column whose type moved would leave buckets no one
-      // schema reads — fail before the swap instead.
+      next.write.mode("overwrite").partitionBy(BucketCol).parquet(new Path(root, TmpDir).toString)
+      // widen the recorded schema BY NAME in the same commit as the
+      // buckets that carry the new column. A column whose type moved
+      // would leave buckets no one schema reads — fail before the
+      // commit instead.
       val written = dataSchema(next)
-      val after = before.fold(written) { b =>
+      val after = prev.fold(written) { st =>
+        val b = st.schema
         written.foreach(f => b.find(_.name.equalsIgnoreCase(f.name)).foreach(bf => require(bf.dataType == f.dataType,
           s"state at $root has column ${f.name} of type ${bf.dataType.sql} but this batch " +
             s"writes ${f.dataType.sql}: only added columns evolve the state schema")))
         StructType(b ++ written.filterNot(f => b.fieldNames.exists(_.equalsIgnoreCase(f.name))))
       }
-      if (!recorded.contains(after)) recordSchema(fs, root, after)
-      // every rename result is CHECKED: Hadoop FileSystem reports most
-      // failures by returning false, not throwing — an unchecked false
-      // here would commit the checkpoint with a stale bucket and lose
-      // the delta silently
-      def mustRename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-        require(fs.rename(src, dst), s"rename $src -> $dst failed; failing the batch")
-      // bootstrap: the written tmp layout IS the bucket list
-      val renameIds: Seq[Int] = affected.getOrElse(
-        fs.listStatus(tmpRoot).map(_.getPath.getName).toSeq
-          .filter(_.startsWith(s"$BucketCol="))
-          .map(_.stripPrefix(s"$BucketCol=").toInt))
-      renameIds.foreach { n =>
-        val src = new org.apache.hadoop.fs.Path(tmpRoot, s"$BucketCol=$n")
-        val dst = bucketDir(root, n)
-        val old = new org.apache.hadoop.fs.Path(root, s".old_$n")
-        if (fs.exists(dst)) mustRename(dst, old)
-        if (fs.exists(src)) mustRename(src, dst) // absent src = bucket fully deleted
-        if (fs.exists(old)) fs.delete(old, true)
-      }
-      fs.delete(tmpRoot, true)
-      // record the layout's bucket count even when THIS batch created
-      // the layout (the entry check only runs when root pre-exists; a
-      // restart with a different stateBuckets must fail loudly, not
-      // re-record)
-      checkOrRecordBuckets(fs, root, stateBuckets, keys)
+      commit(spark, root, prev, stateBuckets, keys, after, affected.getOrElse(Nil), batchId)
     } finally {
       spark.sparkContext.setJobDescription(callerDesc)
       if (multiScan) delta.unpersist()
@@ -444,14 +456,18 @@ object Stream {
     * way: an equality on every key lists only that key's bucket
     * ([[BucketCol]]). (A cluster deployment swaps this for MERGE into a
     * transactional table format; the dataflow per bucket is identical.)
-    * Crash safety: each bucket swap is rename(dst→.old_N) +
-    * rename(tmp→dst) + delete(.old_N), repaired idempotently at batch
-    * start — combined with applyChanges' last-write-wins idempotence
-    * under redelivery, a crash at ANY point re-runs to the same state.
-    * A flat (unbucketed) state fails the batch: bootstrap through
-    * [[writeState]]. Absent state = directory absence,
-    * checked explicitly — any OTHER read error fails the batch loudly
-    * instead of silently resetting state.
+    *
+    * Crash safety: a batch writes its buckets as new generation
+    * directories beside the live ones, and one atomic replace of the
+    * `_state` file commits them ([[StateFile]]). A crash before that
+    * replace leaves the previous state committed and readable, and the
+    * re-run batch deletes what the crash left before it writes again; a
+    * crash after it leaves the batch committed, and the replayed batch,
+    * which `_state` names, only finishes deleting the generations the
+    * commit superseded. So a crash at ANY point re-runs to the same state,
+    * `_state` included, and no reader ever sees a bucket missing. A root
+    * without `_state` that holds anything but an interrupted first
+    * commit fails the batch: bootstrap through [[writeState]].
     */
   def materialize(
       feed: DataFrame,
@@ -467,11 +483,19 @@ object Stream {
     feed.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        foldBatch(batch, keys, ordering, statePath, stateBuckets, tombstoneRetention)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        foldBatch(batch, keys, ordering, statePath, stateBuckets, tombstoneRetention,
+          batchId = streamBatch(batch, id))
       }
       .start()
   }
+
+  /** `<query id>:<batch id>`: one batch of one query, across restarts
+    * from its checkpoint (the query id is kept in the checkpoint). None
+    * outside a stream.
+    */
+  private def streamBatch(batch: DataFrame, id: Long): Option[String] =
+    Option(batch.sparkSession.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)).map(q => s"$q:$id")
 
   /** Multi-table pipeline fan-out (reference deployment shape: ONE
     * connector feed carries per-table topics `prefix.SCHEMA.TABLE`,
@@ -504,7 +528,7 @@ object Stream {
     feed.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, id: Long) =>
         val cached = batch
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -528,7 +552,7 @@ object Stream {
           // underscore: a bare "." normalizes to stateRoot itself (its
           // buckets would land at the root alongside sibling table
           // dirs), and dot-prefixed names are invisible to Spark's file
-          // listing AND collide with the engine's own .old_/.tmp_ swap
+          // listing AND collide with the engine's own `.delta_tmp`
           // naming. (The first-char class rejects any LEADING dot —
           // including "." and ".." themselves; an INTERIOR ".."
           // sequence like 'a..b' passes the regex and is rejected by
@@ -540,7 +564,7 @@ object Stream {
             foldBatch(
               cached.filter(col(tableCol) === t).drop(tableCol),
               keysFor(t), ordering,
-              s"$stateRoot/table=$t", stateBuckets, tombstoneRetention)
+              s"$stateRoot/table=$t", stateBuckets, tombstoneRetention, batchId = streamBatch(batch, id))
           }
         } finally { cached.unpersist(); () }
       }
@@ -550,71 +574,33 @@ object Stream {
   /** Current-state VIEW of a materialized state table: the state retains
     * tombstones (op='d' rows win last-write-wins so late replays cannot
     * resurrect deleted keys); consumers read through this filter.
-    * The read passes the recorded schema ([[SchemaMeta]]) and starts no
-    * Spark job: after a schema evolution only rewritten buckets carry the
-    * widened file schema, and the rest read nulls in the columns they
-    * lack (see [[foldBatch]]). A root without a schema file infers it
-    * with `mergeSchema`, which returns the same schema. The bucket count
-    * and keys of the `_state_buckets` marker ride on the read as the
-    * [[StateBucketPruning]] options, so a filter with an equality on
-    * every key scans only that key's bucket.
+    *
+    * It reads `_state` once and builds its relation over exactly the
+    * generations it names ([[StateFile]]), with the recorded schema, and
+    * starts no Spark job: after a schema evolution only rewritten buckets
+    * carry the widened file schema, and the rest read nulls in the columns
+    * they lack (see [[foldBatch]]). A commit that lands during the read
+    * changes nothing the read serves: the files are listed before this
+    * returns. If that commit deleted a generation the read had named
+    * before it was listed, the read starts again from the new `_state`.
+    * The bucket count and keys ride on the relation as the
+    * [[StateBucketPruning]] options, so a filter with an equality on every
+    * key scans only that key's bucket.
     */
   def readCurrentState(spark: SparkSession, statePath: String,
       opCol: String = "op", deleteOp: String = "d"): DataFrame = {
-    // The per-bucket swap is rename(dst→.old_N) + rename(tmp→dst):
-    // between the renames bucket N's directory is ABSENT, and a reader
-    // listing in that window would SILENTLY return a state missing that
-    // bucket's keys (the .old_ prefix is dot-invisible to the reader).
-    // A .old_N sibling with no state_bucket=N dir is exactly that
-    // window (or a crash the next batch's repair() resolves) — wait
-    // briefly for the swap to complete, then fail LOUDLY rather than
-    // serve wrong data. (The check narrows the race to list-after-check;
-    // the swap itself is two renames, microseconds.)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def midSwap(): Seq[String] =
-      if (!fs.exists(root)) Nil
-      else fs.listStatus(root).map(_.getPath.getName)
-        .filter(_.startsWith(".old_")).toSeq
-        .map(_.stripPrefix(".old_"))
-        .filter(n => !fs.exists(bucketDir(root, n)))
-    var torn = midSwap()
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (torn.nonEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      torn = midSwap()
+    val root = new Path(statePath)
+    StateBucketPruning.ensure(spark)
+    @annotation.tailrec def read(seen: Option[Long]): DataFrame = {
+      val st = committed(spark, statePath).getOrElse(throw new IllegalArgumentException(noState(root)))
+      stateRelation(spark, root, st, st.live.keys) match {
+        case Some(df) => df
+        case None =>
+          require(!seen.contains(st.version), s"state at $root names a generation that does not exist")
+          read(Some(st.version))
+      }
     }
-    require(torn.isEmpty,
-      s"state at $statePath is mid-swap for buckets ${torn.mkString(",")} " +
-        "and did not settle — a read now would silently miss those buckets' keys")
-    // spark.read.parquet resolves the file index EAGERLY — the
-    // relation is built with its InMemoryFileIndex, whether the schema
-    // is given or inferred — so by the time `df` exists the bucket set
-    // this read will serve is fixed. Re-verify the .old_ invariant AFTER
-    // that listing: a swap that began between the final midSwap() above
-    // and the read's own listing is the residual TOCTOU window — catching
-    // it here turns a torn read into a loud failure instead of a silently
-    // partial state. The schema file is re-read for the same reason: a
-    // fold widens it before its swap, so a listing that already holds a
-    // widened bucket is followed by a changed schema file.
-    val schema = recordedSchema(fs, root)
-    val reader = schema.fold(spark.read.option("mergeSchema", "true"))(
-      s => spark.read.schema(s.add(BucketCol, IntegerType)))
-    val df = (recordedLayout(fs, root) match {
-      case Some(Layout(n, Some(keys))) =>
-        StateBucketPruning.ensure(spark)
-        reader.option(StateBucketPruning.BucketsOption, n.toLong)
-          .option(StateBucketPruning.KeysOption, keysToJson(keys))
-      case _ => reader
-    }).parquet(statePath)
-    val tornAfter = midSwap()
-    require(tornAfter.isEmpty,
-      s"state at $statePath began a bucket swap (${tornAfter.mkString(",")}) " +
-        "while this read was resolving its file listing — retry the read")
-    require(recordedSchema(fs, root) == schema,
-      s"state at $statePath widened its schema while this read was resolving " +
-        "its file listing — retry the read")
-    df.filter(col(opCol) =!= deleteOp)
+    read(None).filter(col(opCol) =!= deleteOp)
   }
 
   /** Per-key current state maintained IN the stream via

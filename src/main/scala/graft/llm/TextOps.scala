@@ -560,16 +560,9 @@ object TextOps {
   /** The live generation's path prefix: `<path>` for the initial root
     * layout, `<path>/gen-NNNNNNNN` after a compaction.
     */
-  private def currentTextGen(s: SparkSession, path: String): String = {
-    val cur = new org.apache.hadoop.fs.Path(path, "_current")
-    val fs = cur.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cur)) path
-    else {
-      val in = fs.open(cur)
-      val gen = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      s"$path/$gen"
-    }
-  }
+  private def currentTextGen(s: SparkSession, path: String): String =
+    graft.AtomicFile.read(new org.apache.hadoop.fs.Path(path, "_current"), s.sparkContext.hadoopConfiguration)
+      .fold(path)(gen => s"$path/${gen.trim}")
 
   /** Rewrite the live generation with all LSM merges applied and
     * atomically repoint `_current` at it. Superseded generations stay
@@ -594,19 +587,8 @@ object TextOps {
       .agg(sum(col("n")).as("n"), sum(col("n_len")).as("n_len"),
         sum(col("total_dl")).as("total_dl"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/$next/stats")
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path, s"_current.$next.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.getBytes("UTF-8")) finally out.close()
-    // FileContext rename with OVERWRITE: the atomic primitive plain
-    // FileSystem.rename lacks (it refuses an existing destination)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(root).toUri, conf)
-    fc.rename(fs.makeQualified(tmp),
-      fs.makeQualified(new org.apache.hadoop.fs.Path(path, "_current")),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.AtomicFile.replace(new org.apache.hadoop.fs.Path(path, "_current"), next,
+      s.sparkContext.hadoopConfiguration)
   }
 
   /** Delete superseded generations — older `gen-*` directories and,

@@ -1436,16 +1436,9 @@ object VectorOps {
   /** The live code directory name: `_current`'s contents, or the
     * initial build's `codes` when no compaction has happened yet.
     */
-  private def currentCodesDir(s: SparkSession, path: String): String = {
-    val cur = new org.apache.hadoop.fs.Path(path, "_current")
-    val fs = cur.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cur)) "codes"
-    else {
-      val in = fs.open(cur)
-      try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
-    }
-  }
+  private def currentCodesDir(s: SparkSession, path: String): String =
+    graft.AtomicFile.read(new org.apache.hadoop.fs.Path(path, "_current"), s.sparkContext.hadoopConfiguration)
+      .fold("codes")(_.trim)
 
   /** Rewrite the live code set as one file per cell in a new generation
     * and atomically repoint `_current` at it. Old generations are left
@@ -1473,18 +1466,8 @@ object VectorOps {
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$next")
     val conf = s.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path, s"_current.$next.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(next.getBytes("UTF-8")) finally out.close()
-    // FileContext rename with OVERWRITE is the atomic primitive plain
-    // FileSystem.rename lacks (it refuses an existing destination)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.makeQualified(root).toUri, conf)
-    fc.rename(fs.makeQualified(tmp),
-      fs.makeQualified(new org.apache.hadoop.fs.Path(path, "_current")),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.AtomicFile.replace(new org.apache.hadoop.fs.Path(path, "_current"), next, conf)
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     // clear exactly the folded tombstone files (see above): the live
     // generation no longer contains those rows. A reader still scanning
     // the SUPERSEDED generation is under the same drain contract as

@@ -82,7 +82,8 @@ class JobCeilingSpec extends SparkSpec {
       assert(got.map(_.getAs[Long]("id")).toSeq == Seq(7L))
       assert(jobs.size == 1, jobs.mkString("; "))
       val bucket = got.head.getAs[Int](Stream.BucketCol)
-      val files = new java.io.File(path, s"${Stream.BucketCol}=$bucket").listFiles().count(_.getName.endsWith(".parquet"))
+      val gen = Stream.generationDir(new org.apache.hadoop.fs.Path(path), bucket, Stream.committed(spark, path).get.live(bucket))
+      val files = new java.io.File(gen.toUri.getPath).listFiles().count(_.getName.endsWith(".parquet"))
       assert(tasks.get >= 1 && tasks.get <= files, s"${tasks.get} tasks over $files files")
     } finally spark.sparkContext.removeSparkListener(listener)
   }

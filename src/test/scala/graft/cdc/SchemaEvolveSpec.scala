@@ -164,58 +164,6 @@ class SchemaEvolveSpec extends SparkSpec {
     assertInferredSchema(written, "writeState")
   }
 
-  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
-    Files.walk(from).forEach(p => { Files.copy(p, to.resolve(from.relativize(p).toString)); () })
-
-  test("a crash after the widened schema is recorded, before the bucket swap, re-runs to the same state") {
-    val s = spark
-    import s.implicits._
-    val base = tmp("evc")
-    val v1 = base.resolve("v1")
-    Stream.foldBatch((0 until 40).map(i => (i.toLong, i.toLong, "c", i / 2.0)).toDF("scn", "id", "op", "value"),
-      Seq("id"), Seq("scn"), v1.toString, stateBuckets = 16)
-    def widening = Seq((100L, 1L, "u", 9.5, "evolved"), (101L, 1000L, "c", 7.0, "fresh"))
-      .toDF("scn", "id", "op", "value", "note")
-    def fold(root: java.nio.file.Path): Unit =
-      Stream.foldBatch(widening, Seq("id"), Seq("scn"), root.toString, stateBuckets = 16)
-    def rows(root: java.nio.file.Path) = Stream.readCurrentState(spark, root.toString)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("scn"), r.getAs[Double]("value"),
-        Option(r.getAs[String]("note")))).toSet
-    val done = base.resolve("done")
-    copyTree(v1, done)
-    fold(done)
-    val wide = Files.readAllBytes(done.resolve("_state_schema"))
-    // the crash point: the widened schema file is in place, the tmp
-    // write is partial, no bucket is swapped yet
-    val cut = base.resolve("cut")
-    copyTree(v1, cut)
-    Files.delete(cut.resolve("._state_schema.crc"))
-    Files.write(cut.resolve("_state_schema"), wide)
-    Files.createDirectories(cut.resolve(".delta_tmp/state_bucket=3"))
-    // and one cut inside the schema replace: old file deleted, tmp complete
-    val torn = base.resolve("torn")
-    copyTree(v1, torn)
-    Files.delete(torn.resolve("._state_schema.crc"))
-    Files.delete(torn.resolve("_state_schema"))
-    Files.write(torn.resolve("._state_schema.tmp"), wide)
-    // and a root that never had the file, cut while writing its tmp
-    val partial = base.resolve("partial")
-    copyTree(v1, partial)
-    Files.delete(partial.resolve("._state_schema.crc"))
-    Files.delete(partial.resolve("_state_schema"))
-    Files.write(partial.resolve("._state_schema.tmp"), wide.take(wide.length / 2))
-    for (root <- Seq(cut, torn, partial)) {
-      fold(root)
-      assert(rows(root) == rows(done), root.toString)
-      assert(Stream.readCurrentState(spark, root.toString).schema ==
-        Stream.readCurrentState(spark, done.toString).schema, root.toString)
-      assert(Files.readAllBytes(root.resolve("_state_schema")).sameElements(wide), root.toString)
-      assert(!Files.exists(root.resolve(".delta_tmp")) && !Files.exists(root.resolve("._state_schema.tmp")))
-      assertInferredSchema(root.toString, root.getFileName.toString)
-    }
-    assert(rows(done).contains((2L, 2L, 1.0, None)) && rows(done).contains((1L, 100L, 9.5, Some("evolved"))))
-  }
-
   test("a batch that changes a column's type fails before the swap and leaves the state readable") {
     val s = spark
     import s.implicits._

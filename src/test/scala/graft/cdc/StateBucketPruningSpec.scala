@@ -52,9 +52,11 @@ class StateBucketPruningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     scans.head
   }
 
-  private def filesIn(root: String, bucket: Int): Long =
-    new java.io.File(root, s"${Stream.BucketCol}=$bucket").listFiles()
-      .count(_.getName.endsWith(".parquet")).toLong
+  /** The parquet files of `bucket`'s live generation. */
+  private def filesIn(root: String, bucket: Int): Long = {
+    val gen = Stream.generationDir(new org.apache.hadoop.fs.Path(root), bucket, Stream.committed(spark, root).get.live(bucket))
+    new java.io.File(gen.toUri.getPath).listFiles().count(_.getName.endsWith(".parquet")).toLong
+  }
 
   /** The bucket the row matching `cond` was written to. */
   private def bucketOfRow(root: String, cond: Column): Int = {
@@ -129,22 +131,6 @@ class StateBucketPruningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("a UTF8_LCASE key looked up with other case is not pruned") {
     val root = stateOf(rows.withColumn("name", collate(col("name"), "UTF8_LCASE")), Seq("name"))
     assert(assertUnpruned(root, col("name") === "N7").size == 1)
-  }
-
-  test("a marker holding only the count reads correctly, unpruned") {
-    val root = stateOf(rows, Seq("id"))
-    // the marker as earlier code wrote it: the count alone
-    val marker = new org.apache.hadoop.fs.Path(root, "_state_buckets")
-    val out = marker.getFileSystem(spark.sparkContext.hadoopConfiguration).create(marker, true)
-    try out.write(s"$Buckets\n".getBytes("UTF-8")) finally out.close()
-    assert(assertUnpruned(root, col("id") === 7L).size == 1)
-    // a fold checks the count alone and leaves the commit marker as it is
-    val s = spark
-    import s.implicits._
-    Stream.foldBatch(Seq((7L, "n7", 2.0, "u", 500L)).toDF("id", "name", "price", "op", "scn"),
-      Seq("id"), Seq("scn"), root, Buckets)
-    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(root, "_state_buckets")), "UTF-8") == s"$Buckets\n")
-    assert(assertUnpruned(root, col("id") === 7L).map(_.getAs[Double]("price")) == Seq(2.0))
   }
 
   test("a caller's own state_bucket filter is left as written") {

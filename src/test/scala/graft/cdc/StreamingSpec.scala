@@ -119,17 +119,16 @@ class StreamingSpec extends SparkSpec {
     val q1 = startMaterialize(in, state, chk)
     q1.awaitTermination()
     assert(readState(statePath) == batchState(first))
-    def bucketFiles(): Map[String, Map[String, String]] = {
-      val root = new java.io.File(statePath)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("state_bucket="))
-        .map { d =>
-          d.getName -> d.listFiles().filter(_.isFile).map { f =>
-            val md = java.security.MessageDigest.getInstance("MD5")
-              .digest(java.nio.file.Files.readAllBytes(f.toPath))
-            f.getName -> md.map("%02x".format(_)).mkString
-          }.toMap
-        }.toMap
-    }
+    // each live bucket's generation, and the digests of its files
+    def bucketFiles(): Map[Int, (Long, Map[String, String])] =
+      Stream.committed(spark, statePath).get.live.map { case (n, gen) =>
+        val d = new java.io.File(Stream.generationDir(new org.apache.hadoop.fs.Path(statePath), n, gen).toUri.getPath)
+        n -> (gen -> d.listFiles().filter(_.isFile).map { f =>
+          val md = java.security.MessageDigest.getInstance("MD5")
+            .digest(java.nio.file.Files.readAllBytes(f.toPath))
+          f.getName -> md.map("%02x".format(_)).mkString
+        }.toMap)
+      }
     val before = bucketFiles()
     // batch 2: delta touches exactly one key → one bucket
     val deltaKey = 7L
@@ -141,53 +140,13 @@ class StreamingSpec extends SparkSpec {
     val after = bucketFiles()
     val hot = s.range(1).select(
       pmod(xxhash64(lit(deltaKey)), lit(16)).cast("int")).as[Int].head()
-    val hotDir = s"state_bucket=$hot"
-    assert(after(hotDir) != before(hotDir), "delta bucket was not rewritten")
-    before.keys.filterNot(_ == hotDir).foreach { d =>
-      assert(after(d) == before(d), s"untouched bucket $d was rewritten")
+    assert(after(hot)._1 > before(hot)._1, "delta bucket has no new generation")
+    assert(after(hot)._2 != before(hot)._2, "delta bucket was not rewritten")
+    assert(after.keySet == before.keySet)
+    before.keys.filterNot(_ == hot).foreach { n =>
+      assert(after(n) == before(n), s"untouched bucket $n was rewritten")
     }
-    assert(before.keys.filterNot(_ == hotDir).nonEmpty)
-  }
-
-  test("bucket-swap crash repair: interrupted renames roll forward/back to a valid state") {
-    val s = spark
-    import s.implicits._
-    val (in, state, chk) = (tmp("in4"), tmp("state4"), tmp("chk4"))
-    val statePath = state.resolve("t").toString
-    val first = (0 until 40).map(i => Ev(i.toLong, i.toLong, "c", i.toDouble))
-    writeBatchJson(in, first, "a-0.json")
-    val q1 = startMaterialize(in, state, chk)
-    q1.awaitTermination()
-    val before = readState(statePath)
-    val root = new java.io.File(statePath)
-    def dirOf(n: String) = new java.io.File(root, n)
-    // simulate a crash BETWEEN rename(dst→.old_N) and rename(tmp→dst):
-    // bucket dir missing, .old_N holds the data
-    val someBucket = root.listFiles().filter(_.getName.startsWith("state_bucket=")).head
-    val n = someBucket.getName.stripPrefix("state_bucket=")
-    assert(someBucket.renameTo(dirOf(s".old_$n")))
-    // plus a stale tmp dir from the same doomed batch
-    assert(dirOf(".delta_tmp").mkdir())
-    // next batch (any delta) must repair first: state equals before+delta
-    val touched = Seq(Ev(1000L, 3L, "u", 99.0))
-    writeBatchJson(in, touched, "b-0.json")
-    val q2 = startMaterialize(in, state, chk)
-    q2.awaitTermination()
-    assert(readState(statePath) == batchState(first ++ touched))
-    assert(!dirOf(s".old_$n").exists() && !dirOf(".delta_tmp").exists(),
-      "repair must clear crash leftovers")
-    // and the crash-after-swap variant: .old_N beside a LIVE bucket dir
-    val live = root.listFiles().filter(_.getName.startsWith("state_bucket=")).head
-    val m = live.getName.stripPrefix("state_bucket=")
-    val oldDir = dirOf(s".old_$m")
-    assert(oldDir.mkdir())
-    java.nio.file.Files.write(oldDir.toPath.resolve("junk.parquet"), Array[Byte](1, 2, 3))
-    val touched2 = Seq(Ev(1001L, 5L, "u", 77.0))
-    writeBatchJson(in, touched2, "c-0.json")
-    val q3 = startMaterialize(in, state, chk)
-    q3.awaitTermination()
-    assert(readState(statePath) == batchState(first ++ touched ++ touched2))
-    assert(!oldDir.exists(), "post-swap leftover .old_ dir must be deleted")
+    assert(before.keys.filterNot(_ == hot).nonEmpty)
   }
 
   test("a flat unbucketed state root fails the batch, pointing to Stream.writeState") {
@@ -233,25 +192,6 @@ class StreamingSpec extends SparkSpec {
         assert(desc == callerDesc, "throwing branch")
       }
     } finally sc.setJobDescription(prior)
-  }
-
-  test("a root without _state_schema reads by inference, and its next fold records the schema") {
-    val (in, state, chk) = (tmp("legacy-in"), tmp("legacy-st"), tmp("legacy-chk"))
-    val statePath = state.resolve("t").toString
-    val (first, second) = events.splitAt(120)
-    writeBatchJson(in, first, "a-0.json")
-    startMaterialize(in, state, chk).awaitTermination()
-    // the layout a state written before the schema file existed has
-    val meta = new java.io.File(statePath, "_state_schema")
-    assert(meta.delete() && new java.io.File(statePath, "._state_schema.crc").delete())
-    assert(readState(statePath) == batchState(first))
-    val inferred = spark.read.option("mergeSchema", "true").parquet(statePath).schema
-    assert(Stream.readCurrentState(spark, statePath).schema == inferred)
-    writeBatchJson(in, second, "b-0.json")
-    startMaterialize(in, state, chk).awaitTermination()
-    assert(meta.exists(), "the fold records the schema of a root that lacks one")
-    assert(readState(statePath) == batchState(events))
-    assert(Stream.readCurrentState(spark, statePath).schema == inferred)
   }
 
   test("readCurrentState fixes its file listing before it returns: a bucket deleted afterwards is still read") {
