@@ -4,6 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 /** Schema evolution (SURVEY.md §2.2: the reference sink auto-evolves,
   * `auto.evolve=true` README.md:839, DDL history recorded): new columns
   * appear mid-stream; old data reads as null for them and replay unions
@@ -162,6 +164,78 @@ class SchemaEvolveSpec extends SparkSpec {
     val written = state.resolve("w").toString
     Stream.writeState(spark.read.schema(v2Schema).json(in.toString), written, Seq("id"))
     assertInferredSchema(written, "writeState")
+  }
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    Files.createDirectories(to.getParent)
+    val st = Files.walk(from)
+    try st.iterator().asScala.foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+    finally st.close()
+  }
+
+  /** Every directory under `root`, relative to it. */
+  private def dirs(root: java.nio.file.Path): Set[String] = {
+    val st = Files.walk(root)
+    try st.iterator().asScala.filter(Files.isDirectory(_)).map(p => root.relativize(p).toString).toSet
+    finally st.close()
+  }
+
+  test("a crash after the widened schema is recorded, before the bucket swap, re-runs to the same state") {
+    val s = spark
+    import s.implicits._
+    val base = tmp("evc")
+    val v1 = base.resolve("v1")
+    Stream.foldBatch((0 until 40).map(i => (i.toLong, i.toLong, "c", i / 2.0)).toDF("scn", "id", "op", "value"),
+      Seq("id"), Seq("scn"), v1.toString, stateBuckets = 16)
+    def widening = Seq((100L, 1L, "u", 9.5, "evolved"), (101L, 1000L, "c", 7.0, "fresh"))
+      .toDF("scn", "id", "op", "value", "note")
+    def fold(root: java.nio.file.Path): Unit =
+      Stream.foldBatch(widening, Seq("id"), Seq("scn"), root.toString, stateBuckets = 16, batchId = Some("q:1"))
+    def read(root: java.nio.file.Path) = Stream.readCurrentState(spark, root.toString)
+    def rows(root: java.nio.file.Path) = read(root)
+      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("scn"), r.getAs[Double]("value"),
+        Option(r.getAs[String]("note")))).toSet
+    def stateText(root: java.nio.file.Path) = new String(Files.readAllBytes(root.resolve("_state")), "UTF-8")
+    def generation(root: java.nio.file.Path, n: Int, v: Long) = root.resolve(s"state_bucket=$n/g-$v")
+    val done = base.resolve("done")
+    copyTree(v1, done)
+    fold(done)
+    val wide = Stream.committed(spark, done.toString).get
+    // the schema is recorded in `_state`, so these cuts bracket that
+    // record: the widened buckets are renamed into their generations and
+    // the widened `_state` is written in full, or in part, beside the old
+    def renamed(name: String, state: String): java.nio.file.Path = {
+      val root = base.resolve(name)
+      copyTree(v1, root)
+      wide.live.filter(_._2 == wide.version).foreach { case (n, v) => copyTree(generation(done, n, v), generation(root, n, v)) }
+      Files.write(root.resolve("._state.tmp"), state.getBytes("UTF-8"))
+      Files.createDirectories(root.resolve(".delta_tmp/state_bucket=3"))
+      root
+    }
+    val cut = renamed("cut", stateText(done))
+    val partial = renamed("partial", stateText(done).take(stateText(done).length / 2))
+    // and the widened `_state` in place, the generations it superseded not
+    // yet deleted
+    val recorded = base.resolve("recorded")
+    copyTree(done, recorded)
+    wide.superseded.foreach { case (n, v) => copyTree(generation(v1, n, v), generation(recorded, n, v)) }
+    Files.createDirectories(recorded.resolve(".delta_tmp/state_bucket=3"))
+    // a reader at each cut sees the state before the batch or after it
+    for (root <- Seq(cut, partial)) {
+      assert(read(root).schema == read(v1).schema, root.toString)
+      assert(read(root).collect().toSet == read(v1).collect().toSet, root.toString)
+    }
+    assert(rows(recorded) == rows(done))
+    for (root <- Seq(cut, partial, recorded)) {
+      fold(root)
+      assert(rows(root) == rows(done), root.toString)
+      assert(read(root).schema == read(done).schema, root.toString)
+      assert(stateText(root) == stateText(done), root.toString)
+      assert(dirs(root) == dirs(done), root.toString)
+      assert(!Files.exists(root.resolve(".delta_tmp")) && !Files.exists(root.resolve("._state.tmp")))
+      assertInferredSchema(root.toString, root.getFileName.toString)
+    }
+    assert(rows(done).contains((2L, 2L, 1.0, None)) && rows(done).contains((1L, 100L, 9.5, Some("evolved"))))
   }
 
   test("a batch that changes a column's type fails before the swap and leaves the state readable") {

@@ -149,6 +149,51 @@ class StreamingSpec extends SparkSpec {
     assert(before.keys.filterNot(_ == hot).nonEmpty)
   }
 
+  test("bucket-swap crash repair: interrupted renames roll forward/back to a valid state") {
+    val s = spark
+    import s.implicits._
+    val (in, state, chk) = (tmp("in4"), tmp("state4"), tmp("chk4"))
+    val statePath = state.resolve("t").toString
+    val root = state.resolve("t")
+    val first = (0 until 40).map(i => Ev(i.toLong, i.toLong, "c", i.toDouble))
+    writeBatchJson(in, first, "a-0.json")
+    startMaterialize(in, state, chk).awaitTermination()
+    val v1 = Stream.committed(spark, statePath).get
+    // roll back: batch 1 crashed after renaming its bucket into the next
+    // generation, before `_state` named it, with its tmp dir left beside it
+    val touched = Seq(Ev(1000L, 3L, "u", 99.0))
+    val hot = s.range(1).select(pmod(xxhash64(lit(3L)), lit(16)).cast("int")).as[Int].head()
+    val orphan = root.resolve(s"state_bucket=$hot/g-${v1.version + 1}")
+    Files.createDirectories(orphan)
+    Files.write(orphan.resolve("junk.parquet"), Array[Byte](1, 2, 3))
+    Files.createDirectories(root.resolve(".delta_tmp/state_bucket=3"))
+    assert(readState(statePath) == batchState(first), "a generation _state does not name must not be read")
+    // the re-run batch replaces what the crash left
+    writeBatchJson(in, touched, "b-0.json")
+    startMaterialize(in, state, chk).awaitTermination()
+    assert(readState(statePath) == batchState(first ++ touched))
+    assert(!Files.exists(orphan.resolve("junk.parquet")) && !Files.exists(root.resolve(".delta_tmp")),
+      "the re-run must clear the crash's leftovers")
+    // roll forward: batch 1 crashed after replacing `_state`, before it
+    // deleted the generation it superseded and before the checkpoint
+    // recorded the batch, so the restart replays it
+    val v2 = Stream.committed(spark, statePath).get
+    assert(v2.superseded == Map(hot -> v1.live(hot)))
+    val stale = root.resolve(s"state_bucket=$hot/g-${v1.live(hot)}")
+    Files.createDirectories(stale)
+    Files.write(stale.resolve("junk.parquet"), Array[Byte](1, 2, 3))
+    Files.createDirectories(root.resolve(".delta_tmp/state_bucket=5"))
+    Files.delete(chk.resolve("commits/1"))
+    Files.deleteIfExists(chk.resolve("commits/.1.crc"))
+    assert(readState(statePath) == batchState(first ++ touched), "a superseded generation must not be read")
+    startMaterialize(in, state, chk).awaitTermination()
+    assert(Stream.committed(spark, statePath).contains(v2), "the replayed batch must not commit again")
+    assert(Files.exists(chk.resolve("commits/1")), "the restart must replay batch 1")
+    assert(readState(statePath) == batchState(first ++ touched))
+    assert(!Files.exists(stale) && !Files.exists(root.resolve(".delta_tmp")),
+      "the replay must finish deleting the superseded generation")
+  }
+
   test("a flat unbucketed state root fails the batch, pointing to Stream.writeState") {
     val s = spark
     import s.implicits._
