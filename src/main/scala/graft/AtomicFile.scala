@@ -4,9 +4,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
 
 /** A small file that is the commit point of a generational layout: the
-  * `_current` pointer of an index (`TextOps`, `VectorOps`) and the CDC
-  * state's `_state` (`graft.cdc.Stream`). A reader sees the old contents
-  * or the new, never a mix and never no file.
+  * `_current` pointer of a [[graft.store.Store]] root (the text index,
+  * the IVF-PQ index and the admission state of the dedup folds) and the
+  * CDC state's `_state` (`graft.cdc.Stream`). A reader sees the old
+  * contents or the new, never a mix and never no file.
   *
   * Both calls go through the raw file system under a checksummed one.
   * The replace is a rename, and a crash between renaming the data and

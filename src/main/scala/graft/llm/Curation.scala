@@ -390,42 +390,17 @@ object Curation {
   }
 
   /** Durable-state fold of [[admitLines]] — the `admitBatchToState`
-    * twin for the line rule. `stateDir/out` accumulates the per-doc
-    * scrub output (and doubles as the redelivery guard: a doc id
-    * already present there is skipped); `stateDir/owned` accumulates
-    * the line-hash set. Write ORDER is a correctness decision: out/
-    * first, owned/ second — a crash between the two appends costs only
-    * a missed future dedup for this batch's lines (the safe direction);
-    * the reverse order would let a redelivery see its own chunks as
-    * "owned" and scrub the whole batch to empty.
+    * twin for the line rule, through the shared staged commit
+    * (`NearDedup.stagedAdmitFold`). The state's `out/` accumulates the
+    * per-doc scrub output (and doubles as the redelivery guard: a doc id
+    * already present there is skipped); its `owned/` accumulates the
+    * line-hash set. The two commit together, so a crash between them
+    * cannot drop a batch's lines from later dedup.
     */
-  def admitLinesToState(batchDocs: DataFrame, stateDir: String, chunkWords: Int = 3): Unit = {
-    val spark = batchDocs.sparkSession
-    val outP = new org.apache.hadoop.fs.Path(s"$stateDir/out")
-    val ownedP = new org.apache.hadoop.fs.Path(s"$stateDir/owned")
-    val fs = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crashed compactAdmissionState swap leaves the live dir absent —
-    // recover before the exists() checks below (NearDedup convention)
-    NearDedup.recoverCompaction(fs, outP)
-    NearDedup.recoverCompaction(fs, ownedP)
-    val docs = batchDocs.select("doc_id", "text")
-    val owned =
-      if (fs.exists(ownedP)) spark.read.parquet(ownedP.toString)
-      else chunkedLines(docs.limit(0), chunkWords).select("ck")
-    val fresh =
-      if (fs.exists(outP))
-        docs.join(spark.read.parquet(outP.toString).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-      else docs
-    // admitLines returns both results already materialized from one
-    // span-persisted chunk/owner computation, so the two appends below
-    // are pure writes
-    val (out, newOwned) = admitLines(fresh, owned, chunkWords)
-    if (!out.isEmpty) {
-      out.write.mode("append").parquet(outP.toString)
-      newOwned.write.mode("append").parquet(ownedP.toString)
-    }
-  }
+  def admitLinesToState(batchDocs: DataFrame, stateDir: String, chunkWords: Int = 3): Unit =
+    NearDedup.stagedAdmitFold(batchDocs, stateDir,
+      emptyOwned = chunkedLines(_, chunkWords).select("ck"),
+      admit = admitLines(_, _, chunkWords))
 
   /** Continuous line-level corpus scrub: the streaming twin, same
     * foreachBatch shape as `NearDedup.admitStream` /

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Memo, Tables}
+import graft.store.Store
 
 /** Near-duplicate detection (SURVEY.md §2.12): MinHash + LSH banding,
   * shingle-set Jaccard verification, n-gram Jaccard, and SimHash — all as
@@ -674,9 +675,9 @@ object NearDedup {
   }
 
   /** Durable-state fold of [[admitSubstring]] — the `admitBatchToState`
-    * twin for the substring rule. `stateDir/out` accumulates the
+    * twin for the substring rule. The state's `out/` accumulates the
     * admitted docs (and is the redelivery guard: a doc_id already there
-    * is skipped); `stateDir/owned` accumulates the gram-hash set (which
+    * is skipped); its `owned/` accumulates the gram-hash set (which
     * also re-rejects redelivered REJECTED docs — their grams are owned,
     * so they fail again deterministically).
     *
@@ -701,31 +702,30 @@ object NearDedup {
       admit = (fresh, owned) => admitSubstring(fresh, owned, k))
 
   /** The staged-commit fold shared by every owned-set admission rule
-    * (round-14 ADVICE: the recovery loop, owned/fresh bootstrap, UUID
-    * stage, `_committed` marker and promotion are crash-safety-critical
-    * and existed as two verbatim copies — one fix applied to one copy
-    * would silently leave the other divergent). `emptyOwned` supplies
-    * the rule's zero-row owned-state schema (called on an empty doc
-    * slice); `admit` is the rule's admission function, which MUST
-    * eagerly materialize (localCheckpoint) both results so the state
-    * reads here finish before any write below changes those paths.
+    * ([[admitSubstringToState]], [[admitWinnowToState]] and
+    * `Curation.admitLinesToState`: the recovery loop, owned/fresh
+    * bootstrap, UUID stage, `_committed` marker and promotion are
+    * crash-safety-critical, so they exist once). `stateDir` is a
+    * [[graft.store.Store]] root: `out/` and `owned/` live in its live
+    * generation, which the first batch publishes empty, and batches are
+    * staged under `stateDir/stage/<uuid>` and promoted into it.
+    * `emptyOwned` supplies the rule's zero-row owned-state schema (called
+    * on an empty doc slice); `admit` is the rule's admission function,
+    * which MUST eagerly materialize (localCheckpoint) both results so the
+    * state reads here finish before any write below changes those paths.
     */
-  private def stagedAdmitFold(
+  private[llm] def stagedAdmitFold(
       batchDocs: DataFrame,
       stateDir: String,
       emptyOwned: DataFrame => DataFrame,
       admit: (DataFrame, DataFrame) => (DataFrame, DataFrame)): Unit = {
     val spark = batchDocs.sparkSession
-    val outP = new org.apache.hadoop.fs.Path(s"$stateDir/out")
-    val ownedP = new org.apache.hadoop.fs.Path(s"$stateDir/owned")
+    val live = Store.live(spark, stateDir).getOrElse(Store.publish(spark, stateDir)(_ => ()))
+    val outP = new org.apache.hadoop.fs.Path(s"$live/out")
+    val ownedP = new org.apache.hadoop.fs.Path(s"$live/owned")
     val stageRoot = new org.apache.hadoop.fs.Path(s"$stateDir/stage")
     val fs = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recovery: first complete/clean any crashed COMPACTION swap (a
-    // crash between its renames leaves the live dir absent — a bare
-    // exists() check would then re-bootstrap from day zero), then
-    // complete committed admission stages, discard uncommitted ones
-    recoverCompaction(fs, outP)
-    recoverCompaction(fs, ownedP)
+    // recovery: complete committed stages, discard uncommitted ones
     if (fs.exists(stageRoot))
       fs.listStatus(stageRoot).foreach { st =>
         if (fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_committed")))
@@ -741,8 +741,8 @@ object NearDedup {
         docs.join(spark.read.parquet(outP.toString).select("doc_id"),
           Seq("doc_id"), "left_anti")
       else docs
-    val (out, newOwned) = admit(fresh, owned)
     if (!fresh.isEmpty) {
+      val (out, newOwned) = admit(fresh, owned)
       val stage = new org.apache.hadoop.fs.Path(stageRoot,
         java.util.UUID.randomUUID().toString)
       out.write.parquet(new org.apache.hadoop.fs.Path(stage, "out").toString)
@@ -786,97 +786,27 @@ object NearDedup {
     ()
   }
 
-  /** Compact an admission-state root's `out/` and `owned/` parquet dirs
-    * (round 15) — the operational counterpart of the index family's
+  /** Compact an admission state's `out/` and `owned/` tables (round 15)
+    * — the operational counterpart of the index family's
     * `compactIvfPqIndex`/`compactTextIndex`: every durable fold batch
     * lands its own part files, so a year of daily batches turns the
     * membership-join side into thousands of file opens. Rewrites each
-    * dir to `ceil(bytes/targetBytes)` files (coalesce — no shuffle, no
-    * required clustering) behind a crash-safe swap; content is
-    * byte-equivalent, so subsequent admissions are unchanged
-    * (spec-pinned). SINGLE-WRITER like the folds themselves: must not
-    * run concurrently with an admission batch.
+    * table with [[graft.rel.Scale.compactFiles]] into the next
+    * generation, publishes it and deletes the superseded one. Content is
+    * unchanged, so subsequent admissions are unchanged (spec-pinned).
+    * SINGLE-WRITER like the folds themselves: must not run concurrently
+    * with an admission batch.
     */
   def compactAdmissionState(spark: SparkSession, stateDir: String,
-      targetBytes: Long = 128L << 20): Unit = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("out", "owned").foreach { sub =>
-      compactStateDir(spark, fs, new org.apache.hadoop.fs.Path(root, sub), targetBytes)
-    }
-  }
-
-  /** Compact ONE live parquet directory in place via the staged-swap
-    * protocol. Crash-safe at every point (recovery in
-    * [[recoverCompaction]], run by every fold and by the next
-    * compaction attempt):
-    *
-    *  1. write the compacted copy to `compact-stage-<name>-<uuid>/data`
-    *     and mark it `_committed`;
-    *  2. `rename(live, compact-old-<name>-<uuid>)` — live vanishes;
-    *  3. `rename(stage/data, live)` — live reappears compacted;
-    *  4. delete the stage and old dirs.
-    *
-    * A crash before 2 leaves an orphan stage (deleted by recovery); a
-    * crash between 2 and 3 leaves a committed stage + no live dir
-    * (recovery completes the swap); a crash before 4 leaves leftovers
-    * beside a healthy live dir (recovery deletes them). Every rename is
-    * `require`d (the promoteStage convention).
-    */
-  private[llm] def compactStateDir(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path, targetBytes: Long): Boolean = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    recoverCompaction(fs, live)
-    if (!fs.exists(live)) return false
-    val bytes = fs.getContentSummary(live).getLength
-    val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val uuid = java.util.UUID.randomUUID().toString
-    val parent = live.getParent
-    val stage = new org.apache.hadoop.fs.Path(parent, s"compact-stage-${live.getName}-$uuid")
-    val old = new org.apache.hadoop.fs.Path(parent, s"compact-old-${live.getName}-$uuid")
-    spark.read.parquet(live.toString).coalesce(files)
-      .write.parquet(new org.apache.hadoop.fs.Path(stage, "data").toString)
-    fs.create(new org.apache.hadoop.fs.Path(stage, "_committed")).close()
-    require(fs.rename(live, old), s"compactStateDir: rename $live -> $old failed")
-    require(fs.rename(new org.apache.hadoop.fs.Path(stage, "data"), live),
-      s"compactStateDir: rename staged data -> $live failed (state recoverable from $stage)")
-    fs.delete(stage, true)
-    fs.delete(old, true)
-    true
-  }
-
-  /** Recovery for a crashed [[compactStateDir]] swap over `live` — see
-    * its crash-window analysis. Shared by the durable folds (which must
-    * never mistake a mid-swap absent live dir for "no state") and by
-    * the next compaction attempt.
-    */
-  private[llm] def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path): Unit = {
-    val parent = live.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val name = live.getName
-    val entries = fs.listStatus(parent).map(_.getPath)
-    val stages = entries.filter(_.getName.startsWith(s"compact-stage-$name-"))
-    val olds = entries.filter(_.getName.startsWith(s"compact-old-$name-"))
-    stages.foreach { st =>
-      val committed = fs.exists(new org.apache.hadoop.fs.Path(st, "_committed"))
-      if (committed && !fs.exists(live)) {
-        require(fs.rename(new org.apache.hadoop.fs.Path(st, "data"), live),
-          s"recoverCompaction: completing swap $st -> $live failed")
+      targetBytes: Long = 128L << 20): Unit =
+    Store.live(spark, stateDir).foreach { live =>
+      val fs = new org.apache.hadoop.fs.Path(live).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Store.publish(spark, stateDir) { next =>
+        Seq("out", "owned").filter(t => fs.exists(new org.apache.hadoop.fs.Path(s"$live/$t")))
+          .foreach(t => graft.rel.Scale.compactFiles(spark, s"$live/$t", s"$next/$t", targetBytes))
       }
-      fs.delete(st, true)
+      Store.gc(spark, stateDir)
     }
-    olds.foreach { o =>
-      // an old dir with live still absent means the committed stage was
-      // ALSO lost (should be impossible under the protocol) — restore
-      // the pre-compaction state rather than lose it
-      if (!fs.exists(live)) {
-        require(fs.rename(o, live), s"recoverCompaction: restoring $o -> $live failed")
-      } else fs.delete(o, true)
-    }
-    ()
-  }
 
   /** Continuous substring-level corpus dedup: the streaming twin, same
     * foreachBatch shape as [[admitStream]] / `Curation.admitLinesStream`.

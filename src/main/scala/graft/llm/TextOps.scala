@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Memo, Tables}
+import graft.store.Store
 
 /** North-star LLM-pipeline text operators (SURVEY.md §2.12): text
   * analysis, fingerprinting, exact + near dedup over `documents`.
@@ -425,21 +426,23 @@ object TextOps {
   //
   // The lexical twin of ann_ivfpq_disk: a 100 TB corpus tokenizes and
   // aggregates its postings ONCE, then serves queries from the durable
-  // artifact for weeks. Layout — all plain parquet:
-  //   <path>/postings/ (term, c_id, tf) range-partitioned AND sorted by
-  //                    term: every file/row-group carries a tight
-  //                    (min,max) term range, so a query's static term
-  //                    filter skips whole files at the scan. This is
-  //                    the right pruning tool for an OPEN key space
-  //                    (vocabulary), where ann_ivfpq_disk's directory-
-  //                    per-key partitioning would create millions of
-  //                    directories.
-  //   <path>/df/      (term, df) — same layout
-  //   <path>/doclen/  (c_id, dl)
-  //   <path>/stats/   (n, avgdl) — 1 row
-  //   <path>/_graft_index_ok — commit marker written LAST (staged-
-  //                    commit convention; re-save over a committed
-  //                    index is a no-op)
+  // artifact for weeks. `<path>` is a [[graft.store.Store]] root: its
+  // `_current` names the live generation, and every table lives in it —
+  // all plain parquet:
+  //   <gen>/postings/ (term, c_id, tf) range-partitioned AND sorted by
+  //                   term: every file/row-group carries a tight
+  //                   (min,max) term range, so a query's static term
+  //                   filter skips whole files at the scan. This is
+  //                   the right pruning tool for an OPEN key space
+  //                   (vocabulary), where ann_ivfpq_disk's directory-
+  //                   per-key partitioning would create millions of
+  //                   directories.
+  //   <gen>/df/       (term, df) — same layout
+  //   <gen>/doclen/   (c_id, dl)
+  //   <gen>/stats/    (n, n_len, total_dl) — one row per build or batch
+  //   <gen>/delta-<uuid>/ one appended batch's four tables
+  // The first build publishes generation 1; a re-save over a committed
+  // index is a no-op.
 
   /** Number of text-index builds this JVM has run (save-once
     * observability, mirroring VectorOps.ivfPqSaveCount).
@@ -448,55 +451,43 @@ object TextOps {
 
   def saveTextIndex(docs: DataFrame, path: String): Unit = {
     val s = docs.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(path, "_graft_index_ok")
-    if (fs.exists(marker)) return
+    if (Store.live(s, path).isDefined) return
     textIndexSaveCount.incrementAndGet()
-    // staged commit (the Stream.scala/NearDedup protocol): build the
-    // whole artifact — marker INCLUDED — in a sibling stage dir, then
-    // one rename publishes it. A reader never sees a half-written
-    // index (bm25TopKDisk requires the marker, which only exists
-    // inside a fully-built tree), and a build torn by a crash leaves
-    // only an orphan stage dir, not a corrupt root.
-    val stage = new org.apache.hadoop.fs.Path(
-      path + ".stage-" + java.util.UUID.randomUUID)
+    Store.publish(s, path)(writeTextTables(docs, _))
+  }
+
+  /** The four tables of a text index over `docs`, written under `dir`:
+    * the first build's generation, or one appended batch's delta.
+    */
+  private def writeTextTables(docs: DataFrame, dir: String): Unit = {
     val tf = docs
       .select(col("doc_id").as("c_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy("c_id", "term").agg(count(lit(1)).as("tf"))
-      .persist() // feeds postings, df and doclen; released below
-    tf.repartitionByRange(col("term")).sortWithinPartitions("term", "c_id")
-      .write.mode("overwrite").parquet(s"$stage/postings")
-    tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$stage/df")
-    tf.groupBy("c_id").agg(sum(col("tf")).cast("double").as("dl"))
-      .write.mode("overwrite").parquet(s"$stage/doclen")
-    tf.unpersist()
-    // stats as ADDITIVE components, not derived ratios: appends write
-    // one more (n, n_len, total_dl) row and serving sums before the
-    // one division — the LSM trick that lets df/stats merge at read.
-    // dl is an integer-valued double, so the sums are exact and
-    // sum/count is bit-identical to the inline path's avg(dl).
-    docs.agg(count(lit(1)).cast("double").as("n"))
-      .crossJoin(s.read.parquet(s"$stage/doclen")
-        .agg(count(lit(1)).cast("double").as("n_len"),
+      .persist() // feeds postings, df, doclen and stats
+    try {
+      tf.repartitionByRange(col("term")).sortWithinPartitions("term", "c_id")
+        .write.mode("overwrite").parquet(s"$dir/postings")
+      tf.groupBy("term").agg(count(lit(1)).as("df"))
+        .repartitionByRange(col("term")).sortWithinPartitions("term")
+        .write.mode("overwrite").parquet(s"$dir/df")
+      val dlen = tf.groupBy("c_id").agg(sum(col("tf")).cast("double").as("dl"))
+      dlen.write.mode("overwrite").parquet(s"$dir/doclen")
+      // stats as ADDITIVE components, not derived ratios: appends write
+      // one more (n, n_len, total_dl) row and serving sums before the
+      // one division — the LSM trick that lets df/stats merge at read.
+      // dl is an integer-valued double, so the sums are exact and
+      // sum/count is bit-identical to the inline path's avg(dl).
+      docs.agg(count(lit(1)).cast("double").as("n"))
+        .crossJoin(dlen.agg(count(lit(1)).cast("double").as("n_len"),
           sum(col("dl")).as("total_dl")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/stats")
-    fs.create(new org.apache.hadoop.fs.Path(stage, "_graft_index_ok"), true)
-      .close()
-    if (fs.exists(root)) {
-      if (fs.exists(marker)) {
-        // a concurrent builder won with a complete index; ours is surplus
-        require(fs.delete(stage, true), s"failed to discard stage $stage")
-        return
-      }
-      // torn remains of an earlier non-staged attempt: safe to clear —
-      // no marker means no reader ever accepted it
-      require(fs.delete(root, true), s"failed to clear torn index at $path")
-    }
-    require(fs.rename(stage, root), s"failed to publish text index $stage -> $path")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    } finally { tf.unpersist(); () }
   }
+
+  /** The live generation of the text index at `path`. */
+  private def liveTextIndex(s: SparkSession, path: String): String =
+    Store.live(s, path).getOrElse(
+      throw new IllegalArgumentException(s"no committed text index at $path"))
 
   /** BM25 served from a committed [[saveTextIndex]] artifact. The query
     * is driver-side (as in any search engine), so its distinct terms —
@@ -510,27 +501,24 @@ object TextOps {
   def bm25TopKDisk(docs: DataFrame, queryIds: Seq[Long], k: Int,
       path: String): DataFrame = {
     val s = docs.sparkSession
-    val hp = new org.apache.hadoop.fs.Path(path, "_graft_index_ok")
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(hp), s"no committed text index at $path")
-    val live = currentTextGen(s, path)
+    val live = liveTextIndex(s, path)
     import s.implicits._
     val qt = docs.filter(col("doc_id").isin(queryIds: _*))
       .select(col("doc_id").as("q_id"), explode(split(col("text"), " ")).as("term"))
       .distinct().as[(Long, String)].collect()
     val terms = qt.map(_._2).distinct.toSeq
-    val post = s.read.parquet(tablePaths(s, live, "postings"): _*)
+    val post = Store.read(s, live, "postings")
       .filter(col("term").isin(terms: _*))
     // read-time merge of the LSM generations ([[appendTextIndex]]):
     // batches have disjoint doc ids, so df rows are ADDITIVE per term
     // (summed here, AFTER the pushed term filter — query-vocab rows
     // only) and the stats components sum before the one division. On a
     // never-appended index both reduce to the single build's values.
-    val dfq = s.read.parquet(tablePaths(s, live, "df"): _*)
+    val dfq = Store.read(s, live, "df")
       .filter(col("term").isin(terms: _*))
       .groupBy("term").agg(sum(col("df")).as("df"))
-    val dlen = s.read.parquet(tablePaths(s, live, "doclen"): _*)
-    val stats = broadcast(s.read.parquet(tablePaths(s, live, "stats"): _*)
+    val dlen = Store.read(s, live, "doclen")
+    val stats = broadcast(Store.read(s, live, "stats")
       .agg(sum(col("n")).as("n"),
         (sum(col("total_dl")) / sum(col("n_len"))).as("avgdl")))
     val contrib = broadcast(qt.toSeq.toDF("q_id", "term").join(dfq, "term"))
@@ -543,140 +531,52 @@ object TextOps {
     bm25Rank(contrib, k)
   }
 
-  // --- Text-index compaction: the generation-pointer protocol --------
-  //
-  // Appends accrete small postings files AND df/stats delta rows; at
-  // 100 TB a year of daily appends turns the pushed-filter scan into
-  // thousands of file opens and the read-time df merge into a real
-  // aggregation. Compaction rewrites the LIVE generation with the
-  // merges APPLIED (df one row per term, stats one row, postings
-  // re-sorted by term) into a new `gen-NNNNNNNN` directory and
-  // atomically repoints `_current` — the same root-pointer protocol as
-  // the IVF-PQ index (VectorOps.compactIvfPqIndex): readers resolve
-  // the pointer at plan time and see a whole generation, never a
-  // half-written mix; no pointer means the initial build's root
-  // layout, so existing indexes need no migration.
-
-  /** The live generation's path prefix: `<path>` for the initial root
-    * layout, `<path>/gen-NNNNNNNN` after a compaction.
-    */
-  private def currentTextGen(s: SparkSession, path: String): String =
-    graft.AtomicFile.read(new org.apache.hadoop.fs.Path(path, "_current"), s.sparkContext.hadoopConfiguration)
-      .fold(path)(gen => s"$path/${gen.trim}")
-
-  /** Rewrite the live generation with all LSM merges applied and
-    * atomically repoint `_current` at it. Superseded generations stay
-    * for in-flight readers until [[gcTextIndex]].
+  /** Rewrite the live generation with all LSM merges applied — df one
+    * row per term, stats one row, postings re-sorted by term — and
+    * publish it as the next generation. Appends accrete small postings
+    * files AND df/stats delta rows; at 100 TB a year of daily appends
+    * turns the pushed-filter scan into thousands of file opens and the
+    * read-time df merge into a real aggregation. Superseded generations
+    * stay for in-flight readers until [[graft.store.Store.gc]].
     */
   def compactTextIndex(s: SparkSession, path: String): Unit = {
-    val live = currentTextGen(s, path)
-    val gen =
-      if (live == path) 1
-      else live.substring(live.lastIndexOf("gen-") + 4).toInt + 1
-    val next = f"gen-$gen%08d"
-    s.read.parquet(tablePaths(s, live, "postings"): _*)
-      .repartitionByRange(col("term")).sortWithinPartitions("term", "c_id")
-      .write.mode("overwrite").parquet(s"$path/$next/postings")
-    s.read.parquet(tablePaths(s, live, "df"): _*)
-      .groupBy("term").agg(sum(col("df")).as("df"))
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$path/$next/df")
-    s.read.parquet(tablePaths(s, live, "doclen"): _*)
-      .write.mode("overwrite").parquet(s"$path/$next/doclen")
-    s.read.parquet(tablePaths(s, live, "stats"): _*)
-      .agg(sum(col("n")).as("n"), sum(col("n_len")).as("n_len"),
-        sum(col("total_dl")).as("total_dl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/$next/stats")
-    graft.AtomicFile.replace(new org.apache.hadoop.fs.Path(path, "_current"), next,
-      s.sparkContext.hadoopConfiguration)
-  }
-
-  /** Delete superseded generations — older `gen-*` directories and,
-    * once a compaction exists, the initial root-layout tables. Returns
-    * what was removed. Run once in-flight readers have drained.
-    */
-  def gcTextIndex(s: SparkSession, path: String): Seq[String] = {
-    val live = currentTextGen(s, path)
-    if (live == path) return Nil // nothing compacted yet: root IS live
-    val liveName = live.substring(live.lastIndexOf('/') + 1)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(n => n != liveName &&
-        (n.startsWith("gen-") || n.startsWith("delta-") ||
-          Seq("postings", "df", "doclen", "stats").contains(n)))
-      .map { n =>
-        require(fs.delete(new org.apache.hadoop.fs.Path(path, n), true),
-          s"failed to delete superseded generation piece $n")
-        n
-      }
+    val live = liveTextIndex(s, path)
+    Store.publish(s, path) { next =>
+      Store.read(s, live, "postings")
+        .repartitionByRange(col("term")).sortWithinPartitions("term", "c_id")
+        .write.mode("overwrite").parquet(s"$next/postings")
+      Store.read(s, live, "df")
+        .groupBy("term").agg(sum(col("df")).as("df"))
+        .repartitionByRange(col("term")).sortWithinPartitions("term")
+        .write.mode("overwrite").parquet(s"$next/df")
+      Store.read(s, live, "doclen")
+        .write.mode("overwrite").parquet(s"$next/doclen")
+      Store.read(s, live, "stats")
+        .agg(sum(col("n")).as("n"), sum(col("n_len")).as("n_len"),
+          sum(col("total_dl")).as("total_dl"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$next/stats")
+    }
   }
 
   /** Index maintenance without rebuild — the lexical `add_with_ids`:
     * a batch of NEW documents (ids disjoint from the indexed corpus —
     * the same contract as [[graft.llm.VectorOps.appendIvfPqIndex]])
-    * lands as one atomically-committed delta directory; existing files are never rewritten, so
-    * concurrent readers stay consistent and the append costs ∝ batch.
-    * Postings and doclen rows are per-doc facts (plain appends); df
-    * and stats are AGGREGATES, so the batch appends its own partial
-    * rows — per-term df deltas, one (n, n_len, total_dl) component row
-    * — and [[bm25TopKDisk]] merges them at read (sum per term after
-    * the pushed filter; sum the stats components): the LSM write path,
-    * where ann_ivfpq_append needed none because codes carry no
-    * corpus-level aggregate.
+    * lands as one delta of the live generation
+    * ([[graft.store.Store.appendDelta]]), visible in full or not at all.
+    * Four independent mode-append writes could not give this — a crash
+    * between the postings and doclen appends would duplicate the
+    * batch's postings on redelivery and silently corrupt scores.
+    * Existing files are never rewritten, so concurrent readers stay
+    * consistent and the append costs ∝ batch. Postings and doclen rows
+    * are per-doc facts (plain appends); df and stats are AGGREGATES, so
+    * the batch appends its own partial rows — per-term df deltas, one
+    * (n, n_len, total_dl) component row — and [[bm25TopKDisk]] merges
+    * them at read (sum per term after the pushed filter; sum the stats
+    * components): the LSM write path.
     */
   def appendTextIndex(batch: DataFrame, path: String): Unit = {
     val s = batch.sparkSession
-    val hp = new org.apache.hadoop.fs.Path(path, "_graft_index_ok")
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(hp), s"no committed text index at $path")
-    val live = currentTextGen(s, path)
-    // the batch's four tables land as ONE `delta-<uuid>` directory,
-    // built under a `_stage-` prefix (invisible to readers — Spark's
-    // file index skips `_`/`.` paths) and committed by one directory
-    // rename: the batch is fully visible or fully absent, never torn.
-    // Four independent mode-append writes could not give this — a crash
-    // between the postings and doclen appends would duplicate the
-    // batch's postings on redelivery and silently corrupt scores.
-    // Existing files are never touched, so concurrent readers stay
-    // consistent and the append costs ∝ batch.
-    val id = java.util.UUID.randomUUID.toString
-    val stage = s"$live/_stage-$id"
-    val tf = batch
-      .select(col("doc_id").as("c_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("c_id", "term").agg(count(lit(1)).as("tf"))
-      .persist()
-    tf.repartitionByRange(col("term")).sortWithinPartitions("term", "c_id")
-      .write.mode("overwrite").parquet(s"$stage/postings")
-    tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$stage/df")
-    val dlen = tf.groupBy("c_id").agg(sum(col("tf")).cast("double").as("dl"))
-    dlen.write.mode("overwrite").parquet(s"$stage/doclen")
-    tf.unpersist()
-    batch.agg(count(lit(1)).cast("double").as("n"))
-      .crossJoin(dlen.agg(count(lit(1)).cast("double").as("n_len"),
-        sum(col("dl")).as("total_dl")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/stats")
-    require(fs.rename(new org.apache.hadoop.fs.Path(stage),
-      new org.apache.hadoop.fs.Path(s"$live/delta-$id")),
-      s"failed to commit index delta $stage")
-  }
-
-  /** All committed locations of table `name` in the live generation:
-    * the base build plus every committed delta, oldest-first (`_stage-`
-    * dirs are in flight and excluded; Spark's own file index would skip
-    * their `_` prefix anyway).
-    */
-  private def tablePaths(s: SparkSession, live: String, name: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(live)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val deltas = fs.listStatus(root).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("delta-")).sorted
-    s"$live/$name" +: deltas.map(d => s"$live/$d/$name")
+    Store.appendDelta(s, liveTextIndex(s, path))(writeTextTables(batch, _))
   }
 
   /** One micro-batch of continuous indexing: admit `batch` against the
@@ -687,19 +587,19 @@ object TextOps {
     * at-least-once source replays whole batches, and a replayed batch
     * here would double-count the ADDITIVE df/stats partials, not just
     * duplicate rows). A crash inside [[appendTextIndex]] leaves only an
-    * invisible `_stage-` dir, so redelivery re-admits the same docs to
+    * uncommitted `_stage-` dir, so redelivery re-admits the same docs to
     * one committed delta — the batch is atomic.
     */
   def indexBatchToState(batch: DataFrame, path: String): Unit = {
     val s = batch.sparkSession
-    val hp = new org.apache.hadoop.fs.Path(path, "_graft_index_ok")
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) { saveTextIndex(batch, path); return }
-    val live = currentTextGen(s, path)
-    val seen = s.read.parquet(tablePaths(s, live, "doclen"): _*)
-      .select(col("c_id").as("doc_id"))
-    val fresh = batch.join(seen, Seq("doc_id"), "left_anti")
-    if (!fresh.isEmpty) appendTextIndex(fresh, path)
+    Store.live(s, path) match {
+      case None => saveTextIndex(batch, path)
+      case Some(live) =>
+        val seen = Store.read(s, live, "doclen")
+          .select(col("c_id").as("doc_id"))
+        val fresh = batch.join(seen, Seq("doc_id"), "left_anti")
+        if (!fresh.isEmpty) appendTextIndex(fresh, path)
+    }
   }
 
   private val textIndexStreamPaths = Memo.shared[String, String]("TextOps.textIndexStreamPaths")
@@ -714,9 +614,7 @@ object TextOps {
     */
   private[graft] def textIndexStreamDemoPath(s: SparkSession, dir: String): String =
     textIndexStreamPaths(dir) {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_textidxstream_$key"
+      val path = Store.artifactPath("textidxstream", dir)
       val done = new org.apache.hadoop.fs.Path(path, "_graft_stream_ok")
       val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(done)) {
@@ -742,18 +640,13 @@ object TextOps {
     */
   private[graft] def textIndexAppendDemoPath(s: SparkSession, dir: String): String =
     textIndexAppendPaths(dir) {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_textidxapp_$key"
+      val path = Store.artifactPath("textidxapp", dir)
       val done = new org.apache.hadoop.fs.Path(path, "_graft_append_ok")
       val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(done)) {
         val docs = Tables(s, dir).documents
         saveTextIndex(docs.filter(col("doc_id") % 2 === 0), path)
-        val hasOdd = {
-          val live = currentTextGen(s, path)
-          s.read.parquet(tablePaths(s, live, "doclen"): _*)
-        }
+        val hasOdd = Store.read(s, liveTextIndex(s, path), "doclen")
           .filter(col("c_id") % 2 === 1).limit(1).count() > 0
         if (!hasOdd) appendTextIndex(docs.filter(col("doc_id") % 2 === 1), path)
         fs.create(done, true).close()
@@ -769,9 +662,7 @@ object TextOps {
     */
   private[graft] def textIndexPath(s: SparkSession, dir: String): String =
     textIndexPaths(dir) {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_textidx_$key"
+      val path = Store.artifactPath("textidx", dir)
       saveTextIndex(Tables(s, dir).documents, path)
       path
     }

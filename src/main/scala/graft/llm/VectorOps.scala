@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Memo, Tables}
+import graft.store.Store
 
 /** Embedding similarity search (SURVEY.md §2.12) over
   * `embeddings(vec_id, embedding: array<float>, label)`.
@@ -1246,15 +1247,17 @@ object VectorOps {
   // The in-memory index dies with the session; a 100 TB corpus builds
   // its index ONCE and serves queries from it for weeks. Layout — all
   // parquet, so doubles round-trip bit-exact and the artifact is
-  // readable by any Spark/DuckDB/engine without this library:
-  //   <path>/codes/   (c_id, codes) parquet PARTITIONED BY cell — the
+  // readable by any Spark/DuckDB/engine without this library. `<path>`
+  // is a [[graft.store.Store]] root whose `_current` names the live
+  // generation; a crashed build is an unnamed generation, invisible:
+  //   <gen>/codes/    (c_id, codes) parquet PARTITIONED BY cell — the
   //                   n·(8+ε)-byte searchable corpus; a query planning
   //                   nprobe cells prunes to nprobe directories AT THE
   //                   SCAN (PartitionFilters, zero bytes read elsewhere)
-  //   <path>/coarse/  (cell, vec) — `cells` rows, the coarse quantizer
-  //   <path>/books/   (subspace, code, vec) — m·ks rows, residual books
-  //   <path>/_graft_index_ok  commit marker, written LAST (the staged-
-  //                   commit convention: a crashed build is invisible)
+  //   <gen>/coarse/   (cell, vec) — `cells` rows, the coarse quantizer
+  //   <gen>/books/    (subspace, code, vec) — m·ks rows, residual books
+  //   <gen>/delta-<uuid>/codes/ one appended batch, same layout
+  //   <path>/tombstones/ deleted ids, outside the generations
 
   /** Number of actual persisted-index builds this JVM has run (a second
     * save over a committed index must be a no-op; asserted in
@@ -1279,29 +1282,37 @@ object VectorOps {
       m: Int = 8, ks: Int = 16, datasetKey: String,
       attrs: Seq[String] = Nil): Unit = {
     val s = emb.sparkSession
-    val hp = new org.apache.hadoop.fs.Path(path, "_graft_index_ok")
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(hp)) return
+    if (Store.live(s, path).isDefined) return
     ivfPqSaveCount.incrementAndGet()
     val model = ivfPqModel(emb, cells, m, ks, datasetKey = datasetKey)
-    // `attrs` columns persist ALONGSIDE the codes (the in-memory
-    // ivfPqIndex payload-field pattern made durable): a filtered
-    // search's predicate then evaluates inside the cell-pruned,
-    // column-stat-pushed parquet scan — no corpus join at serve time
-    withIvfPqCodes(emb, "embedding", model)
-      .select(col("vec_id").as("c_id") +: col("cell") +: col("codes") +:
-        attrs.map(col): _*)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
     import s.implicits._
-    model.coarse.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
-      .toDF("cell", "vec").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/coarse")
-    model.books.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
-    }.toSeq.toDF("subspace", "code", "vec").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/books")
-    fs.create(hp, true).close()
+    Store.publish(s, path) { gen =>
+      // `attrs` columns persist ALONGSIDE the codes (the in-memory
+      // ivfPqIndex payload-field pattern made durable): a filtered
+      // search's predicate then evaluates inside the cell-pruned,
+      // column-stat-pushed parquet scan — no corpus join at serve time
+      withIvfPqCodes(emb, "embedding", model)
+        .select(col("vec_id").as("c_id") +: col("cell") +: col("codes") +:
+          attrs.map(col): _*)
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$gen/codes")
+      model.coarse.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
+        .toDF("cell", "vec").coalesce(1)
+        .write.mode("overwrite").parquet(s"$gen/coarse")
+      model.books.zipWithIndex.flatMap { case (cb, j) =>
+        cb.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) }
+      }.toSeq.toDF("subspace", "code", "vec").coalesce(1)
+        .write.mode("overwrite").parquet(s"$gen/books")
+    }
   }
+
+  /** The live generation of the IVF-PQ index at `path`. */
+  private def liveIvfPqIndex(s: SparkSession, path: String): String =
+    Store.live(s, path).getOrElse(
+      throw new IllegalArgumentException(s"no committed IVF-PQ index at $path"))
+
+  /** The live code table: the build's codes and every appended delta's. */
+  private def liveCodes(s: SparkSession, path: String): DataFrame =
+    Store.read(s, liveIvfPqIndex(s, path), "codes")
 
   /** Read the model half of a committed persisted index back —
     * threshold-bounded driver materialization (`cells` + m·ks rows).
@@ -1309,12 +1320,10 @@ object VectorOps {
     * trainer's codes and LUTs identically.
     */
   def loadIvfPqModel(s: SparkSession, path: String): IvfPqModel = {
-    val hp = new org.apache.hadoop.fs.Path(path, "_graft_index_ok")
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(hp), s"no committed IVF-PQ index at $path")
-    val coarse = s.read.parquet(s"$path/coarse").orderBy("cell").collect()
+    val live = liveIvfPqIndex(s, path)
+    val coarse = s.read.parquet(s"$live/coarse").orderBy("cell").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("vec").toArray)
-    val bookRows = s.read.parquet(s"$path/books")
+    val bookRows = s.read.parquet(s"$live/books")
       .orderBy("subspace", "code").collect()
     val books = bookRows.groupBy(_.getAs[Int]("subspace")).toArray
       .sortBy(_._1).map(_._2.sortBy(_.getAs[Int]("code"))
@@ -1338,8 +1347,7 @@ object VectorOps {
     val luts = ivfPqLuts(emb, queryIds, model, nprobe)
     val probed = luts.map(_._2).distinct
     val codes = minusTombstones(spark, path,
-      spark.read.parquet(s"$path/${currentCodesDir(spark, path)}")
-        .filter(col("cell").isin(probed: _*)))
+      liveCodes(spark, path).filter(col("cell").isin(probed: _*)))
     // filtered serving (the ivfPqTopKWhere semantics on the durable
     // index): candidate attrs were persisted with the codes, so the
     // predicate lands in the SAME pruned scan — static cell partition
@@ -1360,7 +1368,9 @@ object VectorOps {
     * its STORED model — no retrain, the production add path (FAISS
     * `add_with_ids` semantics): at 100 TB the model was fitted once on a
     * bounded sample and stays frozen; daily arrivals encode against it
-    * and land as NEW files inside their cell directories. Existing files
+    * and land as one delta of the live generation
+    * ([[graft.store.Store.appendDelta]]), cell-partitioned like the
+    * build's codes and visible in full or not at all. Existing files
     * are never rewritten, so concurrent readers stay consistent and the
     * append costs ∝ batch, not corpus. Callers own id-uniqueness (as
     * with FAISS add_with_ids).
@@ -1369,18 +1379,18 @@ object VectorOps {
       attrs: Seq[String] = Nil): Unit = {
     val s = batch.sparkSession
     val model = loadIvfPqModel(s, path)
-    val live = currentCodesDir(s, path)
+    val live = liveIvfPqIndex(s, path)
     val sel = withIvfPqCodes(batch, "embedding", model)
       .select(col("vec_id").as("c_id") +: col("cell") +: col("codes") +:
         attrs.map(col): _*)
     // an append whose columns differ from the stored code schema would
     // land null-attr rows that silently drop out of filtered search —
     // fail at write time instead (cell is a partition column on read)
-    val stored = s.read.parquet(s"$path/$live").schema.fieldNames.toSet + "cell"
+    val stored = s.read.parquet(s"$live/codes").schema.fieldNames.toSet + "cell"
     require(sel.columns.toSet == stored,
       s"append columns ${sel.columns.toSet} != stored code schema $stored " +
         "(pass the index's attrs to appendIvfPqIndex)")
-    sel.write.mode("append").partitionBy("cell").parquet(s"$path/$live")
+    Store.appendDelta(s, live)(d => sel.write.partitionBy("cell").parquet(s"$d/codes"))
   }
 
   /** Delete ids from a committed persisted index WITHOUT rewriting code
@@ -1418,80 +1428,42 @@ object VectorOps {
       s.read.parquet(fs0: _*).select("c_id").distinct(), Seq("c_id"), "left_anti")
   }
 
-  // --- Index compaction: the generation-pointer protocol --------------
-  //
-  // Daily appends accrete small files inside each cell directory — the
-  // classic small-file problem: at 100 TB a year of appends turns the
-  // nprobe-pruned scan into thousands of file opens per cell.
-  // Compaction rewrites the live code set into ONE file per cell in a
-  // NEW generation directory (codes-00000001, codes-00000002, …) and
-  // then atomically swaps a `_current` pointer file to it — the
-  // root-pointer pattern table formats use (Iceberg/Delta): readers
-  // resolve the pointer at plan time, so they see either the old
-  // generation or the new one in full, never a half-written mix; the
-  // superseded generation stays on disk for in-flight readers until an
-  // explicit GC. No pointer file means generation "codes" (the layout
-  // the initial build writes), so existing indexes need no migration.
-
-  /** The live code directory name: `_current`'s contents, or the
-    * initial build's `codes` when no compaction has happened yet.
-    */
-  private def currentCodesDir(s: SparkSession, path: String): String =
-    graft.AtomicFile.read(new org.apache.hadoop.fs.Path(path, "_current"), s.sparkContext.hadoopConfiguration)
-      .fold("codes")(_.trim)
-
-  /** Rewrite the live code set as one file per cell in a new generation
-    * and atomically repoint `_current` at it. Old generations are left
-    * for [[gcIvfPqIndex]] — an in-flight reader that already resolved
-    * the pointer keeps a consistent view.
+  /** Rewrite the live code set — the build, every appended delta, minus
+    * the tombstones — as one file per cell in the next generation, with
+    * the model tables beside it. Daily appends accrete small files
+    * inside each cell directory — the classic small-file problem: at
+    * 100 TB a year of appends turns the nprobe-pruned scan into
+    * thousands of file opens per cell. Superseded generations stay for
+    * in-flight readers until [[graft.store.Store.gc]].
     */
   def compactIvfPqIndex(s: SparkSession, path: String): Unit = {
-    val live = currentCodesDir(s, path)
-    val gen = if (live == "codes") 1 else live.stripPrefix("codes-").toInt + 1
-    val next = f"codes-$gen%08d"
+    val live = liveIvfPqIndex(s, path)
     // fold the tombstones observed NOW into the new generation; only
-    // exactly these files are cleared after the swap, so a delete that
-    // lands mid-compaction is honored by the anti-join until the NEXT
-    // compaction folds it (never lost, never double-applied — an
+    // exactly these files are cleared after the publish, so a delete
+    // that lands mid-compaction is honored by the anti-join until the
+    // NEXT compaction folds it (never lost, never double-applied — an
     // anti-join of an already-removed id is a no-op)
     val folded = tombstoneFiles(s, path)
-    val base = s.read.parquet(s"$path/$live")
+    val base = liveCodes(s, path)
     val compacted =
       if (folded.isEmpty) base
       else base.join(s.read.parquet(folded: _*).select("c_id").distinct(),
         Seq("c_id"), "left_anti")
-    // one shuffle hash-partitioned on cell: every cell's rows land in
-    // exactly one task, so partitionBy emits exactly one file per cell
-    compacted
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$next")
-    val conf = s.sparkContext.hadoopConfiguration
-    graft.AtomicFile.replace(new org.apache.hadoop.fs.Path(path, "_current"), next, conf)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
+    Store.publish(s, path) { next =>
+      // one shuffle hash-partitioned on cell: every cell's rows land in
+      // exactly one task, so partitionBy emits exactly one file per cell
+      compacted
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$next/codes")
+      Seq("coarse", "books").foreach(t =>
+        s.read.parquet(s"$live/$t").write.mode("overwrite").parquet(s"$next/$t"))
+    }
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
     // clear exactly the folded tombstone files (see above): the live
     // generation no longer contains those rows. A reader still scanning
     // the SUPERSEDED generation is under the same drain contract as
-    // [[gcIvfPqIndex]] (it could equally lose its code files to GC).
+    // [[graft.store.Store.gc]] (it could equally lose its files to GC).
     folded.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
-  }
-
-  /** Delete superseded code generations (everything named `codes` or
-    * `codes-*` except the live one). Returns what was removed. Run it
-    * once in-flight readers of the old generation have drained.
-    */
-  def gcIvfPqIndex(s: SparkSession, path: String): Seq[String] = {
-    val live = currentCodesDir(s, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(n => n != live && (n == "codes" || n.startsWith("codes-")))
-      .map { n =>
-        require(fs.delete(new org.apache.hadoop.fs.Path(path, n), true),
-          s"failed to delete superseded generation $n")
-        n
-      }
   }
 
   private val ivfPqDiskPaths = Memo.shared[(String, Int, Int, Int), String]("VectorOps.ivfPqDiskPaths")
@@ -1503,14 +1475,10 @@ object VectorOps {
   private[graft] def ivfPqDiskPath(s: SparkSession, dir: String,
       cells: Int, m: Int, ks: Int): String =
     ivfPqDiskPaths((dir, cells, m, ks)) {
-      val path = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_${pathKey(dir)}_c${cells}m${m}k$ks"
+      val path = s"${Store.artifactPath("ivfpq", dir)}_c${cells}m${m}k$ks"
       saveIvfPqIndex(s, dir, path, cells, m, ks)
       path
     }
-
-  private def pathKey(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
 
   private val ivfPqAppendPaths = Memo.shared[String, String]("VectorOps.ivfPqAppendPaths")
 
@@ -1535,7 +1503,7 @@ object VectorOps {
     */
   private[graft] def ivfPqDeleteDemoPath(s: SparkSession, dir: String): String = {
     val path = ivfPqDeletePaths(dir) {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_ivfpqdel_${pathKey(dir)}_c16m8k16"
+      val p = s"${Store.artifactPath("ivfpqdel", dir)}_c16m8k16"
       val done = new org.apache.hadoop.fs.Path(p, "_graft_delete_ok")
       val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(done)) {
@@ -1554,14 +1522,14 @@ object VectorOps {
 
   private[graft] def ivfPqAppendDemoPath(s: SparkSession, dir: String): String = {
     val path = ivfPqAppendPaths(dir) {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_ivfpqapp_${pathKey(dir)}_c16m8k16"
+      val p = s"${Store.artifactPath("ivfpqapp", dir)}_c16m8k16"
       val done = new org.apache.hadoop.fs.Path(p, "_graft_append_ok")
       val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(done)) {
         val emb = Tables(s, dir).embeddings
         saveIvfPqIndexOf(emb.filter(col("vec_id") % 2 === 0), p,
           datasetKey = s"$dir#even")
-        val hasOdd = s.read.parquet(s"$p/${currentCodesDir(s, p)}")
+        val hasOdd = liveCodes(s, p)
           .filter(col("c_id") % 2 === 1).limit(1).count() > 0
         if (!hasOdd) appendIvfPqIndex(emb.filter(col("vec_id") % 2 === 1), p)
         fs.create(done, true).close()

@@ -78,9 +78,7 @@ object ZOrder {
     */
   private[graft] def zOrderedLineitem(s: SparkSession, dir: String): String =
     zPaths(dir) {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_zorder_$key"
+      val path = graft.store.Store.artifactPath("zorder", dir)
       val done = new org.apache.hadoop.fs.Path(path, "_graft_zorder_ok")
       val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(done)) {

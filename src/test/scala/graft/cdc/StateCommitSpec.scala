@@ -4,9 +4,8 @@ import java.nio.file.{Files, Path => JPath}
 
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
+import graft.{CrashFs, SparkSpec}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -71,12 +70,6 @@ class StateCommitSpec extends SparkSpec {
     finally st.close()
   }
 
-  private def copyTree(from: JPath, to: JPath): Unit = {
-    val st = Files.walk(from)
-    try st.iterator().asScala.foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
-    finally st.close()
-  }
-
   private def crashPath(local: JPath): String = s"crash:${local.toAbsolutePath}"
 
   /** What an uninterrupted run commits after each batch. */
@@ -91,7 +84,7 @@ class StateCommitSpec extends SparkSpec {
     val base = tmp("commit-base")
     val done = feed.indices.map { i =>
       val root = base.resolve(s"after-$i")
-      if (i > 0) copyTree(base.resolve(s"after-${i - 1}"), root)
+      if (i > 0) CrashFs.copyTree(base.resolve(s"after-${i - 1}"), root)
       fold(i, crashPath(root.resolve("t")))
       val t = root.resolve("t")
       Committed(t, stateText(t).get, tree(t), rows(crashPath(t)))
@@ -107,7 +100,7 @@ class StateCommitSpec extends SparkSpec {
     val prevVersion = if (i == 0) 0L else Stream.committed(spark, crashPath(done(i - 1).local)).get.version
     Iterator.from(1).map { k =>
       val root = tmp(s"crash-$i-$k").resolve("t")
-      if (i > 0) copyTree(done(i - 1).local, root)
+      if (i > 0) CrashFs.copyTree(done(i - 1).local, root)
       val path = crashPath(root)
       // the failed tasks' stack traces are the injected crash: not logged
       spark.sparkContext.setLogLevel("OFF")
@@ -229,56 +222,4 @@ class StateCommitSpec extends SparkSpec {
     val src = new String(Files.readAllBytes(java.nio.file.Paths.get("src/main/scala/graft/cdc/Stream.scala")), "UTF-8")
     assert(!src.contains("Thread.sleep"))
   }
-}
-
-/** Local file system under the `crash:` scheme that fails every mutating
-  * call (create, rename, delete, mkdirs) from the k-th on while armed: the
-  * process died at call k, so nothing after it reaches the disk. The
-  * counter is JVM-global, because Hadoop instantiates the class by
-  * reflection and a local session's executors call it from their own
-  * threads. Instantiated through `fs.crash.impl`.
-  */
-class CrashFs extends RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("crash:///")
-
-  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
-      replication: Short, blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
-    CrashFs.step()
-    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
-  }
-
-  override def createNonRecursive(f: Path, permission: FsPermission,
-      flags: java.util.EnumSet[org.apache.hadoop.fs.CreateFlag], bufferSize: Int, replication: Short,
-      blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
-    CrashFs.step()
-    super.createNonRecursive(f, permission, flags, bufferSize, replication, blockSize, progress)
-  }
-
-  override def rename(src: Path, dst: Path): Boolean = { CrashFs.step(); super.rename(src, dst) }
-
-  override def delete(p: Path, recursive: Boolean): Boolean = { CrashFs.step(); super.delete(p, recursive) }
-
-  override def mkdirs(f: Path): Boolean = { CrashFs.step(); super.mkdirs(f) }
-
-  override def mkdirs(f: Path, permission: FsPermission): Boolean = { CrashFs.step(); super.mkdirs(f, permission) }
-}
-
-object CrashFs {
-  final class Crash(k: Int) extends java.io.IOException(s"injected crash at mutating call $k")
-
-  private val calls = new java.util.concurrent.atomic.AtomicInteger()
-  @volatile private var crashAt = Int.MaxValue
-
-  def arm(k: Int): Unit = { calls.set(0); crashAt = k }
-  def disarm(): Unit = crashAt = Int.MaxValue
-
-  private[cdc] def step(): Unit = {
-    val k = crashAt
-    if (calls.incrementAndGet() >= k) throw new Crash(k)
-  }
-
-  /** True iff `e` or one of its causes is an injected crash. */
-  def caused(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .exists(t => t.isInstanceOf[Crash] || String.valueOf(t.getMessage).contains("injected crash at mutating call"))
 }

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.store.Store
 import org.apache.spark.sql.functions._
 
 /** Semantics of the curation passes on planted inputs (the sf oracles
@@ -552,7 +553,8 @@ class CurationSpec extends SparkSpec {
       line(1, "aa bb cc dd ee ff"),
       line(2, "aa bb cc xx yy zz")).getBytes)
     run()
-    def outRows = s.read.parquet(s"$state/out")
+    def live = Store.live(s, state).get
+    def outRows = s.read.parquet(s"$live/out")
       .collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[String]("clean_text"), r.getAs[Long]("n_removed")))).toMap
     assert(outRows(1L) == (("aa bb cc dd ee ff", 0L)))
@@ -566,7 +568,7 @@ class CurationSpec extends SparkSpec {
       line(4, "totally new content here")).getBytes)
     run()
     val out2 = outRows
-    assert(s.read.parquet(s"$state/out").filter(col("doc_id") === 2L).count() == 1,
+    assert(s.read.parquet(s"$live/out").filter(col("doc_id") === 2L).count() == 1,
       "redelivered doc must not emit a second output row")
     assert(out2(2L) == (("xx yy zz", 1L)), "redelivery must not alter the original scrub")
     assert(out2(3L) == (("qq rr ss", 1L)), "cross-batch owned chunk must scrub")
@@ -578,9 +580,9 @@ class CurationSpec extends SparkSpec {
       val f = new java.io.File(d)
       if (!f.isDirectory) 0 else f.listFiles().count(_.getName.endsWith(".parquet"))
     }
-    val before = parts(s"$state/out") + parts(s"$state/owned")
+    val before = parts(s"$live/out") + parts(s"$live/owned")
     graft.llm.NearDedup.compactAdmissionState(s, state)
-    assert(parts(s"$state/out") + parts(s"$state/owned") < before,
+    assert(parts(s"$live/out") + parts(s"$live/owned") < before,
       s"lines-state compaction must reduce files (was $before)")
     assert(outRows == out2, "compaction must not change the scrub output")
     java.nio.file.Files.write(in.resolve("c-0.json"), String.join("\n",
@@ -1302,19 +1304,20 @@ class CurationSpec extends SparkSpec {
     // multi-table appends) and no in-flight _stage- dir remains
     assert(before.subsetOf(after) && after.size > before.size,
       "append must add files and never rewrite existing ones")
-    val deltas = new java.io.File(lsm).listFiles()
+    val gen = Store.live(s, lsm).get
+    val deltas = new java.io.File(gen).listFiles()
       .filter(_.getName.startsWith("delta-"))
     assert(deltas.length == 1, s"expected one committed delta, got ${deltas.toSeq}")
-    assert(!new java.io.File(lsm).listFiles().exists(_.getName.startsWith("_stage-")),
+    assert(!new java.io.File(gen).listFiles().exists(_.getName.startsWith("_stage-")),
       "no in-flight stage dir may survive a committed append")
     // the merged index answers EXACTLY like the one-shot full build
     def rows(path: String) =
       TextOps.bm25TopKDisk(docs, 0L until 8L, k = 10, path).collect().map(_.toSeq).toSeq
     assert(rows(lsm) == rows(full), "LSM-merged serving must equal full build")
     // df merges exactly: per-term sum over base + deltas == one-shot df
-    val merged = s.read.parquet(s"$lsm/df", s"${deltas(0)}/df").groupBy("term")
+    val merged = s.read.parquet(s"$gen/df", s"${deltas(0)}/df").groupBy("term")
       .agg(sum(col("df")).as("df")).as[(String, Long)].collect().toMap
-    val oneShot = s.read.parquet(s"$full/df")
+    val oneShot = s.read.parquet(s"${Store.live(s, full).get}/df")
       .as[(String, Long)].collect().toMap
     assert(merged == oneShot, "merged df table must equal the one-shot df")
   }
@@ -1378,27 +1381,28 @@ class CurationSpec extends SparkSpec {
     }
     def dfDupTerms(gen: String): Long = s.read.parquet(dfPaths(gen): _*)
       .groupBy("term").count().filter(col("count") > 1).count()
-    assert(dfDupTerms(path) > 0, "fixture has no df deltas — vacuous")
+    def live = Store.live(s, path).get
+    val gen0 = live
+    assert(new java.io.File(gen0).getName.startsWith("gen-00000001-"), gen0)
+    assert(dfDupTerms(gen0) > 0, "fixture has no df deltas — vacuous")
     TextOps.compactTextIndex(s, path)
     // new generation: df merged to ONE row per term, stats to one row,
-    // results row-identical; the root layout survives for in-flight readers
-    assert(dfDupTerms(s"$path/gen-00000001") == 0)
-    assert(s.read.parquet(s"$path/gen-00000001/stats").count() == 1)
+    // results row-identical; the first generation survives for in-flight readers
+    val gen1 = live
+    assert(new java.io.File(gen1).getName.startsWith("gen-00000002-"), gen1)
+    assert(dfDupTerms(gen1) == 0)
+    assert(s.read.parquet(s"$gen1/stats").count() == 1)
     assert(rows() == before, "compaction must not change results")
-    assert(new java.io.File(s"$path/postings").isDirectory)
-    // GC removes exactly the superseded root layout: the four base
-    // tables and the root's committed delta dir
-    val gced = TextOps.gcTextIndex(s, path)
-    assert(gced.count(_.startsWith("delta-")) == 1 &&
-      gced.filterNot(_.startsWith("delta-")).toSet ==
-        Set("postings", "df", "doclen", "stats"), gced)
-    assert(!new java.io.File(s"$path/postings").exists())
+    assert(new java.io.File(s"$gen0/postings").isDirectory)
+    // GC removes exactly the superseded generation, its delta included
+    assert(Store.gc(s, path) == Seq(new java.io.File(gen0).getName))
+    assert(!new java.io.File(gen0).exists())
     assert(rows() == before, "GC must not touch the live generation")
     // appends land in the LIVE generation; a second compact+GC cycles it
     val twins = docs.filter(col("doc_id") < 4)
       .withColumn("doc_id", col("doc_id") + lit(100000L))
     TextOps.appendTextIndex(twins, path)
-    val genDeltas = new java.io.File(s"$path/gen-00000001").listFiles()
+    val genDeltas = new java.io.File(gen1).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("delta-"))
     assert(genDeltas.length == 1 &&
       s.read.parquet(s"${genDeltas(0)}/doclen")
@@ -1414,8 +1418,8 @@ class CurationSpec extends SparkSpec {
         s"appended twin of query $q not served")
     }
     TextOps.compactTextIndex(s, path)
-    assert(dfDupTerms(s"$path/gen-00000002") == 0)
-    assert(TextOps.gcTextIndex(s, path) == Seq("gen-00000001"))
+    assert(dfDupTerms(live) == 0)
+    assert(Store.gc(s, path) == Seq(new java.io.File(gen1).getName))
   }
 
   test("retrieve_metrics: recomputes from the two lists; planted perfect-agreement corpus scores exactly 1.0") {
@@ -1507,7 +1511,7 @@ class CurationSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val docs = graft.Tables(s, dir).documents
     val path = java.nio.file.Files.createTempDirectory("textidx_str").toString + "/idx"
-    def deltas() = Option(new java.io.File(path).listFiles()).toSeq.flatten
+    def deltas() = Store.live(s, path).toSeq.flatMap(g => new java.io.File(g).listFiles())
       .count(f => f.isDirectory && f.getName.startsWith("delta-"))
     val b1 = docs.filter(col("doc_id") < 100)
     val b2 = docs.filter(col("doc_id") >= 100 && col("doc_id") < 200)

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{SparkSpec, Tables}
+import graft.store.Store
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, length}
 
@@ -507,7 +508,7 @@ class SimilaritySpec extends SparkSpec {
       .toString + "/idx"
     VectorOps.saveIvfPqIndexOf(emb, path, datasetKey = s"$dir#appendspec")
     def codeFiles: Set[String] = {
-      val base = new java.io.File(s"$path/codes")
+      val base = new java.io.File(Store.live(spark, path).get)
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       walk(base).map(_.getPath).filter(_.endsWith(".parquet")).toSet
@@ -580,7 +581,7 @@ class SimilaritySpec extends SparkSpec {
     // compaction folds the tombstones into the new generation...
     VectorOps.compactIvfPqIndex(spark, path)
     assert(rows() == served, "compaction must not change served results")
-    val gen1 = spark.read.parquet(s"$path/codes-00000001")
+    val gen1 = spark.read.parquet(s"${Store.live(spark, path).get}/codes")
     assert(gen1.filter(col("c_id") % 2 === 1).count() == 0,
       "folded generation must carry no tombstoned rows")
     // ...and clears exactly the folded tombstone files
@@ -606,31 +607,36 @@ class SimilaritySpec extends SparkSpec {
     def search() = rows(VectorOps.ivfPqTopKDisk(full, 0L until 4L, k = 10,
       path = path))
     val before = search()
+    def live = Store.live(spark, path).get
+    // code files per cell over the generation's build and its deltas
     def filesPerCell(gen: String): Map[String, Int] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$path/$gen")).filter(_.getName.endsWith(".parquet"))
+      walk(new java.io.File(gen)).filter(_.getName.endsWith(".parquet"))
+        .filter(_.getParentFile.getName.startsWith("cell="))
         .groupBy(_.getParentFile.getName).map { case (c, fs) => c -> fs.size }
     }
     // base build + append = at least one cell with multiple files (the
     // small-file accretion compaction exists to undo)
-    assert(filesPerCell("codes").values.exists(_ > 1))
+    val gen0 = live
+    assert(filesPerCell(gen0).values.exists(_ > 1))
     VectorOps.compactIvfPqIndex(spark, path)
     // new generation: exactly ONE file per cell; results row-identical
-    val post = filesPerCell("codes-00000001")
+    val gen1 = live
+    val post = filesPerCell(gen1)
     assert(post.nonEmpty && post.values.forall(_ == 1), post)
     assert(search() == before, "compaction must not change results")
     // the superseded generation stays for in-flight readers until GC
-    assert(new java.io.File(s"$path/codes").isDirectory)
-    assert(VectorOps.gcIvfPqIndex(spark, path) == Seq("codes"))
-    assert(!new java.io.File(s"$path/codes").exists())
+    assert(new java.io.File(s"$gen0/codes").isDirectory)
+    assert(Store.gc(spark, path) == Seq(new java.io.File(gen0).getName))
+    assert(!new java.io.File(gen0).exists())
     assert(search() == before, "GC must not touch the live generation")
     // appends land in the LIVE generation; a second identical twin ranks
     // right behind the first (same cos 1.0, id tiebreak)
     val twins2 = emb.withColumn("vec_id",
       col("vec_id") + org.apache.spark.sql.functions.lit(400000L))
     VectorOps.appendIvfPqIndex(twins2, path)
-    assert(filesPerCell("codes-00000001").values.exists(_ > 1),
+    assert(filesPerCell(gen1).values.exists(_ > 1),
       "append must write into the current generation")
     val top2 = VectorOps
       .ivfPqTopKDisk(full.unionByName(twins2), 0L until 2L, k = 10, path = path)
@@ -642,8 +648,8 @@ class SimilaritySpec extends SparkSpec {
     }
     // second compaction bumps the generation and supersedes the first
     VectorOps.compactIvfPqIndex(spark, path)
-    assert(filesPerCell("codes-00000002").values.forall(_ == 1))
-    assert(VectorOps.gcIvfPqIndex(spark, path) == Seq("codes-00000001"))
+    assert(filesPerCell(live).values.forall(_ == 1))
+    assert(Store.gc(spark, path) == Seq(new java.io.File(gen1).getName))
   }
 
   test("filtered ANN: predicate on every row; all-cells+wide-rerank ≡ label-restricted brute force; pre-filter beats post-filter") {

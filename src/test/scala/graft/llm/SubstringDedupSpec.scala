@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.SparkSpec
+import graft.store.Store
 import org.apache.spark.sql.functions._
 
 /** Exact substring dedup (Lee et al. 2021) — the span-ownership rule
@@ -222,16 +223,17 @@ class SubstringDedupSpec extends SparkSpec {
     val stateDir = java.nio.file.Files.createTempDirectory("substr-st").resolve("t").toString
     val b1 = docs.filter(col("doc_id").isin(1L, 2L))
     NearDedup.admitSubstringToState(b1, stateDir)
-    def outIds = spark.read.parquet(s"$stateDir/out")
+    def live = Store.live(spark, stateDir).get
+    def outIds = spark.read.parquet(s"$live/out")
       .select("doc_id").as[Long].collect().toSet
     assert(outIds == Set(1L))
     // REDELIVERY of batch 1: doc 1 guarded by out/, doc 2 re-evaluated
     // against owned/ (its own grams) → rejected again; state unchanged
     NearDedup.admitSubstringToState(b1, stateDir)
     assert(outIds == Set(1L), "redelivered batch must not change the state")
-    val ownedCount = spark.read.parquet(s"$stateDir/owned").count()
+    val ownedCount = spark.read.parquet(s"$live/owned").count()
     NearDedup.admitSubstringToState(b1, stateDir)
-    assert(spark.read.parquet(s"$stateDir/owned").count() == ownedCount,
+    assert(spark.read.parquet(s"$live/owned").count() == ownedCount,
       "redelivery must not grow the gram state")
     // batch 2: doc 3 shares span B with the REJECTED doc 2 → still
     // rejected (grams of rejected docs own); doc 4 admitted
@@ -255,7 +257,9 @@ class SubstringDedupSpec extends SparkSpec {
     owned1.write.parquet(s"$st1/stage/b1/owned")
     java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$st1/stage/b1/_committed"))
     NearDedup.admitSubstringToState(b1, st1)
-    assert(spark.read.parquet(s"$st1/out").select("doc_id").as[Long].collect().toSet
+    def outIds(st: String) = spark.read.parquet(s"${Store.live(spark, st).get}/out")
+      .select("doc_id").as[Long].collect().toSet
+    assert(outIds(st1)
       == Set(1L), "recovered redelivery must keep doc 2 rejected")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$st1/stage/b1")),
       "committed stage must be promoted and removed")
@@ -265,7 +269,7 @@ class SubstringDedupSpec extends SparkSpec {
     val st2 = base.resolve("uncommitted").toString
     out1.write.parquet(s"$st2/stage/b1/out") // half-written, no marker
     NearDedup.admitSubstringToState(b1, st2)
-    assert(spark.read.parquet(s"$st2/out").select("doc_id").as[Long].collect().toSet
+    assert(outIds(st2)
       == Set(1L), "uncommitted stage must not leak into the state")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$st2/stage/b1")),
       "uncommitted stage must be deleted")
@@ -273,7 +277,7 @@ class SubstringDedupSpec extends SparkSpec {
     // both recovered states continue the chain identically
     Seq(st1, st2).foreach { st =>
       NearDedup.admitSubstringToState(docs.filter(col("doc_id").isin(3L, 4L)), st)
-      assert(spark.read.parquet(s"$st/out").select("doc_id").as[Long].collect().toSet
+      assert(outIds(st)
         == Set(1L, 4L), s"$st: chain after recovery diverged from one-shot")
     }
   }
@@ -295,10 +299,11 @@ class SubstringDedupSpec extends SparkSpec {
 
     // batch 1 commits normally (disarmed)
     NearDedup.admitSubstringToState(b1, stateDir)
-    def outIds = spark.read.parquet(s"$localDir/out")
+    def live = Store.live(spark, localDir).get
+    def outIds = spark.read.parquet(s"$live/out")
       .select("doc_id").as[Long].collect().toSet
     assert(outIds == Set(1L))
-    val ownedCount = spark.read.parquet(s"$localDir/owned").count()
+    val ownedCount = spark.read.parquet(s"$live/owned").count()
 
     // batch 2's promote hits a false-returning rename: the batch MUST
     // fail (require), the stage (with its _committed marker) MUST
@@ -311,7 +316,7 @@ class SubstringDedupSpec extends SparkSpec {
       assert(e.getMessage.contains("rename"), e.getMessage)
     } finally FailingRenameFs.failLivePromotes.set(false)
     assert(outIds == Set(1L), "failed promote must not change the live state")
-    assert(spark.read.parquet(s"$localDir/owned").count() == ownedCount,
+    assert(spark.read.parquet(s"$live/owned").count() == ownedCount,
       "failed promote must not change the gram state")
     val stages = java.nio.file.Files.list(java.nio.file.Paths.get(s"$localDir/stage"))
     val staged = try {
@@ -371,10 +376,12 @@ class SubstringDedupSpec extends SparkSpec {
     owned1.write.parquet(s"$st/stage/b1/owned")
     java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$st/stage/b1/_committed"))
     NearDedup.admitWinnowToState(b1, st)
-    assert(spark.read.parquet(s"$st/out").select("doc_id").as[Long].collect().toSet
+    def outIds = spark.read.parquet(s"${Store.live(spark, st).get}/out")
+      .select("doc_id").as[Long].collect().toSet
+    assert(outIds
       == Set(1L), "recovered redelivery must keep doc 2 rejected")
     NearDedup.admitWinnowToState(docs.filter(col("doc_id").isin(3L, 4L)), st)
-    assert(spark.read.parquet(s"$st/out").select("doc_id").as[Long].collect().toSet
+    assert(outIds
       == Set(1L, 4L), "chain after recovery diverged from one-shot")
   }
 
@@ -396,7 +403,7 @@ class SubstringDedupSpec extends SparkSpec {
     java.nio.file.Files.write(in.resolve("a-0.json"),
       String.join("\n", line(1L), line(2L)).getBytes)
     run()
-    def outIds = s.read.parquet(s"$stateDir/out")
+    def outIds = s.read.parquet(s"${Store.live(s, stateDir).get}/out")
       .select("doc_id").as[Long].collect().toSet
     assert(outIds == Set(1L))
     // restart on the same checkpoint: batch 2 arrives
@@ -448,21 +455,23 @@ class SubstringDedupSpec extends SparkSpec {
       NearDedup.admitSubstringToState(docs.filter(col("doc_id").isin(ids: _*)), st)
       NearDedup.admitSubstringToState(docs.filter(col("doc_id").isin(ids: _*)), twin)
     }
+    def live(d: String) = Store.live(spark, d).get
     def parts(d: String): Int = {
       val f = new java.io.File(d)
       if (!f.isDirectory) 0
       else f.listFiles().count(_.getName.endsWith(".parquet"))
     }
-    def outRows(d: String) = spark.read.parquet(s"$d/out")
+    def outRows(d: String) = spark.read.parquet(s"${live(d)}/out")
       .select("doc_id").as[Long].collect().sorted.toSeq
-    val filesBefore = parts(s"$st/out") + parts(s"$st/owned")
+    def stateFiles = parts(s"${live(st)}/out") + parts(s"${live(st)}/owned")
+    val filesBefore = stateFiles
     val outBefore = outRows(st)
-    val ownedBefore = spark.read.parquet(s"$st/owned").count()
+    val ownedBefore = spark.read.parquet(s"${live(st)}/owned").count()
     NearDedup.compactAdmissionState(spark, st)
-    assert(parts(s"$st/out") + parts(s"$st/owned") < filesBefore,
+    assert(stateFiles < filesBefore,
       s"compaction must reduce the part-file count (was $filesBefore)")
     assert(outRows(st) == outBefore, "compaction must not change admitted docs")
-    assert(spark.read.parquet(s"$st/owned").count() == ownedBefore,
+    assert(spark.read.parquet(s"${live(st)}/owned").count() == ownedBefore,
       "compaction must not change the gram state")
     // the chain continues identically to the never-compacted twin
     NearDedup.admitSubstringToState(docs.filter(col("doc_id") === 4L), st)
@@ -470,27 +479,15 @@ class SubstringDedupSpec extends SparkSpec {
     assert(outRows(st) == outRows(twin),
       "post-compaction admissions diverged from the uncompacted twin")
 
-    // crash window between the two swap renames: live dir gone, a
-    // committed compact stage holds the only copy — the next FOLD must
-    // recover it instead of re-bootstrapping from day zero
-    val outDir = java.nio.file.Paths.get(s"$st/out")
-    val stage = java.nio.file.Paths.get(s"$st/compact-stage-out-testcrash")
-    java.nio.file.Files.createDirectories(stage)
-    java.nio.file.Files.move(outDir, stage.resolve("data"))
-    java.nio.file.Files.createFile(stage.resolve("_committed"))
+    // a compaction that crashed before its publish leaves a generation
+    // that `_current` does not name: a fold reads past it (reading its
+    // empty table would fail), and the next compaction's GC removes it
+    val orphan = java.nio.file.Paths.get(st, "gen-00000009-orphan")
+    java.nio.file.Files.createDirectories(orphan.resolve("out"))
     NearDedup.admitSubstringToState(docs.filter(col("doc_id") === 4L), st) // redelivery
-    assert(outRows(st) == outRows(twin), "mid-swap crash lost admitted state")
-    assert(!java.nio.file.Files.exists(stage), "recovered stage must be removed")
-
-    // orphan UNCOMMITTED stage + stray old dir beside a healthy live
-    // dir: recovery deletes both, state untouched
-    val orphan = java.nio.file.Paths.get(s"$st/compact-stage-owned-orphan")
-    java.nio.file.Files.createDirectories(orphan.resolve("data"))
-    val stray = java.nio.file.Paths.get(s"$st/compact-old-owned-stray")
-    java.nio.file.Files.createDirectories(stray)
+    assert(outRows(st) == outRows(twin), "an uncommitted generation leaked into the state")
     NearDedup.compactAdmissionState(spark, st)
-    assert(!java.nio.file.Files.exists(orphan) && !java.nio.file.Files.exists(stray),
-      "orphan stage / stray old dir must be cleaned")
+    assert(!java.nio.file.Files.exists(orphan), "the uncommitted generation must be collected")
     assert(outRows(st) == outRows(twin))
   }
 }
